@@ -238,9 +238,11 @@ object Main {
           }
 
       case Some("view") =>
-        val blocks = store.read(spark, "blocks")
-        val txs = store.read(spark, "transactions")
-        val transfers = store.read(spark, "token_transfers")
+        // lazy: building a frame lists every leaf of its table, so a
+        // lookup builds only the one it queries
+        lazy val blocks = store.read(spark, "blocks")
+        lazy val txs = store.read(spark, "transactions")
+        lazy val transfers = store.read(spark, "token_transfers")
         args.lift(1) match {
           case Some("block") =>
             // height-keyed lookups go through the stat-pruned read: only

@@ -1222,11 +1222,6 @@ object SimilarityOps {
           s"the $model's $expected")
   }
 
-  /** Subspace width recorded in an at-rest codebook (every centroid has
-    * it — one row read). */
-  def pqDsubOf(codebook: DataFrame): Int =
-    codebook.select(size(col("centroid"))).head().getInt(0)
-
   /** Codes per subspace recorded in a codebook — max code + 1 (codes
     * are dense 0..c−1 for every sub by construction: the trainer seeds
     * all subs from the same ≤[[PqCodes]] row sample and empty cells

@@ -6,6 +6,7 @@ import java.util.UUID
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import scala.jdk.CollectionConverters._
 
@@ -17,7 +18,9 @@ import scala.jdk.CollectionConverters._
   *
   *  - data lands in per-block-range-bucket leaf directories
   *    (`bucket = number / bucketSize`), uniquely named per write;
-  *  - a snapshot file lists every live (table, bucket, dir) triple;
+  *  - a snapshot file lists every live (table, bucket, dir) triple,
+  *    with per-leaf footer stats and each table's schema, so a read
+  *    needs no file opened to prune leaves or resolve its columns;
   *  - `_current` is swapped by atomic rename — one commit covers all
   *    tables, so a reader never observes a block without its transactions;
   *  - readers resolve `_current` once per query → snapshot isolation;
@@ -82,64 +85,81 @@ final class GraftStore(val root: String, val bucketSize: Long = 10000L,
   Files.createDirectories(rootPath)
 
   private val MetaPrefix = "#meta\t"
+  private val StatsPrefix = "#stats\t"
+  private val SchemaPrefix = "#schema\t"
 
-  private def snapshotLines(): Seq[String] =
-    currentSnapshot() match {
-      case None => Nil
-      case Some(name) =>
-        Files.readAllLines(rootPath.resolve(name), StandardCharsets.UTF_8)
-          .asScala.toSeq.filter(_.nonEmpty)
-    }
+  /** One parsed snapshot file: its live leaves plus the `#meta`,
+    * `#stats` and `#schema` lines committed with them (`schemas` maps a
+    * physical table to its StructType JSON). A read parses the snapshot
+    * it reads from once, so leaves, stats and schema always come from
+    * the same version. */
+  private final case class Manifest(leaves: Seq[Leaf],
+      meta: Map[String, String], stats: Map[String, LeafStats],
+      schemas: Map[String, String]) {
+    def schemaOf(phys: String): Option[StructType] =
+      schemas.get(phys).map(DataType.fromJson(_).asInstanceOf[StructType])
+  }
 
-  def currentLeaves(): Seq[Leaf] =
-    snapshotLines().filterNot(_.startsWith("#")).map { l =>
-      val Array(t, b, d) = l.split("\t", 3)
-      Leaf(t, b.toLong, d)
-    }
+  private def parseManifest(lines: Seq[String]): Manifest = {
+    val (tagged, plain) =
+      lines.filter(_.nonEmpty).partition(_.startsWith("#"))
+    def tabbed(prefix: String, n: Int): Seq[Array[String]] =
+      tagged.filter(_.startsWith(prefix)).map(_.split("\t", n))
+    Manifest(
+      plain.map { l =>
+        val Array(t, b, d) = l.split("\t", 3)
+        Leaf(t, b.toLong, d)
+      },
+      tabbed(MetaPrefix, 3).map(p => p(1) -> p(2)).toMap,
+      // "#stats\tdir\trows\tmin\tmax" — min/max empty for keyed tables
+      tabbed(StatsPrefix, -1).map(p => p(1) -> LeafStats(p(2).toLong,
+        if (p(3).isEmpty) None else Some(p(3).toLong),
+        if (p(4).isEmpty) None else Some(p(4).toLong))).toMap,
+      tabbed(SchemaPrefix, 3).map(p => p(1) -> p(2)).toMap)
+  }
+
+  private def readManifest(snapshot: String): Manifest =
+    parseManifest(Files.readAllLines(rootPath.resolve(snapshot),
+      StandardCharsets.UTF_8).asScala.toSeq)
+
+  private def currentManifest(): Manifest =
+    currentSnapshot().fold(Manifest(Nil, Map.empty, Map.empty, Map.empty))(
+      readManifest)
+
+  private def manifestAt(snapshot: String): Manifest = {
+    require(Files.exists(rootPath.resolve(snapshot)),
+      s"snapshot $snapshot not found (vacuumed?)")
+    readManifest(snapshot)
+  }
+
+  def currentLeaves(): Seq[Leaf] = currentManifest().leaves
 
   /** Snapshot-scoped key/value metadata, committed atomically WITH the
     * leaves — e.g. the ingest tip height ([[graft.etl.Backfill]] key
     * `tip`): readers get an O(1) resume cursor / maturity watermark that
     * can never run ahead of or behind the data it describes. Keys are
     * namespaced by [[tablesPrefix]] like tables. */
-  def currentMeta(): Map[String, String] =
-    snapshotLines().filter(_.startsWith(MetaPrefix)).map { l =>
-      val Array(_, k, v) = l.split("\t", 3)
-      k -> v
-    }.toMap
+  def currentMeta(): Map[String, String] = currentManifest().meta
 
   def metaKey(key: String): String =
     if (tablesPrefix.isEmpty) key else s"${tablesPrefix}_$key"
-
-  private val StatsPrefix = "#stats\t"
 
   /** Leaf statistics of the CURRENT snapshot, keyed by leaf dir. Absent
     * entries (legacy snapshots, leaves staged by a different process)
     * mean "no information" — every consumer must treat a missing entry
     * as "keep the leaf". */
-  def currentStats(): Map[String, LeafStats] = parseStats(snapshotLines())
+  def currentStats(): Map[String, LeafStats] = currentManifest().stats
 
   /** Leaf statistics as of an explicit snapshot file. */
-  def statsAt(snapshot: String): Map[String, LeafStats] = {
-    val f = rootPath.resolve(snapshot)
-    require(Files.exists(f), s"snapshot $snapshot not found (vacuumed?)")
-    parseStats(Files.readAllLines(f, StandardCharsets.UTF_8).asScala.toSeq)
-  }
+  def statsAt(snapshot: String): Map[String, LeafStats] =
+    manifestAt(snapshot).stats
 
-  private def parseStats(lines: Seq[String]): Map[String, LeafStats] =
-    lines.filter(_.startsWith(StatsPrefix)).map { l =>
-      // "#stats\tdir\trows\tmin\tmax" — min/max empty for keyed tables
-      val p = l.split("\t", -1)
-      p(1) -> LeafStats(p(2).toLong,
-        if (p(3).isEmpty) None else Some(p(3).toLong),
-        if (p(4).isEmpty) None else Some(p(4).toLong))
-    }.toMap
-
-  /** Footer stats for leaves THIS instance staged but has not yet
-    * committed — moved into the snapshot manifest by [[commit]]. Keyed
-    * by dir; dirs are unique per write, so entries never collide. */
-  private val pendingStats =
-    new java.util.concurrent.ConcurrentHashMap[String, LeafStats]()
+  /** Footer stats and data schema of leaves THIS instance staged but has
+    * not yet committed — moved into the snapshot manifest by [[commit]].
+    * Keyed by dir; dirs are unique per write, so entries never collide. */
+  private final case class Staged(stats: LeafStats, schema: StructType)
+  private val pending =
+    new java.util.concurrent.ConcurrentHashMap[String, Staged]()
 
   /** Next snapshot sequence number: one past the highest sequence any
     * existing snapshot file carries. The counter is PERSISTED in the file
@@ -187,16 +207,18 @@ final class GraftStore(val root: String, val bucketSize: Long = 10000L,
       StandardCharsets.UTF_8).trim)
 
   private def publish(leaves: Seq[Leaf], meta: Map[String, String],
-      stats: Map[String, LeafStats]): Unit = {
+      stats: Map[String, LeafStats], schemas: Map[String, String]): Unit = {
     // zero-padded so lexical order == numeric order for fresh stores
     val name = f"snapshot-${nextSeq()}%020d-" +
       s"${UUID.randomUUID().toString.take(8)}.txt"
     val metaLines = meta.toSeq.sorted.map { case (k, v) => s"$MetaPrefix$k\t$v" }
+    val schemaLines = schemas.toSeq.sorted.map { case (t, json) =>
+      s"$SchemaPrefix$t\t$json" }
     val sorted = leaves.sortBy(l => (l.table, l.bucket, l.dir))
     val statLines = sorted.flatMap(l => stats.get(l.dir).map(s =>
       s"$StatsPrefix${l.dir}\t${s.rows}\t${s.minH.getOrElse("")}\t" +
         s"${s.maxH.getOrElse("")}"))
-    val body = (metaLines ++ statLines ++
+    val body = (metaLines ++ schemaLines ++ statLines ++
       sorted.map(l => s"${l.table}\t${l.bucket}\t${l.dir}")).mkString("\n")
     // The snapshot body goes through its own tmp-then-atomic-move: a
     // crash mid-write must never leave a TORN file under the snapshot-*
@@ -288,6 +310,10 @@ final class GraftStore(val root: String, val bucketSize: Long = 10000L,
       writeOptions: Map[String, String]): Seq[Leaf] = {
     val seg = s"${physName(table)}/seg-" +
       s"${System.nanoTime()}-${UUID.randomUUID().toString.take(8)}"
+    // the data schema a parquet read of these leaves returns: partition
+    // columns live only in the directory names, and reads are nullable
+    val schema = StructType(
+      withParts.schema.filterNot(f => partCols.contains(f.name))).toNullable
     val staged = withParts
       .sortWithinPartitions(partCols.map(col) ++ sortCols: _*)
     staged.write.mode(SaveMode.ErrorIfExists).options(writeOptions)
@@ -310,20 +336,23 @@ final class GraftStore(val root: String, val bucketSize: Long = 10000L,
     // deployment reads footers over an object store where each open is
     // a network round-trip (~tens of ms) — sequential would put
     // minutes of driver latency inside every commit there. Each task
-    // touches a distinct leaf dir and pendingStats is concurrent, so
-    // the only shared state is already thread-safe.
+    // touches a distinct leaf dir and `pending` is concurrent, so
+    // the only shared state is already thread-safe. One Hadoop conf
+    // serves every footer of the stage.
     val hc = heightCol.get(table)
+    val conf = new org.apache.hadoop.conf.Configuration(
+      withParts.sparkSession.sparkContext.hadoopConfiguration)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.max(1, math.min(leaves.size, 16)))
     try {
       leaves.map(l => l -> pool.submit(
         new java.util.concurrent.Callable[LeafStats] {
           override def call(): LeafStats =
-            footerStats(rootPath.resolve(l.dir), hc)
+            footerStats(rootPath.resolve(l.dir), hc, conf)
         }))
         .foreach { case (l, f) =>
-          pendingStats.put(l.dir,
-            try f.get()
+          pending.put(l.dir,
+            try Staged(f.get(), schema)
             catch {
               // keep commit's exception surface identical to the old
               // sequential path (throw the cause, not the pool's
@@ -344,20 +373,14 @@ final class GraftStore(val root: String, val bucketSize: Long = 10000L,
     * either column statistics or provably-all-null rows (a null height
     * can never match a height predicate, so all-null groups don't widen
     * the range) — a partial range would prune rows it doesn't cover. */
-  private def footerStats(dir: Path, field: Option[String]): LeafStats = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val conf = new org.apache.hadoop.conf.Configuration()
-    def files(p: Path): Seq[Path] =
-      if (Files.isDirectory(p)) listDir(p).flatMap(files)
-      else if (p.getFileName.toString.endsWith(".parquet")) Seq(p) else Nil
+  private def footerStats(dir: Path, field: Option[String],
+      conf: org.apache.hadoop.conf.Configuration): LeafStats = {
     var rows = 0L
     var mn = Option.empty[Long]
     var mx = Option.empty[Long]
     var complete = true
-    files(dir).foreach { f =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(f.toUri), conf))
+    parquetFiles(dir).foreach { f =>
+      val r = openFooter(f, conf)
       try r.getFooter.getBlocks.asScala.foreach { b =>
         rows += b.getRowCount
         field.foreach { hc =>
@@ -382,6 +405,28 @@ final class GraftStore(val root: String, val bucketSize: Long = 10000L,
     else LeafStats(rows, None, None)
   }
 
+  private def parquetFiles(p: Path): Seq[Path] =
+    if (Files.isDirectory(p)) listDir(p).flatMap(parquetFiles)
+    else if (p.getFileName.toString.endsWith(".parquet")) Seq(p) else Nil
+
+  private def openFooter(f: Path, conf: org.apache.hadoop.conf.Configuration)
+      : org.apache.parquet.hadoop.ParquetFileReader =
+    org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.toUri), conf))
+
+  /** The data schema Spark recorded in the footer of `leaf`'s first
+    * parquet file — what a parquet read of the leaf infers, taken with a
+    * metadata read and no Spark job. None when the leaf has no file or
+    * its writer recorded no Spark schema. */
+  private def footerSchema(leaf: Leaf): Option[StructType] =
+    parquetFiles(rootPath.resolve(leaf.dir)).headOption.flatMap { f =>
+      val r = openFooter(f, new org.apache.hadoop.conf.Configuration())
+      try Option(r.getFooter.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata"))
+      finally r.close()
+    }.map(DataType.fromJson(_).asInstanceOf[StructType].toNullable)
+
   /** One atomic commit across tables; `meta` entries merge into (and
     * override) the snapshot metadata in the same atomic swap.
     *
@@ -390,7 +435,9 @@ final class GraftStore(val root: String, val bucketSize: Long = 10000L,
     * (e.g. a compaction racing a reorg rollback) would otherwise silently
     * resurrect rows another commit deleted, or lose rows a concurrent
     * append added to a leaf it never read. Such a commit throws
-    * [[GraftStore.StaleSnapshotException]] — retry from a fresh snapshot. */
+    * [[GraftStore.StaleSnapshotException]] — retry from a fresh snapshot.
+    * A commit that would leave a table with leaves of differing schemas
+    * throws IllegalArgumentException (see [[schemasAfter]]). */
   def commit(adds: Seq[Leaf], drops: Seq[Leaf] = Nil,
       meta: Map[String, String] = Map.empty): Unit =
     // The read-modify-write of `_current` must be exclusive across EVERY
@@ -404,8 +451,8 @@ final class GraftStore(val root: String, val bucketSize: Long = 10000L,
     // object store there is no lock primitive, which is why lakehouse
     // formats put this compare-and-swap in a catalog service at scale).
     withCommitLock {
-      val live = currentLeaves()
-      val liveDirs = live.map(_.dir).toSet
+      val m = currentManifest()
+      val liveDirs = m.leaves.map(_.dir).toSet
       val stale = drops.filterNot(l => liveDirs.contains(l.dir))
       if (stale.nonEmpty)
         throw new GraftStore.StaleSnapshotException(
@@ -427,16 +474,62 @@ final class GraftStore(val root: String, val bucketSize: Long = 10000L,
             "grace window reclaimed them mid-stage; re-stage and retry " +
             "(and raise vacuum graceMs above stage-to-commit latency)")
       val dropSet = drops.map(_.dir).toSet
+      val kept = m.leaves.filterNot(l => dropSet.contains(l.dir))
       // stats: retained leaves keep their published entries; adds bring
       // the footer stats writeLeaves collected at stage time (absent when
       // a DIFFERENT process staged them — readers then just keep the leaf)
-      val addStats = adds.flatMap(l =>
-        Option(pendingStats.get(l.dir)).map(l.dir -> _)).toMap
-      publish(live.filterNot(l => dropSet.contains(l.dir)) ++ adds,
-        currentMeta() ++ meta.map { case (k, v) => metaKey(k) -> v },
-        currentStats() ++ addStats)
-      adds.foreach(l => pendingStats.remove(l.dir))
+      val staged = adds.flatMap(l =>
+        Option(pending.get(l.dir)).map(l.dir -> _)).toMap
+      publish(kept ++ adds,
+        m.meta ++ meta.map { case (k, v) => metaKey(k) -> v },
+        m.stats ++ staged.map { case (d, st) => d -> st.stats },
+        schemasAfter(m, kept, adds, staged))
+      adds.foreach(l => pending.remove(l.dir))
     }
+
+  /** `#schema` lines of the snapshot a commit publishes: one per table
+    * with live leaves. A table that keeps leaves keeps its recorded
+    * line; a table rewritten whole takes its adds' staged schema; a
+    * table left without live leaves loses its line. Where no line was
+    * recorded (a store written before the lines existed) or an add was
+    * staged by a different process, the schema Spark wrote into one
+    * leaf's parquet footer stands in, so an upgraded store regains the
+    * lines of all its tables at its next commit. No line is
+    * written while any leaf's schema stays unknown; reads of that table
+    * infer the schema from the files.
+    *
+    * Throws when the schemas of the table's kept and added leaves
+    * differ: a mixed-schema table would otherwise be read with one
+    * arbitrary file's schema. Parquet reads resolve columns by name and
+    * every schema here is nullable, so neither column order nor
+    * nullability counts as a difference. */
+  private def schemasAfter(m: Manifest, kept: Seq[Leaf], adds: Seq[Leaf],
+      staged: Map[String, Staged]): Map[String, String] = {
+    val keptBy = kept.groupBy(_.table)
+    val addsBy = adds.groupBy(_.table)
+    def columns(s: StructType) = s.fields.map(f => f.name -> f.dataType).toMap
+    (keptBy.keySet ++ addsBy.keySet).toSeq.flatMap { t =>
+      if (!addsBy.contains(t) && m.schemas.contains(t))
+        Some(t -> m.schemas(t)) // only keeps leaves: carried forward
+      else {
+        val keptSchema = keptBy.get(t).map(ls =>
+          m.schemaOf(t).orElse(footerSchema(ls.head)))
+        val addSchemas = addsBy.getOrElse(t, Nil).map(l =>
+          staged.get(l.dir).map(_.schema).orElse(footerSchema(l)))
+        val all = keptSchema.toSeq ++ addSchemas
+        val known = all.flatten
+        known.find(s => columns(s) != columns(known.head)).foreach { s =>
+          throw new IllegalArgumentException(s"commit leaves table '$t' " +
+            s"with leaves of schema ${known.head.simpleString} and of " +
+            s"${s.simpleString}; a schema change must replace every leaf " +
+            "of the table in one commit")
+        }
+        if (known.nonEmpty && all.forall(_.isDefined))
+          Some(t -> known.head.json)
+        else None
+      }
+    }.toMap
+  }
 
   /** JVM lock + `_commitlock` OS file lock around `body` — the exclusion
     * every read-modify-write of `_current` needs (commit AND vacuum: a
@@ -465,20 +558,14 @@ final class GraftStore(val root: String, val bucketSize: Long = 10000L,
     * writes a NEW snapshot file and leaves are immutable, so any snapshot
     * name from [[snapshots]] replays that exact version until [[vacuum]]
     * reclaims it. */
-  def leavesAt(snapshot: String): Seq[Leaf] = {
-    val f = rootPath.resolve(snapshot)
-    require(Files.exists(f), s"snapshot $snapshot not found (vacuumed?)")
-    Files.readAllLines(f, StandardCharsets.UTF_8).asScala.toSeq
-      .filter(l => l.nonEmpty && !l.startsWith("#"))
-      .map { l =>
-        val Array(t, b, d) = l.split("\t", 3)
-        Leaf(t, b.toLong, d)
-      }
-  }
+  def leavesAt(snapshot: String): Seq[Leaf] = manifestAt(snapshot).leaves
 
   /** Snapshot-pinned read of `table` at a historic version. */
-  def readAt(spark: SparkSession, table: String, snapshot: String): DataFrame =
-    readLeaves(spark, table, leavesAt(snapshot))
+  def readAt(spark: SparkSession, table: String,
+      snapshot: String): DataFrame = {
+    val m = manifestAt(snapshot)
+    readFrom(spark, table, m, m.leaves)
+  }
 
   /** Manifest diff between two committed versions: (added, removed)
     * leaves across every table in the root. Leaf dirs are immutable and
@@ -487,9 +574,10 @@ final class GraftStore(val root: String, val bucketSize: Long = 10000L,
     * writers produced them — the physical change set an incremental
     * consumer starts from, O(manifest) driver-side work with no file
     * ever opened. */
-  def leavesDiff(from: String, to: String): (Seq[Leaf], Seq[Leaf]) = {
-    val a = leavesAt(from)
-    val b = leavesAt(to)
+  def leavesDiff(from: String, to: String): (Seq[Leaf], Seq[Leaf]) =
+    diff(leavesAt(from), leavesAt(to))
+
+  private def diff(a: Seq[Leaf], b: Seq[Leaf]): (Seq[Leaf], Seq[Leaf]) = {
     val aDirs = a.map(_.dir).toSet
     val bDirs = b.map(_.dir).toSet
     (b.filterNot(l => aDirs.contains(l.dir)),
@@ -520,17 +608,18 @@ final class GraftStore(val root: String, val bucketSize: Long = 10000L,
     * for reorg/retention handling. */
   def readNewRows(spark: SparkSession, table: String, from: String,
       to: String, keyCols: Seq[String]): DataFrame = {
-    val added = leavesAddedBetween(table, from, to)
+    val (mFrom, mTo) = (manifestAt(from), manifestAt(to))
+    val added = diff(mFrom.leaves, mTo.leaves)._1
+      .filter(_.table == physName(table))
     if (added.isEmpty)
-      return readLeaves(spark, table,
-        leavesAt(to).filter(_.table == physName(table))).limit(0)
-    val addedRows = readLeaves(spark, table, added)
+      return readFrom(spark, table, mTo, mTo.leaves).limit(0)
+    val addedRows = readFrom(spark, table, mTo, added)
     val buckets = added.map(_.bucket).toSet
-    val oldSame = leavesAt(from).filter(l =>
+    val oldSame = mFrom.leaves.filter(l =>
       l.table == physName(table) && buckets.contains(l.bucket))
     if (oldSame.isEmpty) addedRows
     else addedRows.join(
-      readLeaves(spark, table, oldSame).select(keyCols.map(col): _*),
+      readFrom(spark, table, mFrom, oldSame).select(keyCols.map(col): _*),
       keyCols, "left_anti")
   }
 
@@ -656,10 +745,10 @@ final class GraftStore(val root: String, val bucketSize: Long = 10000L,
   /** Snapshot-isolated read; `bucketPred` prunes leaves before Spark ever
     * lists a file (the manifest-level analogue of partition pruning). */
   def read(spark: SparkSession, table: String,
-      bucketPred: Long => Boolean = _ => true): DataFrame =
-    readLeaves(spark, table,
-      currentLeaves().filter(l =>
-        l.table == physName(table) && bucketPred(l.bucket)))
+      bucketPred: Long => Boolean = _ => true): DataFrame = {
+    val m = currentManifest()
+    readFrom(spark, table, m, m.leaves.filter(l => bucketPred(l.bucket)))
+  }
 
   /** Read `table` from an explicit leaf list the CALLER snapshotted (extra
     * leaves of other tables are ignored). The building block for
@@ -668,17 +757,40 @@ final class GraftStore(val root: String, val bucketSize: Long = 10000L,
     * ([[graft.etl.Export.compact]]), and a multi-table export serves every
     * table from the same snapshot ([[JdbcSink.export]]) — where chaining
     * [[read]] calls would re-resolve `_current` each time and interleave
-    * with concurrent commits. */
+    * with concurrent commits.
+    *
+    * The schema comes from the current manifest, which records it for
+    * exactly its live leaves: a leaf list it no longer covers entirely
+    * (dropped since the caller listed it, or staged and not committed)
+    * is read with an inferred schema instead. */
   def readLeaves(spark: SparkSession, table: String,
+      leaves: Seq[Leaf]): DataFrame = {
+    val m = currentManifest()
+    val live = m.leaves.map(_.dir).toSet
+    val mine = leaves.filter(_.table == physName(table))
+    readFrom(spark, table,
+      if (mine.forall(l => live.contains(l.dir))) m
+      else m.copy(schemas = Map.empty),
+      mine)
+  }
+
+  /** Read the leaves of `table` among `leaves` with the schema `m`
+    * records for the table — no schema-inference job — or, when `m` has
+    * no `#schema` line for it (a legacy store), with the schema Spark
+    * infers from the files. Leaves are plain parquet (all real columns in
+    * the data files); recursiveFileLookup disables k=v discovery, so
+    * heterogeneous leaf sets from different segments read uniformly.
+    * Pruning happens at the manifest level above. */
+  private def readFrom(spark: SparkSession, table: String, m: Manifest,
       leaves: Seq[Leaf]): DataFrame = {
     val dirs = leaves.filter(_.table == physName(table))
       .map(l => s"$root/${l.dir}")
-    // Leaves are plain parquet (all real columns in the data files);
-    // recursiveFileLookup disables k=v discovery, so heterogeneous leaf
-    // sets from different segments read uniformly. Pruning happens at the
-    // manifest level above.
     if (dirs.isEmpty) emptyLike(spark, table)
-    else spark.read.option("recursiveFileLookup", "true").parquet(dirs: _*)
+    else {
+      val reader = spark.read.option("recursiveFileLookup", "true")
+      m.schemaOf(physName(table)).fold(reader)(reader.schema)
+        .parquet(dirs: _*)
+    }
   }
 
   def leavesAtOrAbove(height: Long): Long => Boolean =
@@ -692,23 +804,27 @@ final class GraftStore(val root: String, val bucketSize: Long = 10000L,
     * takes a point/range lookup from O(commits since compaction) files to
     * O(overlapping leaves) — without opening a single file to decide.
     * Leaves without stats (legacy snapshots, foreign stagers) are kept. */
-  def leavesForHeights(table: String, lo: Long, hi: Long): Seq[Leaf] = {
-    val stats = currentStats()
-    currentLeaves().filter { l =>
+  def leavesForHeights(table: String, lo: Long, hi: Long): Seq[Leaf] =
+    heightLeaves(currentManifest(), table, lo, hi)
+
+  private def heightLeaves(m: Manifest, table: String, lo: Long,
+      hi: Long): Seq[Leaf] =
+    m.leaves.filter { l =>
       l.table == physName(table) &&
         l.bucket >= lo / bucketSize && l.bucket <= hi / bucketSize &&
-        stats.get(l.dir).forall(s =>
+        m.stats.get(l.dir).forall(s =>
           s.minH.forall(_ <= hi) && s.maxH.forall(_ >= lo))
     }
-  }
 
   /** Snapshot-isolated read of `table` pruned to the leaves whose height
     * range overlaps [lo, hi] — the point-lookup / range-scan entry the
     * view and tail control paths use. Callers still apply their own row
     * filter; this only bounds which files are listed. */
   def readHeightRange(spark: SparkSession, table: String, lo: Long,
-      hi: Long): DataFrame =
-    readLeaves(spark, table, leavesForHeights(table, lo, hi))
+      hi: Long): DataFrame = {
+    val m = currentManifest()
+    readFrom(spark, table, m, heightLeaves(m, table, lo, hi))
+  }
 
   private def emptyLike(spark: SparkSession, table: String): DataFrame = {
     import graft.chain.{Block, TokenTransfer, Transaction}

@@ -2,7 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.store.GraftStore
+import graft.store.{GraftStore, IndexStore}
+import org.apache.spark.GraftTestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
@@ -30,6 +32,161 @@ class StoreSpec extends AnyFunSuite with BeforeAndAfterAll
       df: DataFrame): Unit =
     store.commit(store.stageKeyed(table, df, pmod(col("k"), lit(4L)),
       Seq(col("k"))))
+
+  /** `body`'s result and the number of Spark jobs it ran. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    GraftTestBus.drain(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      GraftTestBus.drain(sc)
+      (r, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** A store holding a backfilled 40-block fixture chain. */
+  private def chainStore(name: String): GraftStore = {
+    val store = new GraftStore(tempDir(name))
+    graft.etl.Backfill.run(spark, new graft.etl.FixtureSource(
+      graft.chain.ChainFixture.build(40)), store, 0, 39)
+    store
+  }
+
+  /** Rewrite the current snapshot file without its `#schema` lines — the
+    * manifest a store written before they existed carries. */
+  private def stripSchemaLines(store: GraftStore): Unit = {
+    import scala.jdk.CollectionConverters._
+    val snap = Paths.get(store.root).resolve(store.currentSnapshot().get)
+    Files.write(snap, Files.readAllLines(snap).asScala
+      .filterNot(_.startsWith("#schema")).asJava)
+  }
+
+  private def inferred(store: GraftStore, table: String) =
+    spark.read.option("recursiveFileLookup", "true")
+      .parquet(store.leavesOf(table).map(l => s"${store.root}/${l.dir}"): _*)
+
+  test("manifest #schema lines: every chain table and a keyed index " +
+      "table read with exactly the schema inference would return") {
+    import spark.implicits._
+    val store = chainStore("graft-store-schema")
+    IndexStore.build(store, "span", (0L until 20L)
+      .map(i => (i, (0 until 40).map(j => s"d${i}w$j").mkString(" ")))
+      .toDF("doc_id", "text"))
+    val snap = Paths.get(store.root).resolve(store.currentSnapshot().get)
+    val lines = Files.readAllLines(snap).toArray.map(_.toString)
+    (store.Tables :+ IndexStore.tableOf("span")).foreach { t =>
+      assert(store.leavesOf(t).nonEmpty, s"no $t leaves")
+      assert(lines.count(_.startsWith(s"#schema\t$t\t")) == 1,
+        s"no #schema line for $t")
+      assert(store.readLeaves(spark, t, store.leavesOf(t)).schema ==
+        inferred(store, t).schema, s"$t schema differs from inference")
+    }
+  }
+
+  test("a height-pruned read builds its frame without a Spark job and a " +
+      "point lookup runs exactly one; a schema-less manifest infers") {
+    val store = chainStore("graft-store-schema-jobs")
+    val (df, built) =
+      jobsOf(store.readHeightRange(spark, "blocks", 17L, 17L))
+    assert(built == 0, s"building the frame ran $built job(s)")
+    val (rows, ran) =
+      jobsOf(graft.chain.ChainOps.blockByNumber(df, 17L).collect())
+    assert(ran == 1, s"the lookup ran $ran job(s)")
+    assert(rows.map(_.getAs[Long]("number")).toSeq == Seq(17L))
+    // the same read over a legacy manifest pays the inference job
+    stripSchemaLines(store)
+    val (_, legacyBuilt) =
+      jobsOf(store.readHeightRange(spark, "blocks", 17L, 17L))
+    assert(legacyBuilt >= 1, "a schema-less read ran no inference job")
+  }
+
+  test("a legacy manifest without #schema lines reads correctly and " +
+      "regains them from leaf footers at its next commit") {
+    val store = chainStore("graft-store-schema-legacy")
+    def snapshotOf(t: String) = store.read(spark, t).collect()
+      .map(_.toSeq).toSet
+    val before = store.Tables.map(t => t -> snapshotOf(t)).toMap
+    val schemas = store.Tables.map(t =>
+      t -> store.read(spark, t).schema).toMap
+    stripSchemaLines(store)
+    val legacy = new GraftStore(store.root)
+    store.Tables.foreach { t =>
+      assert(legacy.read(spark, t).schema == schemas(t), s"$t schema")
+      assert(legacy.read(spark, t).collect().map(_.toSeq).toSet ==
+        before(t), s"$t rows")
+    }
+    def schemaLines() = Files.readAllLines(Paths.get(legacy.root)
+      .resolve(legacy.currentSnapshot().get)).toArray.map(_.toString)
+      .filter(_.startsWith("#schema")).toSeq
+    // an append keeps leaves nothing recorded a schema for: the commit
+    // takes each table's schema from one kept leaf's footer
+    legacy.commit(legacy.stage("blocks",
+      legacy.readHeightRange(spark, "blocks", 39L, 39L)
+        .filter(col("number") === 39L)))
+    assert(schemaLines().map(_.split("\t")(1)) == store.Tables.sorted)
+    store.Tables.foreach { t =>
+      val (df, built) = jobsOf(legacy.read(spark, t))
+      assert(built == 0, s"$t: building the frame ran $built job(s)")
+      assert(df.schema == schemas(t), s"$t schema")
+      assert(df.schema == inferred(legacy, t).schema, s"$t inferred")
+    }
+    assert(legacy.read(spark, "blocks").count() == 41L)
+  }
+
+  test("a commit mixing schemas within a table fails loudly; a " +
+      "nullability-only difference and a whole-table rewrite commit") {
+    val root = tempDir("graft-store-schema-mixed")
+    val store = new GraftStore(root)
+    commitKeyed(store, "t", rows(1L, 2L)) // (k bigint, v string)
+    val bucket = pmod(col("k"), lit(4L))
+    val widened = rows(3L).withColumn("w", lit(1))
+    val staged = store.stageKeyed("t", widened, bucket, Seq(col("k")))
+    val before = store.currentSnapshot()
+    val err = intercept[IllegalArgumentException](store.commit(staged))
+    assert(err.getMessage.contains("'t'"), err.getMessage)
+    assert(store.currentSnapshot() == before, "the failed commit published")
+    // two adds of one table disagreeing with each other fail the same way
+    intercept[IllegalArgumentException](store.commit(staged ++
+      store.stageKeyed("t", rows(4L), bucket, Seq(col("k"))),
+      drops = store.leavesOf("t")))
+    // k is non-nullable in `rows`; a nullable k is the same schema
+    commitKeyed(store, "t", rows(5L).withColumn("k",
+      when(col("k").isNotNull, col("k"))))
+    // replacing every leaf of the table may change its schema
+    store.commit(staged, drops = store.leavesOf("t"))
+    val now = store.read(spark, "t")
+    assert(now.columns.toSeq == Seq("k", "v", "w"))
+    assert(now.select("k").collect().map(_.getLong(0)).toSeq == Seq(3L))
+  }
+
+  test("appends whose columns come in another order commit and read " +
+      "with the recorded order") {
+    import spark.implicits._
+    val store = new GraftStore(tempDir("graft-store-schema-order"))
+    commitKeyed(store, "t", rows(1L, 2L))
+    commitKeyed(store, "t", rows(3L).select("v", "k"))
+    val t = store.read(spark, "t")
+    assert(t.columns.toSeq == Seq("k", "v"))
+    assert(t.select("k").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
+    // an index whose attribute columns an append lists in another order
+    def vecs(ids: Range) = ids.map(i => (i.toLong,
+      Seq(1f, i.toFloat, 0.5f), s"l${i % 2}", s"s${i % 3}"))
+      .toDF("vec_id", "embedding", "label", "source")
+    IndexStore.build(store, "vec", vecs(0 until 6))
+    IndexStore.append(store, "vec", vecs(6 until 9)
+      .select("vec_id", "embedding", "source", "label"))
+    val idx = IndexStore.read(store, spark, "vec")
+    assert(idx.count() == 9L)
+    assert(idx.filter(col("vec_id") === 7L)
+      .select("label", "source").as[(String, String)].collect().toSeq ==
+      Seq(("l1", "s1")))
+  }
 
   test("concurrent commits from separate instances all survive") {
     val root = tempDir("graft-store-conc")

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 
 import graft.chain.ChainFixture
 import graft.etl.{RpcCodec, WsHeads}
@@ -20,7 +21,15 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - subscribe → ack → pushed notifications arrive in order;
   *  - the streaming heads source in push mode (`wsUrl` arrival signal
   *    + `apiUrl` data plane) collects every fixture head;
-  *  - connect retry against a server that refuses first connections.
+  *  - connect retry against a server that refuses first connections;
+  *  - a connection dropped right after its pushes, and one that goes
+  *    silent without closing, both reconnect and resubscribe with no
+  *    pushed head lost.
+  *
+  * The specs wait on what the server has done — a latch it opens once a
+  * connection's ack and pushes are on the wire — not on wall-clock
+  * budgets; the client then drains with blocking polls that return as
+  * soon as a header lands, and a deadline only bounds a failing run.
   */
 class WsHeadsSpec extends AnyFunSuite with BeforeAndAfterAll
     with TempDirCleanup {
@@ -49,82 +58,126 @@ class WsHeadsSpec extends AnyFunSuite with BeforeAndAfterAll
 
   /** A pubsub node on the shared [[TinyWsServer]]: on `*_subscribe` it
     * acks with a subscription id and pushes that connection's headers
-    * (`pushByConnection` override, else `pushOnSubscribe`); connections
-    * in `dropConnections` are dropped abruptly right after pushing. */
-  private def subscribeServer(pushOnSubscribe: Seq[String],
+    * (`pushByConnection` override, else `pushOnSubscribe`); `served(i)`
+    * opens once connection i's ack and pushes are sent. A connection in
+    * `dropConnections` is dropped abruptly right after its pushes. One in
+    * `silentConnections` stays open but stops reading after its pushes,
+    * so it answers no ping — a peer gone without closing — until
+    * [[release]]. */
+  private final class PubsubNode(pushOnSubscribe: Seq[String],
       refuseFirst: Int = 0,
       pushByConnection: Map[Int, Seq[String]] = Map.empty,
-      dropConnections: Set[Int] = Set.empty): TinyWsServer =
-    new TinyWsServer((connIdx, text, send) => {
+      dropConnections: Set[Int] = Set.empty,
+      silentConnections: Set[Int] = Set.empty) {
+    private val latches = new ConcurrentHashMap[Int, CountDownLatch]()
+    private def served(conn: Int): CountDownLatch =
+      latches.computeIfAbsent(conn, _ => new CountDownLatch(1))
+    private val silence = new CountDownLatch(1)
+    val server: TinyWsServer = new TinyWsServer((connIdx, text, send) => {
       if (text.contains("_subscribe")) {
         send("""{"jsonrpc":"2.0","id":1,"result":"0xfeed01"}""")
         pushByConnection.getOrElse(connIdx, pushOnSubscribe).foreach(send)
+        served(connIdx).countDown()
+        if (silentConnections(connIdx)) silence.await(60, TimeUnit.SECONDS)
         !dropConnections(connIdx)
       } else true
     }, refuseFirst)
+    servers += server
+    def url: String = server.url
+    def wasServed(conn: Int): Boolean = served(conn).getCount == 0
+    def awaitServed(conn: Int): Unit =
+      assert(served(conn).await(60, TimeUnit.SECONDS),
+        s"connection $conn never subscribed")
+    def release(): Unit = silence.countDown()
+  }
+
+  /** Drain `ws` until `n` headers have arrived. */
+  private def pollUntil(ws: WsHeads, n: Int): Seq[JValue] = {
+    val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(60)
+    var got = Seq.empty[JValue]
+    while (got.size < n && System.nanoTime() < deadline)
+      got = got ++ ws.pollHeaders(waitMs = 1000)
+    got
+  }
+
+  private def numbers(hs: Seq[JValue]): Seq[Long] = hs.map(h =>
+    RpcCodec.hexToLong(h \ "number" match {
+      case JString(s) => s
+      case _ => ""
+    }))
 
   test("subscribe, ack, and pushed newHeads arrive in order") {
-    val srv = subscribeServer(fx.blocks.take(5).map(headerJson))
-    servers += srv
-    val ws = new WsHeads(srv.url)
+    val node = new PubsubNode(fx.blocks.take(5).map(headerJson))
+    val ws = new WsHeads(node.url)
     try {
-      val got = Iterator.continually(ws.pollHeaders(waitMs = 2000))
-        .take(10).flatten.take(5).toSeq
+      node.awaitServed(0)
+      val got = pollUntil(ws, 5)
       assert(got.size == 5, s"expected 5 pushed headers, got ${got.size}")
+      // the ack precedes the pushes on the wire
       assert(ws.subscription.contains("0xfeed01"))
-      assert(got.map(h => RpcCodec.hexToLong(
-        h \ "number" match { case JString(s) => s; case _ => "" })) ==
-        (0L until 5L))
+      assert(numbers(got) == (0L until 5L))
       assert(got.map(h => RpcCodec.unhexField(h \ "hash")) ==
         fx.blocks.take(5).map(_.hash))
     } finally ws.close()
   }
 
   test("connect retry survives refused connections") {
-    val srv = subscribeServer(Nil, refuseFirst = 2)
-    servers += srv
-    val ws = new WsHeads(srv.url, retryBackoffMs = 50L)
-    try assert(ws.pollHeaders(waitMs = 10) == Nil) // connected, no pushes
-    finally ws.close()
+    val node = new PubsubNode(Nil, refuseFirst = 2)
+    val ws = new WsHeads(node.url, retryBackoffMs = 50L)
+    try {
+      node.awaitServed(0) // the first handshake after two refusals
+      assert(ws.pollHeaders() == Nil) // connected, no pushes
+    } finally ws.close()
   }
 
   test("dropped connection: pollHeaders reconnects and resubscribes " +
       "instead of returning empty forever") {
     val headers = fx.blocks.take(5).map(headerJson)
-    val srv = subscribeServer(Nil,
+    val node = new PubsubNode(Nil,
       pushByConnection = Map(0 -> headers.take(3), 1 -> headers.drop(3)),
       dropConnections = Set(0))
-    servers += srv
-    val ws = new WsHeads(srv.url, retryBackoffMs = 50L)
+    val ws = new WsHeads(node.url, retryBackoffMs = 50L)
     try {
-      // connection 0 pushes heads 0-2 then drops the socket abruptly
-      val first = Iterator.continually(ws.pollHeaders(waitMs = 2000))
-        .take(10).flatten.take(3).toSeq
-      assert(first.size == 3, s"expected 3 heads before the drop")
-      // subsequent polls must notice the dead connection, reconnect and
-      // resubscribe (connection 1 pushes heads 3-4 on subscribe). The
-      // deadline is generous — the loop exits on success, so its only
-      // cost is on genuine failure — because a loaded box (parallel
-      // suites + external load) can starve the reconnect for seconds
-      // and a wall-clock flake here would misreport the retry logic
-      val deadline = System.currentTimeMillis() + 30000
-      var rest = Seq.empty[JValue]
-      while (rest.size < 2 && System.currentTimeMillis() < deadline)
-        rest = rest ++ ws.pollHeaders(waitMs = 500)
-      assert(rest.size == 2,
-        s"reconnect did not resubscribe: got ${rest.size} post-drop heads")
-      assert((first ++ rest).map(h => RpcCodec.hexToLong(
-        h \ "number" match { case JString(s) => s; case _ => "" })) ==
-        (0L until 5L))
+      // connection 0 pushes heads 0-2 then drops the socket abruptly,
+      // while the client may still be taking them in
+      node.awaitServed(0)
+      val first = pollUntil(ws, 3)
+      assert(numbers(first) == (0L until 3L),
+        s"heads pushed before the drop were lost: got ${numbers(first)}")
+      // later polls must notice the dead connection, reconnect and
+      // resubscribe: connection 1 pushes heads 3-4 on subscribe
+      val rest = pollUntil(ws, 2)
+      assert(node.wasServed(1), "pollHeaders never resubscribed")
+      assert(numbers(rest) == Seq(3L, 4L),
+        s"reconnect did not resubscribe: got ${numbers(rest)}")
     } finally ws.close()
+  }
+
+  test("silent connection: an unanswered liveness ping makes " +
+      "pollHeaders reconnect and resubscribe") {
+    val headers = fx.blocks.take(5).map(headerJson)
+    val node = new PubsubNode(Nil,
+      pushByConnection = Map(0 -> headers.take(3), 1 -> headers.drop(3)),
+      silentConnections = Set(0))
+    val ws = new WsHeads(node.url, retryBackoffMs = 50L, livenessMs = 200L)
+    try {
+      // connection 0 pushes heads 0-2, then neither reads nor closes
+      node.awaitServed(0)
+      assert(numbers(pollUntil(ws, 3)) == (0L until 3L))
+      // after 200 ms of silence a poll pings; with no reply in another
+      // 200 ms the next poll reconnects (connection 1 pushes heads 3-4)
+      val rest = pollUntil(ws, 2)
+      assert(node.wasServed(1), "pollHeaders never resubscribed")
+      assert(numbers(rest) == Seq(3L, 4L),
+        s"reconnect did not resubscribe: got ${numbers(rest)}")
+    } finally { ws.close(); node.release() }
   }
 
   test("heads stream in push mode: WS arrival signal + HTTP data plane " +
       "deliver every fixture head") {
     // WS server pushes all 40 headers on subscribe; the HTTP server
     // (same wire codec as RpcSourceSpec's) serves the header fetches
-    val wsSrv = subscribeServer(fx.blocks.map(headerJson))
-    servers += wsSrv
+    val wsNode = new PubsubNode(fx.blocks.map(headerJson))
     val http = com.sun.net.httpserver.HttpServer.create(
       new java.net.InetSocketAddress("127.0.0.1", 0), 0)
     http.createContext("/", { exchange =>
@@ -152,20 +205,22 @@ class WsHeadsSpec extends AnyFunSuite with BeforeAndAfterAll
         .format("graft.sources.ChainHeadsProvider")
         .option("numBlocks", "40")
         .option("blocksPerBatch", "15")
-        .option("wsUrl", wsSrv.url)
+        .option("wsUrl", wsNode.url)
         .option("apiUrl", s"http://127.0.0.1:${http.getAddress.getPort}/")
         .load()
         .writeStream.format("memory").queryName("ws_heads")
         .option("checkpointLocation", tempDir("graft-ws-heads-ckpt"))
         .start()
       try {
-        // push arrival is asynchronous: keep draining until all 40 land
-        val deadline = System.currentTimeMillis() + 30000
+        // the source subscribes on its first trigger and the node pushes
+        // all 40 headers at once; each processAllAvailable then blocks
+        // until the heads the client has received so far are processed
+        wsNode.awaitServed(0)
+        val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(60)
         var n = 0L
-        while (n < 40 && System.currentTimeMillis() < deadline) {
+        while (n < 40 && System.nanoTime() < deadline) {
           q.processAllAvailable()
           n = spark.table("ws_heads").count()
-          if (n < 40) Thread.sleep(100)
         }
       } finally q.stop()
       val got = spark.table("ws_heads").collect()
