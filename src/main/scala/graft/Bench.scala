@@ -269,6 +269,7 @@ object Bench {
     // iteration) and had to be restored from git. Ordinary runs therefore
     // write BENCH_LAST.json (gitignored scratch); the anchor file is only
     // rewritten when SPARK_GRAFT_ANCHOR=1 declares a deliberate re-anchor.
+    val anchor = anchorTimes() // before a re-anchor run overwrites it
     val outFile =
       if (sys.env.get("SPARK_GRAFT_ANCHOR").contains("1")) "BENCH_FULL.json"
       else "BENCH_LAST.json"
@@ -276,16 +277,51 @@ object Bench {
       render(results).getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
     // The printed line must fit the driver's 2000-byte tail window WITH
-    // room to spare; if the query set outgrows it, shed the cheapest
-    // entries (the sub-second noise floor) and keep the expensive ones —
-    // they carry the performance signal.
+    // room to spare; past that, shed the entries the anchor times
+    // cheapest (the sub-second noise floor), so every run prints the
+    // same keys.
     val Budget = 1900
-    var kept = results
-    while (render(kept).length > Budget && kept.nonEmpty) {
-      val cheapest = kept.filter(_._2 >= 0).sortBy(_._2).headOption
-        .orElse(kept.headOption).get._1
-      kept = kept.filterNot(_._1 == cheapest)
+    println(render(printed(results, anchor,
+      Budget - HeaderWidth - sfName.length - errs.length)))
+  }
+
+  /** Widest printed entry value: two decimals, under 1000 s. */
+  private val ValueWidth = "999.99".length
+
+  /** The printed line outside its entries and `sf` name, every number
+    * at its widest. */
+  private val HeaderWidth = ("""{"metric":"total","value":9999.99,""" +
+    """"value_norm":9999.99,"unit":"sec","queries":{},"load_ratio":""" +
+    """99.99,"sentinel_ms":[99999,99999,99999],"sf":""}""").length
+
+  /** The entries the stdout line prints: all of them when they fit
+    * `room` bytes at their widest values; otherwise without the ones
+    * the anchor timed cheapest, shedding the entries the anchor lacks
+    * first (by name). The printed key set thus depends on the roster
+    * and the anchor only, never on this run's times. */
+  private[graft] def printed(results: Seq[(String, Double)],
+      anchor: Map[String, Double], room: Int): Seq[(String, Double)] = {
+    val shedOrder = results.map(_._1)
+      .sortBy(k => (anchor.contains(k), anchor.getOrElse(k, 0.0), k))
+    val kept = shedOrder.tails
+      .find(_.map(_.length + 4 + ValueWidth).sum <= room).get.toSet
+    results.filter(r => kept(r._1))
+  }
+
+  /** Entry times of the committed anchor `BENCH_FULL.json`; empty when
+    * it is absent. */
+  private def anchorTimes(): Map[String, Double] = {
+    import org.json4s._
+    val path = java.nio.file.Paths.get("BENCH_FULL.json")
+    if (!java.nio.file.Files.exists(path)) Map.empty
+    else org.json4s.jackson.JsonMethods.parse(
+      new String(java.nio.file.Files.readAllBytes(path),
+        java.nio.charset.StandardCharsets.UTF_8)) \ "queries" match {
+      case JObject(fields) => fields.collect {
+        case (k, JDouble(v)) => k -> v
+        case (k, JInt(v)) => k -> v.toDouble
+      }.toMap
+      case _ => Map.empty
     }
-    println(render(kept))
   }
 }

@@ -9,9 +9,9 @@ import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
   * (`crates/provider/src/provider.rs:23-101`: connect-with-retries,
   * get_block(number, full), receipt by hash, network id, syncing gate;
   * its native transport is pubsub-over-wss, which is why the
-  * [[Network]] presets are wss endpoints) on the JDK's own HTTP and
-  * WebSocket clients — no new dependencies; JSON rides on json4s,
-  * which Spark already ships.
+  * [[Network]] presets are wss endpoints) on the JDK's HTTP client and
+  * the minimal WebSocket client [[WsHeads.Conn]] — no new dependencies;
+  * JSON rides on json4s, which Spark already ships.
   *
   * Distribution (the `mapPartitions` fan-out the [[ChainSource]] doc
   * promises, replacing the reference's tokio::spawn pool, etl.rs:286-303):
@@ -251,9 +251,13 @@ object RpcSource {
   *  - `ws(s)://` — a persistent WebSocket connection carrying
   *    request/response text frames (the reference provider's native
   *    transport, provider.rs:23-47: its `--network` presets are wss
-  *    endpoints, network.rs:11-17), on the JDK's own WebSocket client.
-  *    A broken/timed-out connection is torn down and rebuilt by the
-  *    same retry loop.
+  *    endpoints, network.rs:11-17), on [[WsHeads.Conn]]. The client is
+  *    strictly one exchange at a time (one RpcClient per executor
+  *    partition): after sending, it reads frames on the caller's thread
+  *    until one answers its request ids or the deadline passes.
+  *    Subscription notifications and frames with foreign ids (leftovers
+  *    of an earlier failed exchange) are skipped. A broken or timed-out
+  *    connection is torn down and rebuilt by the same retry loop.
   *
   * The reference retries its connect 5×500 ms (provider.rs:25-38) —
   * here every call retries, which subsumes connect retry for both
@@ -264,8 +268,7 @@ final class RpcClient(url: String, retries: Int, backoffMs: Long,
   import org.json4s.jackson.JsonMethods
 
   private val isWs = url.startsWith("ws://") || url.startsWith("wss://")
-  private def http = RpcClient.sharedHttp
-  private var wsConn: WsJsonRpcConn = null
+  private var wsConn: WsHeads.Conn = null
   private var nextId = 0L
 
   private def exchangeHttp(body: String): String = {
@@ -274,7 +277,7 @@ final class RpcClient(url: String, retries: Int, backoffMs: Long,
       .header("Content-Type", "application/json")
       .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body))
       .build()
-    val resp = http.send(req,
+    val resp = RpcClient.sharedHttp.send(req,
       java.net.http.HttpResponse.BodyHandlers.ofString())
     val code = resp.statusCode()
     if (code / 100 == 2) return resp.body()
@@ -288,17 +291,43 @@ final class RpcClient(url: String, retries: Int, backoffMs: Long,
   }
 
   private def exchangeWs(body: String, ids: Set[Long]): JValue = {
-    if (wsConn == null || wsConn.isDead)
-      wsConn = new WsJsonRpcConn(url, wsTimeoutMs)
-    try wsConn.exchange(body, ids)
-    catch {
+    // a failed connect or upgrade throws IOException: `post` retries it
+    if (wsConn == null)
+      wsConn = new WsHeads.Conn(java.net.URI.create(url), wsTimeoutMs.toInt)
+    try {
+      wsConn.sendText(body)
+      // take frames on this thread until one answers our ids: the read
+      // timeout bounds a silent peer, the deadline a chatty one
+      val deadline = System.nanoTime() + wsTimeoutMs * 1000000L
+      var answer: JValue = null
+      while (answer == null) {
+        if (System.nanoTime() > deadline) throw new java.io.IOException(
+          s"WebSocket response from $url timed out after ${wsTimeoutMs}ms")
+        wsConn.next() match {
+          case WsHeads.Text(frame) =>
+            // a notification frame (carries `method`) is not our
+            // response; neither is a response frame with foreign ids
+            val parsed = JsonMethods.parse(frame)
+            val isNotification = parsed match {
+              case o: JObject => (o \ "method") != JNothing
+              case _ => false
+            }
+            if (!isNotification && RpcClient.respondsTo(parsed, ids))
+              answer = parsed
+          case WsHeads.Closed(code, reason) => throw new java.io.IOException(
+            s"WebSocket to $url closed by peer ($code: $reason)")
+          case WsHeads.Pong => ()
+        }
+      }
+      answer
+    } catch {
       // ANY failed exchange may leave our response still in flight —
       // tear the connection down so no later call on this client can
       // receive it as its own. IOException is then retried by `post`'s
       // loop on a fresh connection; anything else (parse failure,
       // interrupt) propagates, with the connection already closed.
       case e: Throwable =>
-        try wsConn.close() catch { case _: Throwable => () }
+        wsConn.abort()
         wsConn = null
         throw e
     }
@@ -331,7 +360,7 @@ final class RpcClient(url: String, retries: Int, backoffMs: Long,
     * (HTTP keeps no per-client connection state). Idempotent; the
     * client remains usable (the next call reconnects). */
   def close(): Unit = if (wsConn != null) {
-    try wsConn.close() catch { case _: Throwable => () }
+    wsConn.close()
     wsConn = null
   }
 
@@ -374,121 +403,14 @@ final class RpcClient(url: String, retries: Int, backoffMs: Long,
 }
 
 object RpcClient {
-  /** Process-wide JDK HttpClient for the HTTP transport's POSTs — same
-    * thread/FD-accumulation rationale as [[WsJsonRpcConn.sharedHttp]]
-    * (one RpcClient is built per partition task; `send` is thread-safe
-    * and connections pool internally). */
-  private[etl] def sharedHttp: java.net.http.HttpClient =
-    WsJsonRpcConn.sharedHttp
-}
-
-/** One persistent WebSocket connection carrying JSON-RPC
-  * request/response text frames for [[RpcClient]]'s ws(s) transport.
-  * The client is strictly one-exchange-at-a-time (one RpcClient per
-  * executor partition), so matching is simple: after sending, take
-  * incoming frames until the response carrying one of OUR request ids
-  * arrives — subscription notifications (frames carrying a `method`)
-  * and frames with foreign ids (leftovers of an earlier exchange that
-  * failed without killing the connection) are skipped. A failed
-  * exchange of any kind tears the connection down ([[RpcClient]] side),
-  * so the id check is belt-and-braces against a long-lived connection
-  * ever answering request N with response N-1. IOException failures are
-  * rebuilt by [[RpcClient]]'s bounded retry loop. */
-private[etl] final class WsJsonRpcConn(url: String, timeoutMs: Long)
-    extends AutoCloseable {
-  import org.json4s._
-  import org.json4s.jackson.JsonMethods
-
-  private val frames =
-    new java.util.concurrent.LinkedBlockingQueue[String]()
-  @volatile private var dead: Option[String] = None
-  def isDead: Boolean = dead.isDefined
-
-  private val listener = new java.net.http.WebSocket.Listener {
-    private val buf = new StringBuilder
-    override def onText(ws: java.net.http.WebSocket,
-        data: CharSequence, last: Boolean)
-        : java.util.concurrent.CompletionStage[_] = {
-      buf.append(data)
-      if (last) { val t = buf.toString(); buf.setLength(0); frames.put(t) }
-      ws.request(1)
-      null
-    }
-    override def onClose(ws: java.net.http.WebSocket, statusCode: Int,
-        reason: String): java.util.concurrent.CompletionStage[_] = {
-      dead = Some(s"closed by peer ($statusCode: $reason)"); null
-    }
-    override def onError(ws: java.net.http.WebSocket,
-        error: Throwable): Unit =
-      dead = Some(s"transport error: $error")
-  }
-
-  private val ws: java.net.http.WebSocket =
-    try WsJsonRpcConn.sharedHttp
-      .newWebSocketBuilder()
-      .buildAsync(java.net.URI.create(url), listener)
-      .join()
-    catch {
-      case e: Throwable =>
-        throw new java.io.IOException(s"WebSocket connect to $url failed", e)
-    }
-
-  /** Send one JSON-RPC request (object or batch array) and return the
-    * response frame carrying one of `ids`, PARSED — frames must be
-    * parsed here anyway to tell responses from notifications, and
-    * returning text would force the caller to re-parse multi-megabyte
-    * batch responses. */
-  def exchange(body: String, ids: Set[Long]): JValue = {
-    dead.foreach(why => throw new java.io.IOException(
-      s"WebSocket to $url is dead: $why"))
-    try ws.sendText(body, true).join()
-    catch {
-      case e: Throwable =>
-        throw new java.io.IOException(s"WebSocket send to $url failed", e)
-    }
-    val deadline = System.nanoTime() + timeoutMs * 1000000L
-    while (true) {
-      val waitMs = (deadline - System.nanoTime()) / 1000000L
-      if (waitMs <= 0) throw new java.io.IOException(
-        s"WebSocket response from $url timed out after ${timeoutMs}ms")
-      // poll in short slices so a connection that dies MID-exchange is
-      // noticed in ~250ms, not after the full response timeout
-      val frame = frames.poll(math.min(waitMs, 250L),
-        java.util.concurrent.TimeUnit.MILLISECONDS)
-      if (frame == null) {
-        dead.foreach(why => throw new java.io.IOException(
-          s"WebSocket to $url died mid-exchange: $why"))
-      } else {
-        // a notification frame (carries `method`) is not our response;
-        // neither is a response frame with foreign ids — drop both
-        val parsed = JsonMethods.parse(frame)
-        val isNotification = parsed match {
-          case o: JObject => (o \ "method") != JNothing
-          case _ => false
-        }
-        if (!isNotification && WsJsonRpcConn.respondsTo(parsed, ids))
-          return parsed
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  override def close(): Unit = {
-    dead = dead.orElse(Some("closed locally"))
-    try ws.abort() catch { case _: Throwable => () }
-  }
-}
-
-private[etl] object WsJsonRpcConn {
   import org.json4s._
 
-  /** One process-wide client for BUILDING WebSockets: pre-JDK-21
-    * HttpClient has no close() and every instance pins a
-    * selector-manager thread until GC — per-connection instances on
-    * executors running many short WS tasks (plus one per reconnect in
-    * the retry loop) accumulate threads and FDs. The WebSocket itself
-    * stays per-connection and is aborted by [[WsJsonRpcConn.close]]. */
-  private[etl] lazy val sharedHttp: java.net.http.HttpClient =
+  /** One process-wide JDK HttpClient for the HTTP transport's POSTs:
+    * pre-JDK-21 HttpClient has no close() and every instance pins a
+    * selector-manager thread until GC, and one RpcClient is built per
+    * partition task. `send` is thread-safe and connections pool
+    * internally. */
+  private lazy val sharedHttp: java.net.http.HttpClient =
     java.net.http.HttpClient.newHttpClient()
 
   /** Does this frame (response object or batch array) answer any of the

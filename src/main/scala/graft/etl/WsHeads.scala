@@ -204,18 +204,24 @@ final class WsHeads(url: String, namespace: String = "xcb",
 }
 
 object WsHeads {
-  private sealed trait Message
-  private final case class Text(text: String) extends Message
-  private final case class Closed(code: Int, reason: String) extends Message
-  private case object Pong extends Message
+  private[etl] sealed trait Message
+  private[etl] final case class Text(text: String) extends Message
+  private[etl] final case class Closed(code: Int, reason: String)
+      extends Message
+  private[etl] case object Pong extends Message
 
   /** One client WebSocket (RFC 6455) over a plain or TLS socket: the
     * HTTP Upgrade handshake, masked client frames, and a blocking
     * [[next]] that returns server messages in wire order — text
     * messages reassembled from their fragments, pings answered inline.
     * Text and control frames only, no extensions. Sends are serialized,
-    * since the reader answers pings while a caller may be sending. */
-  private final class Conn(uri: URI) {
+    * since the reader answers pings while a caller may be sending.
+    * Shared by [[WsHeads]] (a reader thread blocked in [[next]]) and
+    * [[RpcClient]]'s ws(s) transport (synchronous reads). A positive
+    * `readTimeoutMs` bounds the upgrade and every read: a wait past it
+    * throws `SocketTimeoutException`, after which the connection is
+    * unusable (a frame may be half read). */
+  private[etl] final class Conn(uri: URI, readTimeoutMs: Int = 0) {
     private val tls = uri.getScheme == "wss"
     private val port =
       if (uri.getPort > 0) uri.getPort else if (tls) 443 else 80
@@ -240,7 +246,8 @@ object WsHeads {
     private val in =
       new DataInputStream(new BufferedInputStream(sock.getInputStream))
     private val out: OutputStream = sock.getOutputStream
-    try handshake() catch { case e: Throwable => abort(); throw e }
+    try { sock.setSoTimeout(readTimeoutMs); handshake() }
+    catch { case e: Throwable => abort(); throw e }
 
     private def handshake(): Unit = {
       val nonce = new Array[Byte](16)

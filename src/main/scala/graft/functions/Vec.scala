@@ -323,49 +323,6 @@ object Vec {
     new GenericArrayData(out)
   }
 
-  /** One IVF Lloyd-round row set for a vector: structs (cell, pos, xq)
-    * with cell = [[ivfCell]] argmax and xq = floor(vⱼ·quant + ½) — the
-    * explode-ready tuples of the round's quantized sum, emitted by ONE
-    * kernel call per row so the argmax can never be re-evaluated per
-    * exploded element by projection collapse. */
-  def ivfRoundRows(v: ArrayData, cents: Array[Array[Double]],
-      quant: Double): ArrayData = {
-    val cell = ivfCell(v, cents)
-    val n = v.numElements()
-    val out = new Array[Any](n)
-    var j = 0
-    while (j < n) {
-      val xq = math.floor(v.getDouble(j) * quant + 0.5).toLong
-      out(j) = new org.apache.spark.sql.catalyst.expressions
-        .GenericInternalRow(Array[Any](cell, j, xq))
-      j += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  /** One PQ Lloyd-round row set for a vector: structs (sub, code, pos,
-    * xq) with code = the sub's [[pqCodes]] argmin, pos the in-subvector
-    * position, xq = floor(vⱼ·quant + ½) — same rationale as
-    * [[ivfRoundRows]]. */
-  def pqRoundRows(v: ArrayData, cb: Array[Array[Array[Double]]],
-      quant: Double): ArrayData = {
-    val codes = pqCodes(v, cb)
-    val m = cb.length
-    val n = v.numElements()
-    val dsub = if (m > 0 && cb(0).length > 0) cb(0)(0).length else 1
-    val out = new Array[Any](n)
-    var j = 0
-    while (j < n) {
-      val sub = j / dsub
-      val xq = math.floor(v.getDouble(j) * quant + 0.5).toLong
-      val code = if (sub < m) codes.getInt(sub) else 0
-      out(j) = new org.apache.spark.sql.catalyst.expressions
-        .GenericInternalRow(Array[Any](sub, code, j - sub * dsub, xq))
-      j += 1
-    }
-    new GenericArrayData(out)
-  }
-
   /** Per-sub integer distortion of a vector against its ASSIGNED codes'
     * exact centroid pairs — [[distq]] applied slice-by-slice in one
     * pass (sq indexed [sub][code][dpos], cq indexed [sub][code]; same
@@ -789,18 +746,6 @@ object Vec {
       sq: Array[Array[Array[Long]]], cq: Array[Array[Long]]): Column =
     columnOf(PqDistQAllExpr(exprOf(v), exprOf(codes), sq, cq))
 
-  /** Explode-ready IVF Lloyd-round tuples (array<struct<cell, pos,
-    * xq>>) — see [[ivfRoundRows]]. */
-  def ivf_round_rows(c: Column, cents: Array[Array[Double]],
-      quant: Double): Column =
-    columnOf(IvfRoundRowsExpr(exprOf(c), cents, quant))
-
-  /** Explode-ready PQ Lloyd-round tuples (array<struct<sub, code, pos,
-    * xq>>) — see [[pqRoundRows]]. */
-  def pq_round_rows(c: Column, cb: Array[Array[Array[Double]]],
-      quant: Double): Column =
-    columnOf(PqRoundRowsExpr(exprOf(c), cb, quant))
-
   /** Packed sign sketch (array<bigint>) of a unit vector column. */
   def sign_sketch(c: Column, seed: Long, bits: Int): Column =
     columnOf(SignSketchExpr(exprOf(c), seed, bits))
@@ -1092,45 +1037,6 @@ case class PqTableExpr(child: Expression, cb: Array[Array[Array[Double]]],
       s"${ev.value} = graft.functions.Vec.pqTable($c, $ref, $quant);")
   }
   override protected def withNewChildInternal(c: Expression): PqTableExpr =
-    copy(child = c)
-}
-
-case class IvfRoundRowsExpr(child: Expression, cents: Array[Array[Double]],
-    quant: Double) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("cell", IntegerType, false),
-      org.apache.spark.sql.types.StructField("pos", IntegerType, false),
-      org.apache.spark.sql.types.StructField("xq", LongType, false))),
-    containsNull = false)
-  override protected def nullSafeEval(v: Any): Any =
-    Vec.ivfRoundRows(v.asInstanceOf[ArrayData], cents, quant)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("ivfCents", cents, "double[][]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.Vec.ivfRoundRows($c, $ref, $quant);")
-  }
-  override protected def withNewChildInternal(c: Expression): IvfRoundRowsExpr =
-    copy(child = c)
-}
-
-case class PqRoundRowsExpr(child: Expression, cb: Array[Array[Array[Double]]],
-    quant: Double) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("sub", IntegerType, false),
-      org.apache.spark.sql.types.StructField("code", IntegerType, false),
-      org.apache.spark.sql.types.StructField("pos", IntegerType, false),
-      org.apache.spark.sql.types.StructField("xq", LongType, false))),
-    containsNull = false)
-  override protected def nullSafeEval(v: Any): Any =
-    Vec.pqRoundRows(v.asInstanceOf[ArrayData], cb, quant)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqCb", cb, "double[][][]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.Vec.pqRoundRows($c, $ref, $quant);")
-  }
-  override protected def withNewChildInternal(c: Expression): PqRoundRowsExpr =
     copy(child = c)
 }
 

@@ -66,36 +66,6 @@ object SimilarityOps {
     df.withColumn("unit", vec_unit(col("embedding")))
       .filter(col("unit").isNotNull)
 
-  /** Run a model-sized driver round-trip (a Lloyd-round sum collect, a
-    * trainer init) without AQE and with a single reduce partition. The
-    * exchange inside such an action carries O(model) rows (k·dim
-    * partial sums per map task — partial aggregation has already
-    * reduced the data) at ANY corpus scale, so adaptive re-planning
-    * buys nothing (one extra job + planning pass per query stage, which
-    * dominates the iterative trainers' wall clock) and fanning the
-    * model-sized final merge across the full shuffle-partition count
-    * only schedules empty tasks. Scale-safe by construction: this
-    * scopes only actions whose shuffled payload is model parameters,
-    * never data — the map side stays partition-parallel. */
-  private def withoutAqe[T](spark: SparkSession)(body: => T): T = {
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val partKey = "spark.sql.shuffle.partitions"
-    val prevAqe = spark.conf.getOption(aqeKey)
-    val prevPart = spark.conf.getOption(partKey)
-    spark.conf.set(aqeKey, "false")
-    spark.conf.set(partKey, "1")
-    try body finally {
-      prevAqe match {
-        case Some(v) => spark.conf.set(aqeKey, v)
-        case None => spark.conf.unset(aqeKey)
-      }
-      prevPart match {
-        case Some(v) => spark.conf.set(partKey, v)
-        case None => spark.conf.unset(partKey)
-      }
-    }
-  }
-
   private def cosine = vec_dot(col("q_unit"), col("unit"))
 
   /** Materialize a frame on a background driver thread (optimization
@@ -107,17 +77,8 @@ object SimilarityOps {
     * before it (FIFO scheduling — the trainer's small jobs are not
     * starved). Results are unchanged: the checkpoint holds exactly the
     * rows the eager inline form held, only its wall-clock position
-    * moves. The physical plan is pinned on the calling thread BEFORE
-    * the thread starts, so a trainer's temporary session-conf flips
-    * ([[withoutAqe]]) cannot reach this frame's INITIAL planning — note
-    * the precise scope: under AQE the plan re-optimizes at runtime and
-    * execution-start conf propagation could still observe a flip that
-    * happens mid-execution, which for the two keys [[withoutAqe]]
-    * touches (AQE on/off, shuffle partition count) is a perf-only
-    * effect, never a correctness one. Callers hold the
-    * single-threaded-trainer invariant: one trainer drives the session
-    * conf at a time, with only this helper's background thread running
-    * concurrently.
+    * moves. The physical plan is pinned on the calling thread before
+    * the thread starts.
     * Returns a handle that blocks until the checkpoint is live; a
     * failure on the background thread (including fatal ones — OOM,
     * linkage) re-throws at the handle, never a bare NPE. The background
@@ -544,35 +505,127 @@ object SimilarityOps {
     (sq, cq)
   }
 
+  /** One Lloyd round's exact-integer sums: `groups` member groups (IVF
+    * cells, PQ (sub, code) pairs) of `width` quantized components each,
+    * a member count per group, and the shortest and longest vector seen.
+    * Every slot is a Long that carries into a BigInteger instead of
+    * wrapping, so a merged sum is the exact integer at any partitioning
+    * and any corpus size. */
+  private[graft] final class LloydSums(groups: Int, width: Int)
+      extends Serializable {
+    private val low = new Array[Long](groups * width)
+    private var high: Array[java.math.BigInteger] = null
+    val counts = new Array[Long](groups)
+    var minLen = Int.MaxValue
+    var maxLen = Int.MinValue
+
+    def add(slot: Int, x: Long): Unit =
+      try low(slot) = Math.addExact(low(slot), x)
+      catch {
+        case _: ArithmeticException =>
+          carry(slot, java.math.BigInteger.valueOf(low(slot)))
+          low(slot) = x
+      }
+
+    private def carry(slot: Int, b: java.math.BigInteger): Unit = {
+      if (high == null) high = new Array(low.length)
+      high(slot) = if (high(slot) == null) b else high(slot).add(b)
+    }
+
+    def sum(slot: Int): java.math.BigInteger = {
+      val l = java.math.BigInteger.valueOf(low(slot))
+      if (high == null || high(slot) == null) l else high(slot).add(l)
+    }
+
+    def merge(o: LloydSums): LloydSums = {
+      var i = 0
+      while (i < low.length) {
+        add(i, o.low(i))
+        if (o.high != null && o.high(i) != null) carry(i, o.high(i))
+        i += 1
+      }
+      i = 0
+      while (i < counts.length) { counts(i) += o.counts(i); i += 1 }
+      minLen = math.min(minLen, o.minLen)
+      maxLen = math.max(maxLen, o.maxLen)
+      this
+    }
+  }
+
+  /** One Lloyd round as one job: each partition folds its `unit` rows
+    * into a [[LloydSums]], and `treeReduce` merges the partials. A
+    * vector's component j belongs to part j / `width`; `assign` names
+    * the group of each part (IVF: one part, its cell; PQ: one part per
+    * subspace, its code). Each component adds floor(vⱼ·quant + ½) to
+    * its group's slot, never past `dim`, and each part adds one member.
+    * No explode and no SQL exchange; past a handful of partitions
+    * `treeReduce` adds one merge level that shuffles only model-sized
+    * partials. */
+  private[graft] def lloydSums(units: DataFrame, groups: Int, width: Int,
+      dim: Int, quant: Double)(
+      assign: org.apache.spark.sql.catalyst.util.ArrayData => Array[Int])
+      : LloydSums =
+    units.select(col("unit")).queryExecution.toRdd.mapPartitions { rows =>
+      val acc = new LloydSums(groups, width)
+      rows.filterNot(_.isNullAt(0)).foreach { row =>
+        val v = row.getArray(0)
+        val n = v.numElements()
+        acc.minLen = math.min(acc.minLen, n)
+        acc.maxLen = math.max(acc.maxLen, n)
+        val g = assign(v)
+        var p = 0
+        while (p < g.length) {
+          acc.counts(g(p)) += 1
+          val from = p * width
+          val to = math.min(math.min(n, dim), from + width)
+          var j = from
+          while (j < to) {
+            acc.add(g(p) * width + j - from,
+              math.floor(v.getDouble(j) * quant + 0.5).toLong)
+            j += 1
+          }
+          p += 1
+        }
+      }
+      Iterator.single(acc)
+    }.treeReduce(_ merge _)
+
+  /** The fold's fixed-dimension precondition. Vec.dot tolerates ragged
+    * lengths via common-prefix semantics, but the Lloyd sum does not: a
+    * dimension a vector lacks reads as 0 in the engine's dense sum and
+    * as NULL in the oracle's unnest, which silently diverges. */
+  private def requireDim(acc: LloydSums, dim: Int, what: String): Unit =
+    require(acc.minLen == dim && acc.maxLen == dim,
+      s"$what (saw ${acc.minLen}..${acc.maxLen}, init expects $dim)")
+
   /** Spherical k-means coarse quantizer over (vec_id, unit) rows.
     * Returns (cells, centroids): cells = (vec_id, unit, cell) — persist
     * this partitioned BY cell so a probe prunes partitions; centroids =
     * (cell, centroid), O(k·dim) — the model, not data.
     *
-    * Distribution (round 20): the model is driver-resident between
-    * rounds anyway, so assignment is a literal-closure argmax
-    * projection ([[graft.functions.Vec.ivf_cell]] — same dot fold, same
-    * max(struct(dot, cell)) tie-break) instead of a crossJoin with k
-    * broadcast centroids followed by a groupBy(vec_id) exchange: each
-    * Lloyd round is now ONE scan → partial-agg sum → k·dim collect,
-    * with no unit bytes ever shuffled. Only the k·dim centroid matrix
-    * reaches the driver (model PARAMETERS between rounds — ~4 KB here;
-    * the corpus itself never leaves the executors).
+    * Distribution: the model is driver-resident between rounds, and
+    * each Lloyd round is one [[lloydSums]] job: every partition assigns
+    * its vectors with the literal-closure argmax ([[graft.functions.Vec
+    * .ivfCell]] — same dot fold, same max(struct(dot, cell)) tie-break
+    * as the oracle) and folds them into k·dim exact-integer partial
+    * sums, which merge on the way to the driver. Only the k·dim sums
+    * and the updated centroids cross the network (model parameters,
+    * ~4 KB here); the corpus never leaves the executors.
     * Deterministic end-to-end AND portable (round-9): seeded init = k
     * smallest portable pair-hash of 'ivf:vec_id', fixed iteration
     * count, [[IvfQuant]]-integer sums (exact at any partitioning; the
-    * decimal accumulator never wraps), struct-max tie-breaks. Every
-    * step is plain integer arithmetic or a fixed-order double fold, so
-    * the `ann_topk_ivf` oracle unrolls the whole trainer in DuckDB. */
+    * accumulator never wraps), struct-max tie-breaks. Every step is
+    * plain integer arithmetic or a fixed-order double fold, so the
+    * `ann_topk_ivf` oracle unrolls the whole trainer in DuckDB. */
   def buildIvfIndex(units: DataFrame, k: Int = IvfCells,
       iters: Int = IvfIters, checkpointCells: Boolean = true)
       : (DataFrame, DataFrame) = {
     val spark = units.sparkSession
-    var centroids: Seq[(Int, Seq[Double])] = withoutAqe(spark)(units
+    var centroids: Seq[(Int, Seq[Double])] = units
       .orderBy(graft.functions.Vec.portable_hash64(
         concat(lit("ivf:"), col("vec_id").cast("string"))), col("vec_id"))
       .limit(k)
-      .select(col("unit")).collect())
+      .select(col("unit")).collect()
       .zipWithIndex.map { case (r, i) => i -> r.getSeq[Double](0) }.toSeq
     require(centroids.nonEmpty, "buildIvfIndex: empty corpus")
     val dim = centroids.head._2.length
@@ -581,57 +634,23 @@ object SimilarityOps {
       import spark.implicits._
       centroids.toDF("cell", "centroid")
     }
-    // Argmax assignment as a literal-closure projection over the
-    // driver-resident centroid matrix — no crossJoin fan-out, no
-    // groupBy(vec_id) exchange, no unit bytes shuffled per round.
     def centArr: Array[Array[Double]] = {
       val arr = new Array[Array[Double]](centroids.length)
       centroids.foreach { case (cell, v) => arr(cell) = v.toArray }
       arr
     }
-    def assign(): DataFrame = ivfAssignArr(units, centArr)
 
-    for (round <- 1 to iters) {
-      // floor(x·Q + 0.5) (explicit round-half-up on both engines — JVM
-      // Math.round and SQL round() disagree on negative halves) happens
-      // INSIDE the round-rows kernel, which emits (cell, pos, xq)
-      // structs in one call per row: the argmax cannot be re-evaluated
-      // per exploded element by projection collapse.
-      val sums = withoutAqe(spark)(units
-        .select(explode(graft.functions.Vec.ivf_round_rows(col("unit"),
-          centArr, IvfQuant)).as("r"))
-        .select(col("r.cell").as("cell"), col("r.pos").as("pos"),
-          col("r.xq").as("xq"))
-        .groupBy(col("cell"), col("pos"))
-        .agg(sum(col("xq").cast("decimal(38,0)")).as("s"),
-          count(lit(1)).as("c"))
-        .collect())
-      val byCell = sums.groupBy(_.getInt(0))
-      // Fixed-dimension precondition, checked from the round-1 sums (no
-      // extra corpus pass — posexplode already visited every component).
-      // Vec.dot tolerates ragged lengths via common-prefix semantics,
-      // but the Lloyd sum does not: a dimension a vector lacks reads as
-      // 0.0 in the engine's dense array and as NULL in the oracle's
-      // unnest — silently divergent centroids (or an out-of-range write
-      // when a vector is LONGER than the init centroid). A fixed-dim
-      // cell shows exactly `dim` pos groups with one uniform member
-      // count; any ragged shape breaks one of the three checks.
-      if (round == 1) byCell.foreach { case (cell, rows) =>
-        require(rows.length == dim && rows.forall(_.getInt(1) < dim) &&
-            rows.map(_.getLong(3)).distinct.length == 1,
-          s"buildIvfIndex: embeddings must share one dimension (cell " +
-            s"$cell saw ${rows.length} dimensions, init expects $dim)")
-      }
+    for (_ <- 1 to iters) {
+      val cents = centArr
+      val acc = lloydSums(units, cents.length, dim, dim, IvfQuant)(v =>
+        Array(graft.functions.Vec.ivfCell(v, cents)))
+      requireDim(acc, dim, "buildIvfIndex: embeddings must share one dimension")
       centroids = centroids.map { case (cell, old) =>
-        byCell.get(cell) match {
-          case None => cell -> old // empty cell keeps its centroid
-          case Some(rows) =>
-            val sv = new Array[Double](dim)
-            rows.foreach(r => sv(r.getInt(1)) =
-              r.getDecimal(2).doubleValue)
-            val norm = math.sqrt(sv.map(x => x * x).sum)
-            cell -> (if (norm == 0) old
-                     else sv.map(_ / norm).toSeq)
+        if (acc.counts(cell) == 0) cell -> old // empty cell keeps its centroid
+        else {
+          val sv = Array.tabulate(dim)(j => acc.sum(cell * dim + j).doubleValue)
+          val norm = math.sqrt(sv.map(x => x * x).sum)
+          cell -> (if (norm == 0) old else sv.map(_ / norm).toSeq)
         }
       }
     }
@@ -641,7 +660,8 @@ object SimilarityOps {
     // scan); residual-based callers consume it exactly once into their
     // own checkpoint and pass checkpointCells = false to skip the
     // wasted materialization job.
-    val cells = assign().select(col("vec_id"), col("unit"), col("cell"))
+    val cells = ivfAssignArr(units, centArr)
+      .select(col("vec_id"), col("unit"), col("cell"))
     (if (checkpointCells) cells.localCheckpoint() else cells, centDf)
   }
 
@@ -990,29 +1010,32 @@ object SimilarityOps {
     * checkpointed for reuse by [[pqEncode]]/[[pqDistanceTables]];
     * `codebook` = (sub, code, centroid), O(M·ks·dsub) — the model.
     *
-    * Distribution: assignment is a broadcast join on `sub` (M·ks rows)
-    * + codegen'd [[graft.functions.Vec.l2sq]]; the Lloyd update
-    * collects only the M·ks·dsub quantized sums (model parameters,
-    * ~1024 rows here — the corpus never leaves the executors). Init =
-    * the ks corpus vectors with the smallest portable hash of
-    * 'pq:vec_id', each sliced into its M subvectors, so every engine
-    * reproduces the draw. Requires one shared dimension divisible by M
-    * (checked loudly — a ragged corpus would silently skew subspace
-    * boundaries). */
+    * Distribution: each Lloyd round is one [[lloydSums]] job — every
+    * partition assigns its vectors' M codes with the literal-closure
+    * argmin ([[graft.functions.Vec.pqCodes]] — same l2sq fold and
+    * min(struct(d2, code)) tie-break as the oracle) and folds them into
+    * M·ks·dsub exact-integer partial sums (model parameters, ~1024
+    * slots here — the corpus never leaves the executors). Init = the ks
+    * corpus vectors with the smallest portable hash of 'pq:vec_id', each
+    * sliced into its M subvectors, so every engine reproduces the draw.
+    * Requires one shared dimension divisible by M (checked loudly from
+    * the first round's fold — a ragged corpus would silently skew
+    * subspace boundaries). */
   def buildPqCodebooks(units: DataFrame, m: Int = PqSubs,
       ks: Int = PqCodes, iters: Int = PqIters): (DataFrame, DataFrame) = {
     val spark = units.sparkSession
-    val initRows = withoutAqe(spark)(units
+    val initRows = units
       .orderBy(graft.functions.Vec.portable_hash64(
         concat(lit("pq:"), col("vec_id").cast("string"))), col("vec_id"))
       .limit(ks)
-      .select(col("unit")).collect())
+      .select(col("unit")).collect()
       .map(_.getSeq[Double](0))
     require(initRows.nonEmpty, "buildPqCodebooks: empty corpus")
     val dim = initRows.head.length
     require(dim % m == 0,
       s"buildPqCodebooks: dim $dim not divisible by $m subspaces")
     val dsub = dim / m
+    val ksA = initRows.length
     var cents: Map[(Int, Int), Seq[Double]] = (for {
       (v, code) <- initRows.zipWithIndex
       sub <- 0 until m
@@ -1038,74 +1061,34 @@ object SimilarityOps {
         (sub, code, c, sq, cq)
       }.toDF("sub", "code", "centroid", "sq", "cq")
     }
-    // Ragged rows would slice short (training a WRONG low-d codebook
-    // for tail subs) or slice LONG rows cleanly while ignoring their
-    // excess dimensions — both silent. The init only checks ks rows, so
-    // pin the whole corpus's dimension before slicing (one array-length
-    // agg; subvector sizes after the explode could not catch the
-    // longer-row case, since slices cap at dsub).
-    val dims = withoutAqe(spark)(units.agg(min(size(col("unit"))).as("mn"),
-      max(size(col("unit"))).as("mx")).head())
-    require(dims.getInt(0) == dim && dims.getInt(1) == dim,
-      s"buildPqCodebooks: embeddings must share dimension " +
-        s"(saw ${dims.getInt(0)}..${dims.getInt(1)}, init expects $dim)")
-    // Code assignment as a literal-closure projection over the
-    // driver-resident codebook ([[graft.functions.Vec.pq_codes]] — same
-    // l2sq fold and min(struct(d2, code)) tie-break as the broadcast
-    // join + groupBy(vec_id, sub) form): each Lloyd round is ONE scan
-    // of `units` (no subvector explode materialized, no exchange before
-    // the partial-agg sums). sub/pos derive from the flat position:
-    // sub = pos div dsub, in-subvector pos = pos mod dsub.
-    def cbArr: Array[Array[Array[Double]]] = {
-      val ksA = initRows.length
+    def cbArr: Array[Array[Array[Double]]] =
       Array.tabulate(m)(s => Array.tabulate(ksA)(c => cents((s, c)).toArray))
-    }
 
     for (_ <- 1 to iters) {
-      // (sub, code, pos, xq) structs from ONE kernel call per row —
-      // argmin and the floor(x·Q + ½) quantization both inside it (same
-      // rationale as the ivf round: projection collapse cannot
-      // re-evaluate the assignment per exploded element)
-      val sums = withoutAqe(spark)(units
-        .select(explode(graft.functions.Vec.pq_round_rows(col("unit"),
-          cbArr, PqQuant)).as("r"))
-        .select(col("r.sub").as("sub"), col("r.code").as("code"),
-          col("r.pos").as("pos"), col("r.xq").as("xq"))
-        .groupBy(col("sub"), col("code"), col("pos"))
-        .agg(sum(col("xq").cast("decimal(38,0)")).as("s"),
-          count(lit(1)).as("c"))
-        .collect())
-      val byCell = sums.groupBy(r => (r.getInt(0), r.getInt(1)))
+      val cb = cbArr
+      // group of (sub, code) = sub·ks + code; slot = group·dsub + pos
+      val acc = lloydSums(units, m * ksA, dsub, dim, PqQuant) { v =>
+        val codes = graft.functions.Vec.pqCodes(v, cb)
+        Array.tabulate(m)(s => s * ksA + codes.getInt(s))
+      }
+      requireDim(acc, dim, "buildPqCodebooks: embeddings must share dimension")
+      def slot(key: (Int, Int)) = key._1 * ksA + key._2
       cents = cents.map { case (key, old) =>
-        byCell.get(key) match {
-          case None => key -> old // empty cell keeps its centroid
-          case Some(rows) =>
-            val sv = new Array[Double](dsub)
-            rows.foreach { r =>
-              // S/(c·Q): S exact (decimal over BIGINT-range values), c·Q
-              // exact in double below 2^53 — one division, same on every
-              // engine
-              sv(r.getInt(2)) =
-                r.getDecimal(3).doubleValue / (r.getLong(4).toDouble * PqQuant)
-            }
-            key -> sv.toSeq
-        }
+        val c = acc.counts(slot(key))
+        if (c == 0) key -> old // empty cell keeps its centroid
+        // S/(c·Q): S exact, c·Q exact in double below 2^53 — one
+        // division, same on every engine
+        else key -> Seq.tabulate(dsub)(p =>
+          acc.sum(slot(key) * dsub + p).doubleValue / (c.toDouble * PqQuant))
       }
       exacts = exacts.map { case (key, old) =>
-        byCell.get(key) match {
-          case None => key -> old // empty cell keeps its exact pair too
-          case Some(rows) =>
-            val sv = new Array[Long](dsub)
-            var cq = 1L
-            rows.foreach { r =>
-              // longValueExact: |S| ≤ c·2³², so this only throws past
-              // ~2²⁰ members per cell × full-scale components — loud,
-              // not a silently rounded statistic
-              sv(r.getInt(2)) = r.getDecimal(3).longValueExact()
-              cq = r.getLong(4)
-            }
-            key -> ((sv.toSeq, cq))
-        }
+        val c = acc.counts(slot(key))
+        if (c == 0) key -> old // empty cell keeps its exact pair too
+        // longValueExact: |S| ≤ c·2³², so this only throws past
+        // ~2²⁰ members per cell × full-scale components — loud, not a
+        // silently rounded statistic
+        else key -> ((Seq.tabulate(dsub)(p =>
+          acc.sum(slot(key) * dsub + p).longValueExact()), c))
       }
     }
     // subs returns LAZY (callers only slice query rows out of it, or

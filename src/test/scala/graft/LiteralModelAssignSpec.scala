@@ -1,6 +1,8 @@
 package graft
 
 import graft.operators.SimilarityOps
+import org.apache.spark.GraftTestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -111,10 +113,36 @@ class LiteralModelAssignSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got == legacy)
   }
 
-  test("ivf Lloyd-round tuples reproduce the exploded sum form") {
+  /** `body`'s result and the number of Spark jobs it ran. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    GraftTestBus.drain(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      GraftTestBus.drain(sc)
+      (r, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Every populated slot of a fold as (group, pos) -> (sum, count). */
+  private def foldMap(acc: SimilarityOps.LloydSums, groups: Int,
+      width: Int): Map[(Int, Int), (java.math.BigInteger, Long)] =
+    (for {
+      g <- 0 until groups if acc.counts(g) > 0
+      p <- 0 until width
+    } yield (g, p) -> ((acc.sum(g * width + p), acc.counts(g)))).toMap
+
+  test("ivf Lloyd fold's sums and counts equal the exploded sum form") {
     val u = units
     val (_, cents) = SimilarityOps.buildIvfIndex(u)
     val centsArr = SimilarityOps.collectCents(cents)
+    val dim = centsArr(0).length
     val legacy = SimilarityOps.ivfAssign(u, cents)
       .select(col("cell"), posexplode(col("unit")))
       .groupBy(col("cell"), col("pos"))
@@ -122,14 +150,66 @@ class LiteralModelAssignSpec extends AnyFunSuite with BeforeAndAfterAll {
         .cast("decimal(38,0)")).as("s"), count(lit(1)).as("c"))
       .collect().map(r => (r.getInt(0), r.getInt(1)) ->
         ((r.getDecimal(2).toBigInteger, r.getLong(3)))).toMap
-    val got = u
-      .select(explode(graft.functions.Vec.ivf_round_rows(col("unit"),
-        centsArr, SimilarityOps.IvfQuant)).as("r"))
-      .groupBy(col("r.cell").as("cell"), col("r.pos").as("pos"))
-      .agg(sum(col("r.xq").cast("decimal(38,0)")).as("s"),
-        count(lit(1)).as("c"))
-      .collect().map(r => (r.getInt(0), r.getInt(1)) ->
-        ((r.getDecimal(2).toBigInteger, r.getLong(3)))).toMap
-    assert(got == legacy)
+    val acc = SimilarityOps.lloydSums(u, centsArr.length, dim, dim,
+      SimilarityOps.IvfQuant)(v =>
+      Array(graft.functions.Vec.ivfCell(v, centsArr)))
+    assert(foldMap(acc, centsArr.length, dim) == legacy)
+    assert(acc.minLen == dim && acc.maxLen == dim)
+  }
+
+  test("pq Lloyd fold's sums and counts equal the exploded " +
+      "(sub, code, pos) sum form") {
+    val u = units
+    val (_, cb) = SimilarityOps.buildPqCodebooks(u)
+    val cbArr = SimilarityOps.collectCodebook(cb)
+    val (m, ks, dsub) = (cbArr.length, cbArr(0).length, cbArr(0)(0).length)
+    val legacy = u
+      .select(graft.functions.Vec.pq_codes(col("unit"), cbArr).as("codes"),
+        posexplode(col("unit")))
+      .select((col("pos") / dsub).cast("int").as("sub"),
+        col("pos").mod(dsub).as("p"), col("col"), col("codes"))
+      .select(col("sub"), element_at(col("codes"), col("sub") + 1)
+        .as("code"), col("p"), col("col"))
+      .groupBy(col("sub"), col("code"), col("p"))
+      .agg(sum(floor(col("col") * lit(SimilarityOps.PqQuant) + lit(0.5))
+        .cast("decimal(38,0)")).as("s"), count(lit(1)).as("c"))
+      .collect().map(r => (r.getInt(0) * ks + r.getInt(1), r.getInt(2)) ->
+        ((r.getDecimal(3).toBigInteger, r.getLong(4)))).toMap
+    val acc = SimilarityOps.lloydSums(u, m * ks, dsub, m * dsub,
+      SimilarityOps.PqQuant) { v =>
+      val codes = graft.functions.Vec.pqCodes(v, cbArr)
+      Array.tabulate(m)(s => s * ks + codes.getInt(s))
+    }
+    assert(foldMap(acc, m * ks, dsub) == legacy)
+  }
+
+  test("Lloyd partials past Long.MaxValue merge to the exact sum") {
+    val big = java.math.BigInteger.valueOf(Long.MaxValue)
+    def partial(xs: Long*): SimilarityOps.LloydSums = {
+      val p = new SimilarityOps.LloydSums(1, 2)
+      xs.foreach { x => p.add(0, x); p.add(1, -x) }
+      p
+    }
+    val a = partial(Long.MaxValue, Long.MaxValue, 5L)
+    assert(a.sum(0) == big.shiftLeft(1).add(java.math.BigInteger.valueOf(5)))
+    val b = partial(Long.MaxValue, 7L)
+    val merged = a.merge(b)
+    val want = big.multiply(java.math.BigInteger.valueOf(3))
+      .add(java.math.BigInteger.valueOf(12))
+    assert(merged.sum(0) == want)
+    assert(merged.sum(1) == want.negate())
+  }
+
+  test("each Lloyd round is one job and the trainers leave the session " +
+      "conf untouched") {
+    val u = units
+    val conf0 = spark.conf.getAll
+    val (_, ivfJobs) = jobsOf(SimilarityOps.buildIvfIndex(u,
+      checkpointCells = false))
+    assert(ivfJobs == 1 + SimilarityOps.IvfIters)
+    assert(spark.conf.getAll == conf0)
+    val (_, pqJobs) = jobsOf(SimilarityOps.buildPqCodebooks(u))
+    assert(pqJobs == 1 + SimilarityOps.PqIters)
+    assert(spark.conf.getAll == conf0)
   }
 }
