@@ -4,6 +4,7 @@ import graft.chain.{ChainFixture, ChainOps}
 import graft.store.GraftStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.AccumulatorV2
 
 /** Batch access to chain data by height range (OP-SRC-2/3): the test/dev
   * implementation replays the deterministic fixture; a production
@@ -102,7 +103,13 @@ object Backfill {
     * Fallback for stores without the key: coalesced max across blocks,
     * else transactions, else transfers, else -1. */
   def maxIngestedHeight(spark: SparkSession, store: GraftStore): Long =
-    store.currentMeta().get(store.metaKey("tip")) match {
+    maxIngestedHeight(spark, store, store.currentMeta())
+
+  /** [[maxIngestedHeight]] from an already-read snapshot meta, so a caller
+    * can take the tip and the `tiphash` beside it from one snapshot. */
+  private[etl] def maxIngestedHeight(spark: SparkSession, store: GraftStore,
+      meta: Map[String, String]): Long =
+    meta.get(store.metaKey("tip")) match {
       case Some(t) => t.toLong
       case None =>
         val b = store.read(spark, "blocks").agg(max("number")).head().get(0)
@@ -113,14 +120,22 @@ object Backfill {
         Seq(b, t, tr).collectFirst { case n: Long => n }.getOrElse(-1L)
     }
 
-  /** Ingest heights [from, to] from the source. Returns ingested count.
+  /** Ingest heights [from, to] from the source. Returns the number of
+    * heights the commit covers: up to the committed `tip`.
     *
     * `watchTokens` maps contract type → watched addresses (reference
     * `--watch-tokens`, export.rs:88-114); each type dispatches to its
     * [[graft.chain.ContractRegistry]] decoder and the per-type extractions
     * union into one transfers table. `modules` gates which tables are
     * written at all (reference `--modules`, main.rs:52-54): a
-    * transfers-only run stages no blocks/transactions leaves. */
+    * transfers-only run stages no blocks/transactions leaves.
+    *
+    * The commit's `tip` and `tiphash` come from the highest block row the
+    * blocks stage actually wrote, not from `to`: a node that answers null
+    * above some height (a lagging replica, a chain that shrank) leaves
+    * the cursor on the last stored block, and a range that stages no
+    * block leaves both keys as they were. A run that stages no blocks
+    * table commits `tip = to` and clears `tiphash`. */
   def run(
       spark: SparkSession,
       source: ChainSource,
@@ -135,50 +150,120 @@ object Backfill {
     val wantTxs = modules.contains("transactions")
     val wantTransfers =
       modules.contains("token_transfers") && watchTokens.nonEmpty
-    // One wire pass serves every staged table (each `stage` is its own
-    // Spark job — the source materializes the range once behind
-    // fetchRange). A blocks-only run skips tx bodies entirely.
+    val wantBlocks = modules.contains("blocks")
+    // One wire pass serves every staged table: the source materializes the
+    // range once behind fetchRange, and the stages below read it
+    // concurrently. A blocks-only run skips tx bodies entirely.
     val fetch =
       if (wantTxs || wantTransfers) source.fetchRange(spark, from, to)
       else ChainSource.RangeFetch(source.blocks(spark, from, to), null,
         () => ())
-    try {
+    val staged = new TipAccumulator
+    spark.sparkContext.register(staged)
+    val tip = try {
       val blocks = fetch.blocks
       val txsRaw = fetch.transactions
-      val txLeaves =
-        if (wantTxs)
-          store.stage("transactions", ChainOps.addressFilter(
-            ChainOps.normalizeTxs(txsRaw), addressFilter))
-        else Nil
+      val txStage = Option.when(wantTxs)(() =>
+        store.stage("transactions", ChainOps.addressFilter(
+          ChainOps.normalizeTxs(txsRaw), addressFilter)))
       // transfers are extracted from UNFILTERED txs (etl.rs:193-204: the
       // address filter applies to the transactions table only)
-      val transferLeaves =
-        if (wantTransfers) {
-          val norm = ChainOps.normalizeTxs(txsRaw)
-          // receipts per MATCHING tx only (etl.rs:353-360): the OP-FIL-8
-          // selector runs engine-side over the already-fetched txs and
-          // only the hits' hashes reach the receipt lookup
-          val matching = watchTokens.toSeq.sortBy(_._1)
-            .map { case (ctype, addrs) =>
-              val d = graft.chain.ContractRegistry(ctype)
-              norm.filter(col("to_addr").isin(addrs: _*) &&
-                  d.isCall(col("input")))
-                .select(col("hash"))
-            }
-            .reduce(_.unionByName(_)).distinct()
-          val receipts = source.receiptsFor(spark, from, to, matching)
-          val transfers = watchTokens.toSeq.sortBy(_._1)
-            .map { case (ctype, addrs) =>
-              ChainOps.tokenTransfers(norm, blocks, receipts, addrs, ctype)
-            }
-            .reduce(_.unionByName(_))
-          store.stage("token_transfers", transfers)
-        } else Nil
-      val blockLeaves =
-        if (modules.contains("blocks")) store.stage("blocks", blocks) else Nil
-      store.commit(blockLeaves ++ txLeaves ++ transferLeaves,
-        meta = Map("tip" -> to.toString))
+      val transferStage = Option.when(wantTransfers) { () =>
+        val norm = ChainOps.normalizeTxs(txsRaw)
+        // receipts per MATCHING tx only (etl.rs:353-360): the OP-FIL-8
+        // selector runs engine-side over the already-fetched txs and
+        // only the hits' hashes reach the receipt lookup
+        val matching = watchTokens.toSeq.sortBy(_._1)
+          .map { case (ctype, addrs) =>
+            val d = graft.chain.ContractRegistry(ctype)
+            norm.filter(col("to_addr").isin(addrs: _*) &&
+                d.isCall(col("input")))
+              .select(col("hash"))
+          }
+          .reduce(_.unionByName(_)).distinct()
+        val receipts = source.receiptsFor(spark, from, to, matching)
+        val transfers = watchTokens.toSeq.sortBy(_._1)
+          .map { case (ctype, addrs) =>
+            ChainOps.tokenTransfers(norm, blocks, receipts, addrs, ctype)
+          }
+          .reduce(_.unionByName(_))
+        store.stage("token_transfers", transfers)
+      }
+      val blockStage = Option.when(wantBlocks)(() =>
+        store.stage("blocks", staged.tap(blocks)))
+      val leaves = concurrently(
+        Seq(txStage, transferStage, blockStage).flatten).flatten
+      val (committed, meta) =
+        if (!wantBlocks) (to, Map("tip" -> to.toString, "tiphash" -> ""))
+        else staged.value match {
+          case Some((n, h)) => (n, Map("tip" -> n.toString, "tiphash" -> h))
+          case None => (from - 1, Map.empty[String, String])
+        }
+      store.commit(leaves, meta = meta)
+      committed
     } finally fetch.release()
-    to - from + 1
+    tip - from + 1
+  }
+
+  /** Runs each body on its own driver thread and returns their results in
+    * order. Every thread is joined before anything else happens; then the
+    * first failure in body order is rethrown as the body threw it. The
+    * threads inherit the caller's local properties (job group, SQL
+    * execution, scheduler pool), so a caller's `cancelJobGroup` and job
+    * attribution reach every job they run. An interrupt while joining is
+    * held until every thread has finished, then thrown. */
+  private def concurrently[T](bodies: Seq[() => T]): Seq[T] = {
+    val results = new Array[Either[Throwable, T]](bodies.size)
+    val threads = bodies.zipWithIndex.map { case (body, i) =>
+      val t = new Thread(() =>
+        results(i) =
+          try Right(body())
+          catch { case e: Throwable => Left(e) },
+        s"graft-backfill-stage-$i")
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+    var interrupted = false
+    threads.foreach { t =>
+      while (t.isAlive)
+        try t.join()
+        catch { case _: InterruptedException => interrupted = true }
+    }
+    results.collectFirst { case Left(e) => e }.foreach(e => throw e)
+    if (interrupted) throw new InterruptedException(
+      "interrupted while staging; every stage finished, nothing committed")
+    results.toSeq.map(_.toOption.get)
+  }
+
+  /** Highest (number, hash) among the block rows a stage writes. Max by
+    * number is idempotent, so a retried or speculative task cannot
+    * change it. */
+  private final class TipAccumulator
+      extends AccumulatorV2[(Long, String), Option[(Long, String)]] {
+    private var tip: Option[(Long, String)] = None
+    override def isZero: Boolean = tip.isEmpty
+    override def copy(): TipAccumulator = {
+      val a = new TipAccumulator
+      a.tip = tip
+      a
+    }
+    override def reset(): Unit = tip = None
+    override def add(v: (Long, String)): Unit =
+      if (tip.forall(_._1 < v._1)) tip = Some(v)
+    override def merge(
+        other: AccumulatorV2[(Long, String), Option[(Long, String)]]): Unit =
+      other.value.foreach(add)
+    override def value: Option[(Long, String)] = tip
+
+    /** `blocks` with every written row's (number, hash) added here. */
+    def tap(blocks: DataFrame): DataFrame = {
+      val acc = this
+      val seen = udf { (n: java.lang.Long, h: String) =>
+        if (n != null) acc.add((n, h))
+        h
+      }.asNondeterministic()
+      blocks.withColumn("hash", seen(col("number"), col("hash")))
+    }
   }
 }

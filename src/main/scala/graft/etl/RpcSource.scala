@@ -83,13 +83,13 @@ final class RpcSource(
     case _ => false // an object = still syncing
   }
 
-  /** One executor-side fetch plan shared by the three table methods:
-    * split [from, to] across partitions, batch-call inside each. */
   /** Height range as a partitioned Dataset[Long] — the fetch fan-out's
-    * unit of distribution. */
+    * unit of distribution, shared by the table methods: [from, to] split
+    * into at most `fetchPartitions` contiguous chunks by the range itself,
+    * so the fetch plan has no exchange and no stage before it. */
   private def heightsDs(spark: SparkSession, from: Long, to: Long) =
-    spark.range(from, to + 1)
-      .repartition(math.min(fetchPartitions.toLong, to - from + 1).toInt)
+    spark.range(from, to + 1, 1,
+      math.min(fetchPartitions.toLong, to - from + 1).toInt)
       .as(Encoders.scalaLong)
 
   import RpcSource.closeOnTaskEnd

@@ -34,7 +34,8 @@ object Tail {
   /** Rollback all heights >= `height` across the three tables by
     * rewriting only the buckets that contain them (OP-DEL-1/OP-DEL-2).
     * The `tip` metadata moves to height-1 in the same atomic commit, so
-    * the O(1) resume cursor never points above live data. */
+    * the O(1) resume cursor never points above live data; `tiphash` is
+    * cleared there, so the next head reads the new tip's hash back. */
   def rollbackFrom(spark: SparkSession, store: GraftStore,
       height: Long): Unit = {
     val (adds, drops) = store.Tables.map { table =>
@@ -52,19 +53,22 @@ object Tail {
       }
     }.unzip
     store.commit(adds.flatten, drops.flatten,
-      meta = Map("tip" -> (height - 1).toString))
+      meta = Map("tip" -> (height - 1).toString, "tiphash" -> ""))
   }
 
-  /** Process one new head; returns the action taken. Driver-side point
-    * lookups (stored tip hash) are single-row reads on the control path —
-    * the data path stays fully distributed. */
+  /** Process one new head; returns the action taken. The stored tip and
+    * its hash come from one snapshot's metadata (`tip`, `tiphash`), so a
+    * contiguous head runs no Spark job before its fetch; a store without
+    * `tiphash` (written before the key existed, or just rolled back)
+    * reads the tip block's hash back with one single-row read. */
   def processHead(
       spark: SparkSession,
       store: GraftStore,
       source: ChainSource,
       head: Head,
       watchTokens: Map[String, Seq[String]] = WatchTokens.Default): Action = {
-    val last = Backfill.maxIngestedHeight(spark, store)
+    val meta = store.currentMeta()
+    val last = Backfill.maxIngestedHeight(spark, store, meta)
     if (head.number <= last) return Skipped
 
     // Parent-linkage check against the stored chain (OP-STR-3). The block
@@ -75,8 +79,12 @@ object Tail {
     // reorg below the stored tip arriving together with later heads would
     // be appended on top of stale canonical blocks.
     if (last >= 0) {
-      val storedTipHash = store.readHeightRange(spark, "blocks", last, last)
-        .filter(col("number") === last).select("hash").head().getString(0)
+      // collect, not head: one job however the tip's leaf is split into
+      // files (head's take would scan partitions in rounds)
+      val storedTipHash = meta.getOrElse(store.metaKey("tiphash"),
+        store.readHeightRange(spark, "blocks", last, last)
+          .filter(col("number") === last).select("hash").collect()
+          .head.getString(0))
       val linked =
         if (head.number == last + 1) head.parent_hash == storedTipHash
         else {

@@ -135,8 +135,9 @@ final class GraftStore(val root: String, val bucketSize: Long = 10000L,
   def currentLeaves(): Seq[Leaf] = currentManifest().leaves
 
   /** Snapshot-scoped key/value metadata, committed atomically WITH the
-    * leaves — e.g. the ingest tip height ([[graft.etl.Backfill]] key
-    * `tip`): readers get an O(1) resume cursor / maturity watermark that
+    * leaves — e.g. the ingest tip height and its block hash
+    * ([[graft.etl.Backfill]] keys `tip` and `tiphash`): readers get an
+    * O(1) resume cursor / maturity watermark / parent-linkage anchor that
     * can never run ahead of or behind the data it describes. Keys are
     * namespaced by [[tablesPrefix]] like tables. */
   def currentMeta(): Map[String, String] = currentManifest().meta
@@ -428,7 +429,8 @@ final class GraftStore(val root: String, val bucketSize: Long = 10000L,
     }.map(DataType.fromJson(_).asInstanceOf[StructType].toNullable)
 
   /** One atomic commit across tables; `meta` entries merge into (and
-    * override) the snapshot metadata in the same atomic swap.
+    * override) the snapshot metadata in the same atomic swap. An entry
+    * with an empty value removes its key.
     *
     * Optimistic-concurrency guard: every drop must still be live at commit
     * time. A caller that computed its drop list from an older snapshot
@@ -481,7 +483,8 @@ final class GraftStore(val root: String, val bucketSize: Long = 10000L,
       val staged = adds.flatMap(l =>
         Option(pending.get(l.dir)).map(l.dir -> _)).toMap
       publish(kept ++ adds,
-        m.meta ++ meta.map { case (k, v) => metaKey(k) -> v },
+        (m.meta ++ meta.map { case (k, v) => metaKey(k) -> v })
+          .filter(_._2.nonEmpty),
         m.stats ++ staged.map { case (d, st) => d -> st.stats },
         schemasAfter(m, kept, adds, staged))
       adds.foreach(l => pending.remove(l.dir))

@@ -2,9 +2,12 @@ package graft
 
 
 import graft.chain.{ChainFixture, ChainOps}
-import graft.etl.{Backfill, FixtureSource, Tail}
+import graft.etl.{Backfill, ChainSource, FixtureSource, Tail}
 import graft.store.GraftStore
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.{GraftTestBus, Partition, TaskContext}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -341,5 +344,59 @@ class EtlSpec extends AnyFunSuite with BeforeAndAfterAll
     val kept = store.read(spark, "blocks")
     assert(kept.agg(min("number")).head().getLong(0) >= 100L)
     assert(kept.agg(max("number")).head().getLong(0) == 199L)
+  }
+
+  test("a stage that fails rethrows its own exception, after every stage " +
+      "has finished, and commits nothing") {
+    import scala.jdk.CollectionConverters._
+    val store = newStore()
+    val fixture = new FixtureSource(fx)
+    Backfill.run(spark, fixture, store, 0, 99)
+    val boom = new IllegalStateException("receipt lookup failed")
+    // the fixture, except that its receipts frame throws when it executes
+    val failing = new ChainSource {
+      override def tipHeight(s: SparkSession): Long = fixture.tipHeight(s)
+      override def blocks(s: SparkSession, from: Long, to: Long): DataFrame =
+        fixture.blocks(s, from, to)
+      override def transactions(s: SparkSession, from: Long,
+          to: Long): DataFrame = fixture.transactions(s, from, to)
+      override def receipts(s: SparkSession, from: Long,
+          to: Long): DataFrame = {
+        val rdd = new RDD[Row](s.sparkContext, Nil) {
+          override protected def getPartitions: Array[Partition] = throw boom
+          override def compute(p: Partition, c: TaskContext): Iterator[Row] =
+            Iterator.empty
+        }
+        s.createDataFrame(rdd, fixture.receipts(s, from, to).schema)
+      }
+    }
+    val snapshots = store.snapshots()
+    val meta = store.currentMeta()
+    val sc = spark.sparkContext
+    GraftTestBus.drain(sc)
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        starts.add(e.time)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val thrown = intercept[Throwable](
+        Backfill.run(spark, failing, store, 100, 149))
+      val returnedAt = System.currentTimeMillis()
+      assert(thrown eq boom, s"expected the stage's own exception: $thrown")
+      // every stage thread has finished and none of its jobs still runs
+      assert(!Thread.getAllStackTraces.keySet.asScala
+        .exists(t => t.isAlive && t.getName.startsWith("graft-backfill")))
+      assert(sc.statusTracker.getActiveJobIds().isEmpty)
+      GraftTestBus.drain(sc)
+      assert(starts.asScala.nonEmpty &&
+        starts.asScala.forall(_ <= returnedAt),
+        "a job started after the failed backfill returned")
+    } finally sc.removeSparkListener(listener)
+    assert(store.snapshots() == snapshots, "the failed backfill committed")
+    assert(store.currentMeta() == meta)
+    assert(store.read(spark, "blocks").count() == 100)
+    assert(sc.getPersistentRDDs.isEmpty)
   }
 }

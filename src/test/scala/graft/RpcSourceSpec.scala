@@ -4,8 +4,11 @@ import java.nio.charset.StandardCharsets
 import java.util.concurrent.atomic.AtomicInteger
 
 import graft.chain.ChainFixture
-import graft.etl.{Backfill, FixtureSource, RpcCodec, RpcSource}
+import graft.etl.{Backfill, ChainSource, FixtureSource, RpcCodec, RpcSource,
+  Tail}
 import graft.store.GraftStore
+import org.apache.spark.GraftTestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -70,6 +73,10 @@ class RpcSourceSpec extends AnyFunSuite with BeforeAndAfterAll
     case None => fx.blocks
   }
 
+  /** When set, the node answers null for every block above this height —
+    * a lagging replica. */
+  @volatile private var lagTip: Option[Long] = None
+
   private def handle(req: JValue): JValue = {
     import RpcCodec._
     val id = req \ "id"
@@ -89,7 +96,7 @@ class RpcSourceSpec extends AnyFunSuite with BeforeAndAfterAll
         blockReqs.incrementAndGet()
         val n = hexToLong(params.head.asInstanceOf[JString].s)
         val full = params(1).asInstanceOf[JBool].value
-        viewBlocks.find(_.number == n) match {
+        viewBlocks.find(b => b.number == n && lagTip.forall(n <= _)) match {
           case None => JNull
           case Some(b) => encodeBlock(b,
             fx.transactions.filter(t =>
@@ -677,5 +684,151 @@ class RpcSourceSpec extends AnyFunSuite with BeforeAndAfterAll
         s"table $t differs between WS and fixture ingest")
     }
     assert(viaWs.currentMeta() == viaFx.currentMeta(), "tip meta differs")
+  }
+
+  // ---- the live head: fetch plan, jobs before the fetch, tip metadata ----
+
+  /** `inner` recording how many jobs had started when a backfill asked it
+    * for its range — the jobs a head runs before its fetch. */
+  private final class FetchProbe(inner: ChainSource, started: () => Int)
+      extends ChainSource {
+    @volatile var jobsBeforeFetch: Option[Int] = None
+    override def tipHeight(s: SparkSession): Long = inner.tipHeight(s)
+    override def blocks(s: SparkSession, from: Long, to: Long): DataFrame =
+      inner.blocks(s, from, to)
+    override def transactions(s: SparkSession, from: Long,
+        to: Long): DataFrame = inner.transactions(s, from, to)
+    override def receipts(s: SparkSession, from: Long, to: Long): DataFrame =
+      inner.receipts(s, from, to)
+    override def receiptsFor(s: SparkSession, from: Long, to: Long,
+        txHashes: DataFrame): DataFrame =
+      inner.receiptsFor(s, from, to, txHashes)
+    override def fetchRange(s: SparkSession, from: Long, to: Long)
+        : ChainSource.RangeFetch = {
+      jobsBeforeFetch = Some(started())
+      inner.fetchRange(s, from, to)
+    }
+  }
+
+  /** One `processHead` call under this thread's job group, through a
+    * [[FetchProbe]] over the loopback node: its action, the job group of
+    * every job it ran, and the jobs that ran before its fetch. */
+  private def headUnderGroup(store: GraftStore, head: Tail.Head)
+      : (Tail.Action, Seq[String], Option[Int]) = {
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    GraftTestBus.drain(sc)
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse("<none>"))
+    }
+    val probe = new FetchProbe(src,
+      () => { GraftTestBus.drain(sc); groups.size })
+    sc.addSparkListener(listener)
+    sc.setJobGroup("rpc-head-spec", "one processHead call")
+    try {
+      val action = Tail.processHead(spark, store, probe, head)
+      GraftTestBus.drain(sc)
+      (action, groups.asScala.toSeq, probe.jobsBeforeFetch)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  private def canonicalHead(n: Int): Tail.Head =
+    Tail.Head(n.toLong, fx.blocks(n).hash, fx.blocks(n).parent_hash)
+
+  /** Rewrite the current snapshot file without its `tiphash` line — the
+    * manifest a store written before the key existed carries. */
+  private def stripTipHash(store: GraftStore): Unit = {
+    import scala.jdk.CollectionConverters._
+    val snap = java.nio.file.Paths.get(store.root)
+      .resolve(store.currentSnapshot().get)
+    java.nio.file.Files.write(snap,
+      java.nio.file.Files.readAllLines(snap).asScala
+        .filterNot(_.startsWith("#meta\ttiphash\t")).asJava)
+  }
+
+  test("head fetch plan: a height range reaches the node with no exchange " +
+      "before it, one height or many") {
+    Seq((5L, 5L), (0L, 59L)).foreach { case (from, to) =>
+      val fetch = src.fetchRange(spark, from, to)
+      try Seq(src.blocks(spark, from, to), fetch.blocks, fetch.transactions)
+        .foreach { df =>
+          val plan = df.queryExecution.executedPlan.toString
+          assert(!plan.contains("Exchange"),
+            s"[$from, $to] fetch plan has an exchange:\n$plan")
+        }
+      finally fetch.release()
+    }
+  }
+
+  test("live head: with tiphash in the manifest no job runs before the " +
+      "fetch; without it one read job does and the rows are the same; " +
+      "every job carries the caller's job group") {
+    failures.set(0)
+    val withKey = new GraftStore(tempDir("graft-rpc-head-key"))
+    val legacy = new GraftStore(tempDir("graft-rpc-head-legacy"))
+    Seq(withKey, legacy).foreach(Backfill.run(spark, src, _, 0, 29))
+    assert(withKey.currentMeta()(withKey.metaKey("tiphash")) ==
+      fx.blocks(29).hash)
+    stripTipHash(legacy)
+    assert(!legacy.currentMeta().contains(legacy.metaKey("tiphash")))
+
+    val (a1, groups1, before1) = headUnderGroup(withKey, canonicalHead(30))
+    val (a2, groups2, before2) = headUnderGroup(legacy, canonicalHead(30))
+    assert(a1 == Tail.Appended(30, 30) && a2 == Tail.Appended(30, 30))
+    assert(before1.contains(0), s"jobs before the fetch: $before1")
+    assert(before2.contains(1), s"jobs before the legacy fetch: $before2")
+    Seq(groups1, groups2).foreach { g =>
+      assert(g.nonEmpty && g.forall(_ == "rpc-head-spec"),
+        s"job groups of the call: $g")
+    }
+    Seq("blocks", "transactions", "token_transfers").foreach { t =>
+      assert(rows(withKey.read(spark, t)) == rows(legacy.read(spark, t)),
+        s"table $t differs between the two heads")
+    }
+    // the legacy store regains the key with its next append
+    assert(legacy.currentMeta()(legacy.metaKey("tiphash")) ==
+      fx.blocks(30).hash)
+  }
+
+  test("live head: the committed tiphash is the stored block's, not the " +
+      "announced head's") {
+    failures.set(0)
+    val store = new GraftStore(tempDir("graft-rpc-head-announced"))
+    Backfill.run(spark, src, store, 0, 29)
+    // the announcement links to the stored tip but names a hash the node
+    // does not serve at that height (it reorged after announcing)
+    val announced = Tail.Head(30L, "ab" * 32, fx.blocks(29).hash)
+    assert(Tail.processHead(spark, store, src, announced) ==
+      Tail.Appended(30, 30))
+    val stored = store.readHeightRange(spark, "blocks", 30, 30)
+      .filter(org.apache.spark.sql.functions.col("number") === 30L)
+      .select("hash").collect().map(_.getString(0)).toSeq
+    assert(stored == Seq(fx.blocks(30).hash))
+    assert(store.currentMeta()(store.metaKey("tiphash")) == stored.head)
+  }
+
+  test("a node with no block at the range's end leaves the cursor on the " +
+      "last stored block, and the next head appends it") {
+    failures.set(0)
+    val store = new GraftStore(tempDir("graft-rpc-lagging"))
+    lagTip = Some(29L)
+    val n = try Backfill.run(spark, src, store, 0, 30) finally lagTip = None
+    assert(n == 30L, s"heights committed: $n")
+    val meta = store.currentMeta()
+    assert(meta(store.metaKey("tip")) == "29")
+    assert(meta(store.metaKey("tiphash")) == fx.blocks(29).hash)
+    assert(Tail.processHead(spark, store, src, canonicalHead(30)) ==
+      Tail.Appended(30, 30))
+    val blocks = store.read(spark, "blocks")
+    assert(blocks.count() == 31)
+    assert(graft.chain.ChainOps.continuityGaps(blocks).count() == 0)
+    assert(store.currentMeta()(store.metaKey("tip")) == "30")
   }
 }
