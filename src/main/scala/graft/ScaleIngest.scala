@@ -155,7 +155,7 @@ object ScaleIngest {
     // round 12: the single-pass Backfill composition — ONE
     // getBlockByNumber(full) pass materializes blocks AND transactions
     // (fetchRange), and receipts are fetched per SELECTOR-MATCHING tx
-    // only (receiptsFor), reference semantics etl.rs:186-207/353-360.
+    // only (withReceiptStatus), reference semantics etl.rs:186-207/353-360.
     // Round-trips here vs the blocks_p16+txs_p16+receipts_p16 sum above
     // is the over-fetch fix, observed server-side.
     run("ingest_single_pass_p16", 16, 64) { src =>
@@ -168,7 +168,8 @@ object ScaleIngest {
           col("to_addr") === ChainFixture.Watched &&
             graft.chain.ContractRegistry("cbc20").isCall(col("input")))
           .select("hash")
-        val r = src.receiptsFor(spark, 0, nBlocks - 1, matching).count()
+        val r = src.withReceiptStatus(spark, 0, nBlocks - 1, matching)
+          .count()
         b + t + r
       } finally f.release()
     }

@@ -1,10 +1,8 @@
 package graft.chain
 
-import graft.functions.Cbc20
-import graft.functions.Cbc20.cbc20_decode
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 
 /** Chain-domain operators: the ETL dataflow and view/verify queries of the
   * reference, re-expressed as declarative Spark plans (SURVEY §2, §3).
@@ -42,13 +40,16 @@ object ChainOps {
       col("to_addr").isin(addresses: _*))
 
   /** The token-transfer extraction pipeline (etl.rs:346-384):
-    * OP-FIL-8 selector filter → OP-UDTF-1 decode (native Generator) →
-    * OP-JOIN-2 receipt-status join → OP-JOIN-1/3 created_at propagation.
+    * OP-FIL-8 selector filter → OP-JOIN-1/3 block timestamp →
+    * OP-JOIN-2 receipt-status join → OP-UDTF-1 decode (native Generator).
     *
     * Output schema matches the reference's token_transfers DDL
     * (sqlite3.rs:247-261). `receipts` and the block-timestamp side are
     * broadcast: receipts are fetched per matching tx in the reference
     * (etl.rs:357-360) so the join is dimension-sized by construction.
+    * The ETL runs the same [[transferCandidates]] and [[decodeTransfers]]
+    * with the status and timestamp its source attaches in the fetch
+    * partition instead of these joins.
     */
   def tokenTransfers(
       txs: DataFrame,
@@ -56,30 +57,63 @@ object ChainOps {
       receipts: DataFrame,
       watched: Seq[String] = Seq(ChainFixture.Watched),
       contractType: String = "cbc20"): DataFrame = {
-    val decoder = ContractRegistry(contractType)
-    val candidates = txs
-      .filter(col("to_addr").isin(watched: _*) &&
-        decoder.isCall(col("input")))
-      .select(col("hash").as("tx_hash"), col("block_number"),
-        col("to_addr").as("address"), col("from_addr"), col("input"))
+    val watch = Seq(ContractRegistry(contractType) -> watched)
+    decodeTransfers(withReceiptOk(
+      transferCandidates(withBlockTimestamp(txs, blocks), watch), receipts),
+      watch)
+  }
 
-    val decoded = candidates.select(
-      col("tx_hash"), col("block_number"), col("address"),
-      decoder.decode(col("from_addr"), col("input")))
+  /** `txs` with each row's block `timestamp` appended, by a broadcast left
+    * join on the block number (null where the block is absent). */
+  def withBlockTimestamp(txs: DataFrame, blocks: DataFrame): DataFrame =
+    appendByKey(txs, blocks.select(col("number").as("block_number"),
+      col("timestamp")), "block_number")
 
-    val statusCol = receipts
-      .select(col("tx_hash"), col("status").as("receipt_ok"))
-    val blockTs = blocks.select(col("number").as("block_number"),
-      to_timestamp(from_unixtime(col("timestamp"))).as("created_at"))
+  /** `candidates` with a `receipt_ok` column appended: the receipt status
+    * of its `hash`, by a broadcast left join (null where no receipt
+    * exists). */
+  def withReceiptOk(candidates: DataFrame, receipts: DataFrame): DataFrame =
+    appendByKey(candidates, receipts.select(col("tx_hash").as("hash"),
+      col("status").as("receipt_ok")), "hash")
 
-    decoded
-      .join(broadcast(statusCol), Seq("tx_hash"), "left")
-      .join(broadcast(blockTs), Seq("block_number"), "left")
+  /** `df` in its own column order plus `side`'s one value column, by a
+    * broadcast left join on `key`. */
+  private def appendByKey(df: DataFrame, side: DataFrame,
+      key: String): DataFrame =
+    df.join(broadcast(side), Seq(key), "left")
+      .select((df.columns.toSeq :+ side.columns(1)).map(col): _*)
+
+  private def selects(d: ContractDecoder, watched: Seq[String]): Column =
+    col("to_addr").isin(watched: _*) && d.isCall(col("input"))
+
+  /** OP-FIL-8 for every watched contract type at once: the transactions
+    * (carrying their block `timestamp`) that any type's selector picks,
+    * one row each however many types pick it, narrowed to the columns
+    * [[decodeTransfers]] reads. */
+  def transferCandidates(txs: DataFrame,
+      watch: Seq[(ContractDecoder, Seq[String])]): DataFrame =
+    txs.filter(watch.map { case (d, w) => selects(d, w) }.reduce(_ || _))
+      .select(col("hash"), col("block_number"), col("to_addr"),
+        col("from_addr"), col("input"), col("timestamp"))
+
+  /** Decode and project, shared by [[tokenTransfers]] and the ETL:
+    * [[transferCandidates]] rows with a `receipt_ok` column become
+    * token_transfers rows — every watched type that selects a row decodes
+    * it (OP-UDTF-1), `created_at` is the block timestamp (OP-PRJ-3), and a
+    * failed or missing receipt is status 0. Row-local: no join, no
+    * exchange. */
+  def decodeTransfers(candidates: DataFrame,
+      watch: Seq[(ContractDecoder, Seq[String])]): DataFrame =
+    candidates.select(col("hash").as("tx_hash"), col("block_number"),
+        col("to_addr").as("address"),
+        to_timestamp(from_unixtime(col("timestamp"))).as("created_at"),
+        when(col("receipt_ok") === true, 1).otherwise(0).as("status"),
+        ContractRegistry.decodeWatched(
+          watch.map { case (d, w) => selects(d, w) -> d },
+          col("from_addr"), col("input")))
       .select(col("block_number"), col("from_addr"), col("to_addr"),
         col("value"), col("tx_hash"), col("address"), col("transfer_index"),
-        col("created_at"),
-        when(col("receipt_ok") === true, 1).otherwise(0).as("status"))
-  }
+        col("created_at"), col("status"))
 
   // ---- view queries (SURVEY §2.12, view.rs:30-122) ----
 

@@ -1,6 +1,6 @@
 package graft.etl
 
-import graft.chain.{ChainFixture, ChainOps}
+import graft.chain.{ChainFixture, ChainOps, ContractRegistry}
 import graft.store.GraftStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -10,35 +10,45 @@ import org.apache.spark.util.AccumulatorV2
   * implementation replays the deterministic fixture; a production
   * implementation fetches over RPC with one partition per height range
   * (`mapPartitions` fan-out replacing the reference's tokio::spawn pool,
-  * etl.rs:286-303). */
+  * etl.rs:286-303). The token-transfer receipt lookup
+  * ([[withReceiptStatus]]) is the source's too, so a wire source can run
+  * it inside the fetch partition, with no exchange. */
 trait ChainSource {
   def tipHeight(spark: SparkSession): Long
   def blocks(spark: SparkSession, from: Long, to: Long): DataFrame
   def transactions(spark: SparkSession, from: Long, to: Long): DataFrame
   def receipts(spark: SparkSession, from: Long, to: Long): DataFrame
 
-  /** Blocks AND transactions of a range from ONE fetch. The default
-    * simply pairs the two single-table methods — free for local sources
-    * (fixture, parquet replay). Wire-backed sources override it to
-    * decode both tables from a single `getBlockByNumber(full)` pass
-    * (the reference fetches each block exactly once and reads headers
-    * and bodies from the same response, etl.rs:186-207). Callers must
-    * invoke `release()` once every consuming action has run. */
+  /** Blocks AND transactions of a range from ONE fetch; each transaction
+    * row also carries its block's `timestamp` (the token-transfer
+    * `created_at`; the transactions table does not store it). The default
+    * pairs the two single-table methods and joins the timestamp on by
+    * block number — free for local sources (fixture, parquet replay).
+    * Wire-backed sources override it to decode both tables from a single
+    * `getBlockByNumber(full)` pass and take the timestamp from the block
+    * each transaction came in (the reference fetches each block exactly
+    * once and reads headers and bodies from the same response,
+    * etl.rs:186-207). Callers must invoke `release()` once every
+    * consuming action has run. */
   def fetchRange(spark: SparkSession, from: Long, to: Long)
-      : ChainSource.RangeFetch =
-    ChainSource.RangeFetch(blocks(spark, from, to),
-      transactions(spark, from, to), () => ())
+      : ChainSource.RangeFetch = {
+    val b = blocks(spark, from, to)
+    ChainSource.RangeFetch(b,
+      ChainOps.withBlockTimestamp(transactions(spark, from, to), b), () => ())
+  }
 
-  /** Receipts for exactly the given transaction hashes (a one-column
-    * DataFrame). The default ignores the hash set — a local source's
-    * receipts cost nothing to over-deliver, and the consuming join
-    * selects by hash anyway. Wire-backed sources override it to fetch
-    * per listed hash only: the reference looks up receipts per MATCHING
-    * tx (etl.rs:353-360), so receipt round-trips must scale with the
-    * selector hit count, not the chain's tx count. */
-  def receiptsFor(spark: SparkSession, from: Long, to: Long,
-      txHashes: DataFrame): DataFrame =
-    receipts(spark, from, to)
+  /** `candidates` (transactions of [from, to] with a `hash` column) with
+    * a boolean `receipt_ok` column added: the status of each hash's
+    * receipt, false or null where it failed or does not exist. The
+    * default left-joins the broadcast [[receipts]] of the range — a local
+    * source's receipts cost nothing to over-deliver. Wire-backed sources
+    * override it to look up exactly the listed hashes inside the
+    * candidates' own partitions: the reference looks up receipts per
+    * MATCHING tx (etl.rs:353-360), so receipt round-trips must scale with
+    * the selector hit count, not the chain's tx count. */
+  def withReceiptStatus(spark: SparkSession, from: Long, to: Long,
+      candidates: DataFrame): DataFrame =
+    ChainOps.withReceiptOk(candidates, receipts(spark, from, to))
 }
 
 object ChainSource {
@@ -93,7 +103,13 @@ final class FixtureSource(
 /** Batch backfill (OP-SRC-3 / OP-STR-1, etl.rs:251-336): resume from the
   * store's coalesced max height, ingest [resume+1, tip] as ONE atomic
   * multi-table commit. Idempotent: re-running after a crash that staged
-  * but never committed leaves no visible change. */
+  * but never committed leaves no visible change.
+  *
+  * Each table is one write over the source's range fetch, and the three
+  * writes run concurrently. Over a wire source none of them has an
+  * exchange: the token_transfers write selects, looks up receipt status
+  * and decodes inside the fetch partition, so a one-block head runs one
+  * Spark job per table. */
 object Backfill {
 
   /** Resume cursor (OP-AGG-2, sqlite3.rs:153-211). Fast path: the `tip`
@@ -125,10 +141,11 @@ object Backfill {
     *
     * `watchTokens` maps contract type → watched addresses (reference
     * `--watch-tokens`, export.rs:88-114); each type dispatches to its
-    * [[graft.chain.ContractRegistry]] decoder and the per-type extractions
-    * union into one transfers table. `modules` gates which tables are
-    * written at all (reference `--modules`, main.rs:52-54): a
-    * transfers-only run stages no blocks/transactions leaves.
+    * [[graft.chain.ContractRegistry]] decoder; a transaction several types
+    * select is looked up once and yields each type's transfers. `modules`
+    * gates which tables are written at all (reference `--modules`,
+    * main.rs:52-54): a transfers-only run stages no blocks/transactions
+    * leaves.
     *
     * The commit's `tip` and `tiphash` come from the highest block row the
     * blocks stage actually wrote, not from `to`: a node that answers null
@@ -165,29 +182,21 @@ object Backfill {
       val txsRaw = fetch.transactions
       val txStage = Option.when(wantTxs)(() =>
         store.stage("transactions", ChainOps.addressFilter(
-          ChainOps.normalizeTxs(txsRaw), addressFilter)))
+          ChainOps.normalizeTxs(txsRaw.drop("timestamp")), addressFilter)))
       // transfers are extracted from UNFILTERED txs (etl.rs:193-204: the
-      // address filter applies to the transactions table only)
+      // address filter applies to the transactions table only). One
+      // selector over every watched type picks each matching tx once;
+      // only those reach the receipt lookup (etl.rs:353-360), which the
+      // source runs in the fetch partition, and the decode follows in
+      // the same partition.
       val transferStage = Option.when(wantTransfers) { () =>
-        val norm = ChainOps.normalizeTxs(txsRaw)
-        // receipts per MATCHING tx only (etl.rs:353-360): the OP-FIL-8
-        // selector runs engine-side over the already-fetched txs and
-        // only the hits' hashes reach the receipt lookup
-        val matching = watchTokens.toSeq.sortBy(_._1)
-          .map { case (ctype, addrs) =>
-            val d = graft.chain.ContractRegistry(ctype)
-            norm.filter(col("to_addr").isin(addrs: _*) &&
-                d.isCall(col("input")))
-              .select(col("hash"))
-          }
-          .reduce(_.unionByName(_)).distinct()
-        val receipts = source.receiptsFor(spark, from, to, matching)
-        val transfers = watchTokens.toSeq.sortBy(_._1)
-          .map { case (ctype, addrs) =>
-            ChainOps.tokenTransfers(norm, blocks, receipts, addrs, ctype)
-          }
-          .reduce(_.unionByName(_))
-        store.stage("token_transfers", transfers)
+        val watch = watchTokens.toSeq.sortBy(_._1).map { case (t, addrs) =>
+          ContractRegistry(t) -> addrs
+        }
+        val candidates = ChainOps.transferCandidates(
+          ChainOps.normalizeTxs(txsRaw), watch)
+        store.stage("token_transfers", ChainOps.decodeTransfers(
+          source.withReceiptStatus(spark, from, to, candidates), watch))
       }
       val blockStage = Option.when(wantBlocks)(() =>
         store.stage("blocks", staged.tap(blocks)))

@@ -1,7 +1,8 @@
 package graft.etl
 
 import graft.chain.{Block, Receipt, Transaction}
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.types.BooleanType
 
 /** JSON-RPC 2.0 against a chain node, over HTTP(S) or WebSocket by URL
   * scheme ([[RpcClient]]) — the production [[ChainSource]] the fixture
@@ -20,7 +21,9 @@ import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
   * connection and fetches its heights in JSON-RPC BATCH calls of
   * `batchSize` requests — at 100 TB the node fleet sees
   * (partitions × ranges/batchSize) round-trips, never one per block, and
-  * no block payload ever routes through the driver. Only `tipHeight` /
+  * no block payload ever routes through the driver. The token-transfer
+  * receipt lookup ([[withReceiptStatus]]) runs in those same fetch
+  * partitions, batched the same way, with no exchange. Only `tipHeight` /
   * `networkId` / `syncedGate` run driver-side (single tiny calls).
   *
   * Wire conventions (public Core/Ethereum JSON-RPC): quantities are
@@ -129,7 +132,9 @@ final class RpcSource(
   /** ONE `getBlockByNumber(full)` pass decoding BOTH tables from the same
     * responses (reference parity: each block is fetched once and headers +
     * bodies read from that response, etl.rs:186-207 — the separate
-    * blocks()/transactions() calls would cross the wire twice). The
+    * blocks()/transactions() calls would cross the wire twice). Each
+    * transaction row carries the `timestamp` of the block row it was
+    * exploded from, so no join restores it. The
     * decoded bundle is persisted (memory, spilling to local disk) because
     * each downstream table stage is its own Spark action: a range's rows
     * on executor-local disk cost orders of magnitude less than a second
@@ -147,37 +152,43 @@ final class RpcSource(
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     ChainSource.RangeFetch(
       bundles.select(col("block.*")),
-      bundles.select(explode(col("txs")).as("t")).select(col("t.*")),
+      bundles.select(col("block.timestamp").as("timestamp"),
+          explode(col("txs")).as("t"))
+        .select(col("t.*"), col("timestamp")),
       () => { bundles.unpersist(); () })
   }
 
-  /** Receipts for exactly the given tx hashes — one batched
-    * `getTransactionReceipt` round per [[batchSize]] hashes per
+  /** Receipt status for exactly the candidate rows' hashes, looked up
+    * inside each candidate partition: its rows stream in [[batchSize]]
+    * chunks, and each chunk's distinct hashes go to the node in one
+    * batched `getTransactionReceipt` call. No exchange runs before or
+    * after, so over a [[fetchRange]] the lookup stays in the fetch
     * partition. The reference fetches receipts per MATCHING tx only
-    * (etl.rs:353-360); feeding this from the selector-filtered tx set
-    * makes receipt round-trips scale with the hit count, not the
-    * chain's tx count (and no block is re-fetched at all). */
-  override def receiptsFor(spark: SparkSession, from: Long, to: Long,
-      txHashes: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.col
+    * (etl.rs:353-360): fed the selector's hits, receipt round-trips scale
+    * with the hit count, not the chain's tx count. A hash the node has no
+    * receipt for (null) reads `receipt_ok = false`. */
+  override def withReceiptStatus(spark: SparkSession, from: Long, to: Long,
+      candidates: DataFrame): DataFrame = {
     val (u, ns, bs, rt, bo) = (url, namespace, batchSize, retries,
       retryBackoffMs)
-    val enc = Encoders.product[Receipt]
-    txHashes.select(col(txHashes.columns.head).cast("string"))
-      .as(Encoders.STRING)
-      .repartition(fetchPartitions)
-      .mapPartitions { hs: Iterator[String] =>
-        val c = new RpcClient(u, rt, bo)
-        closeOnTaskEnd(c)
-        hs.grouped(bs).flatMap { chunk =>
-          c.callBatch(chunk.map(h =>
-              (s"${ns}_getTransactionReceipt",
-                List(org.json4s.JString("0x" + h)))))
-            .iterator
-            .filter(j => j != org.json4s.JNull && j != org.json4s.JNothing)
-            .map(decodeReceipt)
-        }
-      }(enc).toDF()
+    val hashAt = candidates.schema.fieldIndex("hash")
+    val schema = candidates.schema.add("receipt_ok", BooleanType,
+      nullable = false)
+    candidates.mapPartitions { rows: Iterator[Row] =>
+      val c = new RpcClient(u, rt, bo)
+      closeOnTaskEnd(c)
+      rows.grouped(bs).flatMap { chunk =>
+        val hashes = chunk.map(_.getString(hashAt)).distinct
+        val answers = c.callBatch(hashes.map(h =>
+          (s"${ns}_getTransactionReceipt", List(org.json4s.JString("0x" + h)))))
+        val ok = hashes.zip(answers).map { case (h, j) =>
+          h -> (j != org.json4s.JNull && j != org.json4s.JNothing &&
+            decodeReceipt(j).status)
+        }.toMap
+        chunk.iterator.map(r =>
+          Row.fromSeq(r.toSeq :+ ok(r.getString(hashAt))))
+      }
+    }(Encoders.row(schema))
   }
 
   override def transactions(spark: SparkSession, from: Long,

@@ -3,7 +3,7 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.atomic.AtomicInteger
 
-import graft.chain.ChainFixture
+import graft.chain.{ChainFixture, ChainOps}
 import graft.etl.{Backfill, ChainSource, FixtureSource, RpcCodec, RpcSource,
   Tail}
 import graft.store.GraftStore
@@ -77,6 +77,9 @@ class RpcSourceSpec extends AnyFunSuite with BeforeAndAfterAll
     * a lagging replica. */
   @volatile private var lagTip: Option[Long] = None
 
+  /** Tx hashes whose receipt the node answers null (it has none). */
+  @volatile private var nullReceipts: Set[String] = Set.empty
+
   private def handle(req: JValue): JValue = {
     import RpcCodec._
     val id = req \ "id"
@@ -106,7 +109,7 @@ class RpcSourceSpec extends AnyFunSuite with BeforeAndAfterAll
       case "xcb_getTransactionReceipt" =>
         receiptReqs.incrementAndGet()
         val h = params.head.asInstanceOf[JString].s.stripPrefix("0x")
-        fx.receipts.find(_.tx_hash == h)
+        fx.receipts.find(r => r.tx_hash == h && !nullReceipts(h))
           .map(encodeReceipt).getOrElse(JNull)
       case other => sys.error(s"unexpected method $other")
     }
@@ -636,6 +639,7 @@ class RpcSourceSpec extends AnyFunSuite with BeforeAndAfterAll
   test("live heads reader knobs: batchSize chunks the wire calls and " +
       "headsNullRetryMs bounds the null-retry budget (both options)") {
     import graft.sources.{HeadsRange, HeadsReaderFactory}
+    val url = src.url // forcing `src` starts the loopback node
     // batchSize: 20 committed heights with batchSize=7 → batches of <=7
     maxBatchLen.set(0)
     val ok = new HeadsReaderFactory().createReader(
@@ -700,9 +704,9 @@ class RpcSourceSpec extends AnyFunSuite with BeforeAndAfterAll
         to: Long): DataFrame = inner.transactions(s, from, to)
     override def receipts(s: SparkSession, from: Long, to: Long): DataFrame =
       inner.receipts(s, from, to)
-    override def receiptsFor(s: SparkSession, from: Long, to: Long,
-        txHashes: DataFrame): DataFrame =
-      inner.receiptsFor(s, from, to, txHashes)
+    override def withReceiptStatus(s: SparkSession, from: Long, to: Long,
+        candidates: DataFrame): DataFrame =
+      inner.withReceiptStatus(s, from, to, candidates)
     override def fetchRange(s: SparkSession, from: Long, to: Long)
         : ChainSource.RangeFetch = {
       jobsBeforeFetch = Some(started())
@@ -830,5 +834,117 @@ class RpcSourceSpec extends AnyFunSuite with BeforeAndAfterAll
     assert(blocks.count() == 31)
     assert(graft.chain.ChainOps.continuityGaps(blocks).count() == 0)
     assert(store.currentMeta()(store.metaKey("tip")) == "30")
+  }
+
+  // ---- the token_transfers stage: plan shape and equivalence ----
+
+  test("a one-height backfill over the node runs 3 jobs, one write per " +
+      "table, and no executed plan has an exchange") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    failures.set(0)
+    val store = new GraftStore(tempDir("graft-rpc-plan-shape"))
+    Backfill.run(spark, src, store, 0, 29)
+    val sc = spark.sparkContext
+    GraftTestBus.drain(sc)
+    val jobs = new AtomicInteger(0)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val planListener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = plans.add(qe.executedPlan.toString)
+    }
+    sc.addSparkListener(jobListener)
+    spark.listenerManager.register(planListener)
+    try {
+      // height 30 carries a selector hit, so the receipt lookup runs
+      assert(Backfill.run(spark, src, store, 30, 30) == 1L)
+      GraftTestBus.drain(sc)
+    } finally {
+      sc.removeSparkListener(jobListener)
+      spark.listenerManager.unregister(planListener)
+    }
+    assert(jobs.get() == 3, s"jobs of a one-height backfill: ${jobs.get()}")
+    assert(plans.size == 3, s"executed plans: ${plans.size}")
+    plans.asScala.foreach { p =>
+      assert(!p.contains("Exchange"), s"plan with an exchange:\n$p")
+    }
+    assert(store.readHeightRange(spark, "token_transfers", 30, 30)
+      .filter(org.apache.spark.sql.functions.col("block_number") === 30L)
+      .count() == 1L)
+  }
+
+  /** Rows of a token_transfers frame in one column order, as a sorted
+    * multiset. */
+  private def transferRows(df: DataFrame): Seq[String] =
+    df.select("block_number", "from_addr", "to_addr", "value", "tx_hash",
+        "address", "transfer_index", "created_at", "status")
+      .collect().map(_.mkString("|")).toSeq.sorted
+
+  /** Backfill [0, 59] over the node into a fresh store — a source of 8
+    * fetch partitions with 3-request batches, so the range spans every
+    * partition and each partition several receipt chunks — returning the
+    * committed transfers and the receipt requests the node saw. */
+  private def transfersOverNode(watch: Map[String, Seq[String]])
+      : (Seq[String], Int) = {
+    failures.set(0)
+    receiptReqs.set(0)
+    val store = new GraftStore(tempDir("graft-rpc-transfers"))
+    Backfill.run(spark, new RpcSource(src.url, fetchPartitions = 8,
+      batchSize = 3), store, 0, 59, watchTokens = watch)
+    (transferRows(store.read(spark, "token_transfers")), receiptReqs.get())
+  }
+
+  private lazy val selectorHits: Set[String] = fx.transactions
+    .filter(t => t.to_addr == ChainFixture.Watched &&
+      graft.functions.Cbc20.Selectors.contains(t.input.take(8)))
+    .map(_.hash).toSet
+
+  test("token_transfers over the node equal ChainOps.tokenTransfers over " +
+      "the fixture: failed and null receipts are status 0, one receipt " +
+      "request per selector hit") {
+    import org.apache.spark.sql.functions.col
+    val failed = fx.receipts.filter(r => !r.status && selectorHits(r.tx_hash))
+      .map(_.tx_hash).toSet
+    assert(failed.nonEmpty, "the range must hold a failed hit's receipt")
+    // a successful hit whose receipt the node answers null
+    val missing = (selectorHits -- failed).min
+    nullReceipts = Set(missing)
+    val (got, requests) =
+      try transfersOverNode(Map("cbc20" -> Seq(ChainFixture.Watched)))
+      finally nullReceipts = Set.empty
+    val want = ChainOps.tokenTransfers(fx.txsDF(spark), fx.blocksDF(spark),
+      fx.receiptsDF(spark).filter(col("tx_hash") =!= missing))
+    assert(got == transferRows(want))
+    val statusOf = want.select("tx_hash", "status").collect()
+      .map(r => r.getString(0) -> r.getInt(1)).toMap
+    assert((failed + missing).forall(statusOf(_) == 0))
+    assert(statusOf.values.exists(_ == 1))
+    assert(requests == selectorHits.size,
+      s"receipt requests $requests, selector hits ${selectorHits.size}")
+  }
+
+  test("two watched contract types selecting the same transactions: each " +
+      "type's transfers are committed, each hit's receipt requested once") {
+    graft.chain.ContractRegistry.register(graft.chain.ContractDecoder(
+      "rpcsourcespec-cbc20-alias", graft.functions.Cbc20.isTransferCall,
+      graft.functions.Cbc20.cbc20_decode))
+    val watch = Map("cbc20" -> Seq(ChainFixture.Watched),
+      "rpcsourcespec-cbc20-alias" -> Seq(ChainFixture.Watched))
+    val (got, requests) = transfersOverNode(watch)
+    val want = watch.toSeq.flatMap { case (ctype, addrs) =>
+      transferRows(ChainOps.tokenTransfers(fx.txsDF(spark),
+        fx.blocksDF(spark), fx.receiptsDF(spark), addrs, ctype))
+    }.sorted
+    assert(got == want)
+    assert(got.size == 2 * got.distinct.size && got.nonEmpty)
+    assert(requests == selectorHits.size,
+      s"receipt requests $requests, selector hits ${selectorHits.size}")
   }
 }
