@@ -103,7 +103,8 @@ final class FixtureSource(
 /** Batch backfill (OP-SRC-3 / OP-STR-1, etl.rs:251-336): resume from the
   * store's coalesced max height, ingest [resume+1, tip] as ONE atomic
   * multi-table commit. Idempotent: re-running after a crash that staged
-  * but never committed leaves no visible change.
+  * but never committed leaves no visible change. A reorg or a crash
+  * retry is the same one commit from a lower height (see [[run]]).
   *
   * Each table is one write over the source's range fetch, and the three
   * writes run concurrently. Over a wire source none of them has an
@@ -113,7 +114,7 @@ final class FixtureSource(
 object Backfill {
 
   /** Resume cursor (OP-AGG-2, sqlite3.rs:153-211). Fast path: the `tip`
-    * snapshot metadata, committed atomically with every ingest/rollback —
+    * snapshot metadata, committed atomically with every ingest —
     * an O(1) driver read instead of three table scans per streaming head
     * (the materialized form of the reference's MAX(number) cursor).
     * Fallback for stores without the key: coalesced max across blocks,
@@ -147,11 +148,18 @@ object Backfill {
     * main.rs:52-54): a transfers-only run stages no blocks/transactions
     * leaves.
     *
+    * After the commit the store's heights >= `from` are exactly the
+    * source's [from, to] (OP-DEL-1): the commit drops every leaf that can
+    * hold such a height (one snapshot, pruned by footer stats), and its
+    * table's stage writes the leaf's rows below `from` beside the fresh
+    * ones. An append finds no such leaf and runs exactly the writes above.
+    *
     * The commit's `tip` and `tiphash` come from the highest block row the
     * blocks stage actually wrote, not from `to`: a node that answers null
     * above some height (a lagging replica, a chain that shrank) leaves
-    * the cursor on the last stored block, and a range that stages no
-    * block leaves both keys as they were. A run that stages no blocks
+    * the cursor on the last stored block; a range that stages no block
+    * leaves both keys as they were, or, if it dropped leaves, commits
+    * `tip = from - 1` and clears `tiphash`. A run that stages no blocks
     * table commits `tip = to` and clears `tiphash`. */
   def run(
       spark: SparkSession,
@@ -177,38 +185,48 @@ object Backfill {
         () => ())
     val staged = new TipAccumulator
     spark.sparkContext.register(staged)
+    val replaced = store.leavesForHeights(store.Tables, from, Long.MaxValue)
+    // a table's stage: its fresh rows, if the run writes it, beside the
+    // rows below `from` of its leaves the commit drops
+    def stage(table: String, fresh: Option[() => DataFrame]) = {
+      val old = replaced.filter(_.table == store.physName(table))
+      Option.when(fresh.isDefined || old.nonEmpty)(() => store.stage(table,
+        (fresh.map(_()) ++ Option.when(old.nonEmpty)(store.readLeaves(spark,
+          table, old).filter(col(store.heightCol(table)) < from)))
+          .reduce(_ unionByName _)))
+    }
     val tip = try {
-      val blocks = fetch.blocks
       val txsRaw = fetch.transactions
-      val txStage = Option.when(wantTxs)(() =>
-        store.stage("transactions", ChainOps.addressFilter(
+      val txStage = stage("transactions", Option.when(wantTxs)(() =>
+        ChainOps.addressFilter(
           ChainOps.normalizeTxs(txsRaw.drop("timestamp")), addressFilter)))
-      // transfers are extracted from UNFILTERED txs (etl.rs:193-204: the
-      // address filter applies to the transactions table only). One
-      // selector over every watched type picks each matching tx once;
-      // only those reach the receipt lookup (etl.rs:353-360), which the
-      // source runs in the fetch partition, and the decode follows in
-      // the same partition.
-      val transferStage = Option.when(wantTransfers) { () =>
-        val watch = watchTokens.toSeq.sortBy(_._1).map { case (t, addrs) =>
-          ContractRegistry(t) -> addrs
-        }
-        val candidates = ChainOps.transferCandidates(
-          ChainOps.normalizeTxs(txsRaw), watch)
-        store.stage("token_transfers", ChainOps.decodeTransfers(
-          source.withReceiptStatus(spark, from, to, candidates), watch))
-      }
-      val blockStage = Option.when(wantBlocks)(() =>
-        store.stage("blocks", staged.tap(blocks)))
+      // transfers come from UNFILTERED txs (the address filter applies to
+      // the transactions table only, etl.rs:193-204). One selector over
+      // every watched type picks each matching tx once; only those reach
+      // the receipt lookup (etl.rs:353-360), run in the fetch partition.
+      val transferStage = stage("token_transfers",
+        Option.when(wantTransfers) { () =>
+          val watch = watchTokens.toSeq.sortBy(_._1).map { case (t, a) =>
+            ContractRegistry(t) -> a
+          }
+          val candidates = ChainOps.transferCandidates(
+            ChainOps.normalizeTxs(txsRaw), watch)
+          ChainOps.decodeTransfers(
+            source.withReceiptStatus(spark, from, to, candidates), watch)
+        })
+      val blockStage = stage("blocks",
+        Option.when(wantBlocks)(() => staged.tap(fetch.blocks)))
       val leaves = concurrently(
         Seq(txStage, transferStage, blockStage).flatten).flatten
       val (committed, meta) =
         if (!wantBlocks) (to, Map("tip" -> to.toString, "tiphash" -> ""))
         else staged.value match {
           case Some((n, h)) => (n, Map("tip" -> n.toString, "tiphash" -> h))
-          case None => (from - 1, Map.empty[String, String])
+          case None if replaced.isEmpty => (from - 1, Map.empty[String, String])
+          case None =>
+            (from - 1, Map("tip" -> (from - 1).toString, "tiphash" -> ""))
         }
-      store.commit(leaves, meta = meta)
+      store.commit(leaves, replaced, meta)
       committed
     } finally fetch.release()
     tip - from + 1
@@ -221,7 +239,7 @@ object Backfill {
     * execution, scheduler pool), so a caller's `cancelJobGroup` and job
     * attribution reach every job they run. An interrupt while joining is
     * held until every thread has finished, then thrown. */
-  private def concurrently[T](bodies: Seq[() => T]): Seq[T] = {
+  private[etl] def concurrently[T](bodies: Seq[() => T]): Seq[T] = {
     val results = new Array[Either[Throwable, T]](bodies.size)
     val threads = bodies.zipWithIndex.map { case (body, i) =>
       val t = new Thread(() =>

@@ -7,8 +7,10 @@ import org.apache.spark.sql.SparkSession
   * `bin/core-etl/src/export.rs:46-71`):
   *
   *  - lazy gate: poll until the node reports synced (etl.rs:100-117);
-  *  - crash retry: up to `retries` attempts, each preceded by a tail
-  *    rollback of `wipeOnRetry` heights (export.rs:55-69 wipes 100);
+  *  - crash retry: up to `retries` attempts; one after a failure
+  *    backfills from `wipeOnRetry` heights below the stored tip (but not
+  *    below `startBlock`), so its one commit also replaces the possibly
+  *    torn tail (export.rs:55-69 wipes 100, then re-ingests);
   *  - retention: after ingest, drop buckets whose entire height range is
   *    older than the TTL (OP-DEL-3 as whole-partition deletes).
   *
@@ -56,11 +58,12 @@ object Export {
     var ingested = 0L
     var done = false
     var lastFailure: Exception = null
+    var replaceFrom = Option.empty[Long]
     while (!done && attempt < cfg.retries) {
       attempt += 1
       try {
-        val resume = Backfill.maxIngestedHeight(spark, store)
-        val from = math.max(resume + 1, cfg.startBlock)
+        val from = math.max(replaceFrom.getOrElse(
+          Backfill.maxIngestedHeight(spark, store) + 1), cfg.startBlock)
         ingested += Backfill.run(spark, source, store, from,
           source.tipHeight(spark), cfg.watchTokens, cfg.addressFilter,
           cfg.modules)
@@ -68,11 +71,9 @@ object Export {
       } catch {
         case e: Exception =>
           lastFailure = e
-          // crash-retry: wipe the possibly-torn tail before re-ingesting
-          val tip = Backfill.maxIngestedHeight(spark, store)
-          if (tip >= 0)
-            Tail.rollbackFrom(spark, store,
-              math.max(0L, tip - cfg.wipeOnRetry + 1))
+          // the next attempt also replaces the possibly torn tail
+          replaceFrom = Some(math.max(0L,
+            Backfill.maxIngestedHeight(spark, store) - cfg.wipeOnRetry + 1))
       }
     }
     if (!done) throw new RuntimeException(
@@ -106,8 +107,8 @@ object Export {
     * the commit drops exactly that set, so a leaf a concurrent tail
     * commit appends between the read and the commit simply survives
     * (its rows were never read, and it is not in the drop list). If a
-    * concurrent commit DELETES one of the snapshotted leaves (reorg
-    * rollback, retention), [[GraftStore.commit]]'s staleness guard rejects
+    * concurrent commit DELETES one of the snapshotted leaves (a reorg's
+    * backfill, retention), [[GraftStore.commit]]'s staleness guard rejects
     * the compaction and it retries from a fresh snapshot — the rewritten
     * rows of the aborted attempt were never published, so the abort is
     * clean (the orphaned staged files are unreferenced and harmless). */
@@ -120,19 +121,17 @@ object Export {
     while (attempt < maxAttempts) {
       attempt += 1
       val snapshot = store.currentLeaves() // the ONE resolution
-      val (adds, drops) = store.Tables.map { table =>
+      val victims = store.Tables.map { table =>
         val mine = snapshot.filter(_.table == store.physName(table))
         val crowded = mine.groupBy(_.bucket)
           .filter(_._2.size > maxLeavesPerBucket).keySet
-        if (crowded.isEmpty) (Nil, Nil)
-        else {
-          val victims = mine.filter(l => crowded(l.bucket))
-          (store.stage(table, store.readLeaves(spark, table, victims)),
-            victims)
-        }
-      }.unzip
-      val dropped = drops.flatten
-      if (dropped.isEmpty) return 0
+        table -> mine.filter(l => crowded(l.bucket))
+      }.filter(_._2.nonEmpty)
+      if (victims.isEmpty) return 0
+      val adds = Backfill.concurrently(victims.map { case (table, vs) =>
+        () => store.stage(table, store.readLeaves(spark, table, vs))
+      })
+      val dropped = victims.flatMap(_._2)
       try {
         store.commit(adds.flatten, dropped)
         return dropped.size

@@ -12,8 +12,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * instead of the reference's insert-conflict signal (OP-STR-3):
   *
   *  - head.number <= stored max → skip (OP-FIL-7 duplicate filter);
-  *  - parent linkage broken → walk back to the fork point, rewrite the
-  *    affected buckets (OP-DEL-1), then re-backfill from the source;
+  *  - parent linkage broken → walk back to the fork point and backfill
+  *    from it: one commit replaces every height >= it (OP-DEL-1);
   *  - otherwise append [storedMax+1, head.number] as one atomic commit.
   *
   * Maturity stays recompute-on-read ([[graft.chain.ChainOps.withMaturity]],
@@ -31,35 +31,10 @@ object Tail {
   final case class ReorgResolved(forkPoint: Long, reingested: Long)
       extends Action
 
-  /** Rollback all heights >= `height` across the three tables by
-    * rewriting only the buckets that contain them (OP-DEL-1/OP-DEL-2).
-    * The `tip` metadata moves to height-1 in the same atomic commit, so
-    * the O(1) resume cursor never points above live data; `tiphash` is
-    * cleared there, so the next head reads the new tip's hash back. */
-  def rollbackFrom(spark: SparkSession, store: GraftStore,
-      height: Long): Unit = {
-    val (adds, drops) = store.Tables.map { table =>
-      // ONE leaf list drives both the read and the drop set (a pred-based
-      // re-resolve could interleave with a concurrent commit), pruned by
-      // manifest footer stats: a leaf whose max height sits below the
-      // rollback point contains nothing to delete and is neither read nor
-      // rewritten — only the actual tail leaves churn
-      val affected = store.leavesForHeights(table, height, Long.MaxValue)
-      if (affected.isEmpty) (Nil, Nil)
-      else {
-        val kept = store.readLeaves(spark, table, affected)
-          .filter(col(store.heightCol(table)) < height)
-        (store.stage(table, kept), affected)
-      }
-    }.unzip
-    store.commit(adds.flatten, drops.flatten,
-      meta = Map("tip" -> (height - 1).toString, "tiphash" -> ""))
-  }
-
   /** Process one new head; returns the action taken. The stored tip and
     * its hash come from one snapshot's metadata (`tip`, `tiphash`), so a
     * contiguous head runs no Spark job before its fetch; a store without
-    * `tiphash` (written before the key existed, or just rolled back)
+    * `tiphash` (a legacy store, or one cut back with no block to replace)
     * reads the tip block's hash back with one single-row read. */
   def processHead(
       spark: SparkSession,
@@ -95,9 +70,8 @@ object Tail {
           // the fork-point walk-back rather than appending blindly
           seam.nonEmpty && seam.head.getString(0) == storedTipHash
         }
-      if (!linked || head.number <= last) {
+      if (!linked) {
         val forkPoint = findForkPoint(spark, store, source, last)
-        rollbackFrom(spark, store, forkPoint)
         val n = Backfill.run(spark, source, store, forkPoint, head.number,
           watchTokens)
         return ReorgResolved(forkPoint, n)

@@ -799,16 +799,19 @@ final class GraftStore(val root: String, val bucketSize: Long = 10000L,
   def leavesAtOrAbove(height: Long): Long => Boolean =
     b => b >= height / bucketSize
 
-  /** Leaves of `table` that can contain heights in [lo, hi]: bucket-range
-    * pruning first (free — bucket is a height range by construction),
-    * then per-leaf min/max footer stats from the manifest where present.
+  /** Leaves of `tables` that can contain heights in [lo, hi], all from
+    * ONE snapshot: bucket-range pruning first (free — bucket is a height
+    * range by construction), then per-leaf min/max footer stats from the
+    * manifest where present.
     * An incremental tail accretes one leaf per touched bucket per commit,
     * so the tip bucket of a live store holds MANY leaves; stats pruning
     * takes a point/range lookup from O(commits since compaction) files to
     * O(overlapping leaves) — without opening a single file to decide.
     * Leaves without stats (legacy snapshots, foreign stagers) are kept. */
-  def leavesForHeights(table: String, lo: Long, hi: Long): Seq[Leaf] =
-    heightLeaves(currentManifest(), table, lo, hi)
+  def leavesForHeights(tables: Seq[String], lo: Long, hi: Long): Seq[Leaf] = {
+    val m = currentManifest()
+    tables.flatMap(heightLeaves(m, _, lo, hi))
+  }
 
   private def heightLeaves(m: Manifest, table: String, lo: Long,
       hi: Long): Seq[Leaf] =

@@ -199,9 +199,13 @@ class EtlSpec extends AnyFunSuite with BeforeAndAfterAll
       .option("checkpointLocation",
         tempDir("graft-ckpt"))
       .start()
+    val snapshots = store.snapshots().size
     stream.addData(Tail.Head(156L, "next-after-fork", fork.last.hash))
     query.processAllAvailable()
     query.stop()
+    // one reorg, one commit: the forked heights are replaced in the same
+    // snapshot that adds the fork branch
+    assert(store.snapshots().size == snapshots + 1)
     val blocks = store.read(spark, "blocks")
     // stored chain now = canonical < 150 ++ fork 150..155
     assert(blocks.count() == 156)
@@ -227,11 +231,13 @@ class EtlSpec extends AnyFunSuite with BeforeAndAfterAll
     val forked = new FixtureSource(fx, forkAt = Some(150), forkLen = 9)
     val fork = ChainFixture.forkBlocks(fx, 150, 9) // fork blocks 150..158
     val head158 = fork.last
+    val snapshots = store.snapshots().size
     val action = Tail.processHead(spark, store, forked,
       Tail.Head(head158.number, head158.hash, head158.parent_hash))
     // without the seam check this would APPEND 156..158 on top of the
     // stale canonical 150..155 (continuity still passes — heights line up)
-    assert(action.isInstanceOf[Tail.ReorgResolved])
+    assert(action == Tail.ReorgResolved(150L, 9L))
+    assert(store.snapshots().size == snapshots + 1)
     val blocks = store.read(spark, "blocks")
     assert(blocks.count() == 159)
     assert(blocks.filter(col("number") === 150).head()
@@ -251,12 +257,17 @@ class EtlSpec extends AnyFunSuite with BeforeAndAfterAll
     Backfill.run(spark, src, store, 0, 149)
     assert(store.currentMeta()(store.metaKey("tip")) == "149")
     assert(Backfill.maxIngestedHeight(spark, store) == 149L)
-    Tail.rollbackFrom(spark, store, 100L)
-    assert(store.currentMeta()(store.metaKey("tip")) == "99")
-    assert(Backfill.maxIngestedHeight(spark, store) == 99L)
+    // the chain reorgs at 100 onto a shorter branch: 100..105 replace
+    // 100..149, and the cursor moves down with them in the same commit
+    val fork = ChainFixture.forkBlocks(fx, 100, 6)
+    assert(Backfill.run(spark, new FixtureSource(fx, Some(100L), 6), store,
+      100, 105) == 6L)
+    assert(store.currentMeta()(store.metaKey("tip")) == "105")
+    assert(store.currentMeta()(store.metaKey("tiphash")) == fork.last.hash)
+    assert(Backfill.maxIngestedHeight(spark, store) == 105L)
     // materialized-tip maturity == recompute-on-read maturity
     val blocks = store.read(spark, "blocks")
-    val fromTip = ChainOps.withMaturityFromTip(blocks, 99L)
+    val fromTip = ChainOps.withMaturityFromTip(blocks, 105L)
       .select("number", "matured").collect().map(r => (r.getLong(0),
         r.getInt(1))).toSet
     val recomputed = ChainOps.withMaturity(blocks)
@@ -299,18 +310,46 @@ class EtlSpec extends AnyFunSuite with BeforeAndAfterAll
     Backfill.run(spark, src, store, 21, 30)
     // a compactor's view of the leaves...
     val staleView = store.leavesOf("blocks")
-    // ...goes stale when a concurrent rollback drops one of them
-    graft.etl.Tail.rollbackFrom(spark, store, 21L)
+    // ...goes stale when a concurrent reorg replaces one of them
+    Backfill.run(spark, new FixtureSource(fx, Some(21L), 10), store, 21, 30)
     // committing drops from the stale view must fail loudly, not silently
-    // resurrect the rolled-back rows via a rewrite that includes them
+    // resurrect the replaced rows via a rewrite that includes them
     intercept[graft.store.GraftStore.StaleSnapshotException] {
       store.commit(Nil, staleView)
     }
     // compact() itself retries from a fresh snapshot and stays correct:
-    // rolled-back heights do not reappear
+    // replaced heights do not reappear
     graft.etl.Export.compact(spark, store)
-    assert(store.read(spark, "blocks")
-      .agg(max("number")).head().getLong(0) == 20L)
+    val hashes = store.read(spark, "blocks").select("number", "hash")
+      .collect().map(r => r.getLong(0) -> r.getString(1)).sorted.toSeq
+    assert(hashes == fx.blocks.take(21).map(b => b.number -> b.hash) ++
+      ChainFixture.forkBlocks(fx, 21, 10).map(b => b.number -> b.hash))
+  }
+
+  test("a backfill the source answers with no block cuts the store back " +
+      "to the height below it, tip included, in one commit") {
+    val store = newStore()
+    Backfill.run(spark, new FixtureSource(fx), store, 0, 149)
+    // a node that answers null from height 100 on (a zero-length fork)
+    val gone = new FixtureSource(fx, Some(100L), 0)
+    val snapshots = store.snapshots().size
+    assert(Backfill.run(spark, gone, store, 100, 149) == 0L)
+    assert(store.snapshots().size == snapshots + 1)
+    assert(store.currentMeta().get(store.metaKey("tip")).contains("99"))
+    assert(!store.currentMeta().contains(store.metaKey("tiphash")))
+    assert(Backfill.maxIngestedHeight(spark, store) == 99L)
+    Seq("blocks" -> "number", "transactions" -> "block_number",
+        "token_transfers" -> "block_number").foreach { case (t, h) =>
+      assert(store.read(spark, t).agg(max(h)).head().getLong(0) <= 99L, t)
+    }
+    assert(store.read(spark, "blocks").count() == 100)
+    assert(store.read(spark, "token_transfers").count() ==
+      fx.goldenTransfers.count(_._1.block_number < 100))
+    // the next head reads the new tip's hash back and appends on it
+    val b = fx.blocks(100)
+    assert(Tail.processHead(spark, store, new FixtureSource(fx),
+      Tail.Head(b.number, b.hash, b.parent_hash)) == Tail.Appended(100, 100))
+    assert(ChainOps.continuityGaps(store.read(spark, "blocks")).count() == 0)
   }
 
   test("compaction snapshot ignores leaves committed after it was taken") {

@@ -66,6 +66,25 @@ class ExportSpec extends AnyFunSuite with BeforeAndAfterAll
     assert(e.getMessage.contains("after 3 attempts"))
   }
 
+  test("crash retry replaces from the wipe height but never below " +
+      "startBlock, leaving no hole") {
+    val store = newStore()
+    Backfill.run(spark, new FixtureSource(fx), store, 0, 149)
+    // the wipe height 149 - 100 + 1 = 50 sits below startBlock 140: the
+    // retry replaces 140..149 and ingests on, keeping 0..139 as stored
+    val flaky = new FlakySource(new FixtureSource(fx), failures = 1)
+    val summary = Export.run(spark, flaky, store,
+      Export.Config(startBlock = 140, wipeOnRetry = 100))
+    assert(summary.attempts == 2)
+    assert(summary.finalHeight == 199)
+    val blocks = store.read(spark, "blocks")
+    assert(blocks.select("number").collect().map(_.getLong(0)).sorted.toSeq
+      == (0L to 199L))
+    assert(ChainOps.continuityGaps(blocks).count() == 0)
+    assert(store.read(spark, "token_transfers").count() ==
+      fx.goldenTransfers.size)
+  }
+
   test("lazy gate polls until ready before ingesting (OP-STR-5)") {
     val store = newStore()
     var polls = 0
@@ -134,10 +153,15 @@ class ExportSpec extends AnyFunSuite with BeforeAndAfterAll
     Backfill.run(spark, new FixtureSource(fx), b, 0, 149)
     assert(a.read(spark, "blocks").count() == 50)
     assert(b.read(spark, "blocks").count() == 150)
-    // a rollback in one namespace must not touch the other
-    graft.etl.Tail.rollbackFrom(spark, b, 100L)
+    // a reorg in one namespace must not touch the other
+    val aCursor = () => Seq("tip", "tiphash").map(k =>
+      a.currentMeta().get(a.metaKey(k)))
+    val aTip = aCursor()
+    Backfill.run(spark, new FixtureSource(fx, Some(100L), 0), b, 100, 149)
     assert(b.read(spark, "blocks").count() == 100)
+    assert(b.currentMeta()(b.metaKey("tip")) == "99")
     assert(a.read(spark, "blocks").count() == 50)
+    assert(aCursor() == aTip)
     assert(a.ownLeaves().forall(_.table.startsWith("etl_a_")))
   }
 

@@ -304,17 +304,17 @@ class StoreSpec extends AnyFunSuite with BeforeAndAfterAll
     assert(stats.values.forall(s => s.minH.isDefined && s.maxH.isDefined))
     // a point lookup touches ONE leaf of the three in the bucket, and
     // lists fewer files than the unpruned read
-    val hit = store.leavesForHeights("blocks", 105L, 105L)
+    val hit = store.leavesForHeights(Seq("blocks"), 105L, 105L)
     assert(hit.size == 1, s"stats did not prune: $hit")
     assert(store.readHeightRange(spark, "blocks", 105L, 105L)
       .filter(col("number") === 105L).count() == 1)
     assert(store.readHeightRange(spark, "blocks", 105L, 105L)
       .inputFiles.length < store.read(spark, "blocks").inputFiles.length)
     // a range spanning two leaves keeps exactly those
-    assert(store.leavesForHeights("blocks", 5L, 102L).size == 2)
+    assert(store.leavesForHeights(Seq("blocks"), 5L, 102L).size == 2)
     // stats ride through a commit that doesn't touch the table
     commitKeyed(store, "other", rows(1L))
-    assert(store.leavesForHeights("blocks", 105L, 105L).size == 1)
+    assert(store.leavesForHeights(Seq("blocks"), 105L, 105L).size == 1)
     // legacy manifest without #stats lines (a pre-stats store): nothing
     // is pruned away and reads stay correct
     val snap = Paths.get(root).resolve(store.currentSnapshot().get)
@@ -322,7 +322,7 @@ class StoreSpec extends AnyFunSuite with BeforeAndAfterAll
       .filterNot(_.startsWith("#stats")).asJava)
     val legacy = new GraftStore(root)
     assert(legacy.currentStats().isEmpty)
-    assert(legacy.leavesForHeights("blocks", 105L, 105L).size == 3)
+    assert(legacy.leavesForHeights(Seq("blocks"), 105L, 105L).size == 3)
     assert(legacy.readHeightRange(spark, "blocks", 105L, 105L)
       .filter(col("number") === 105L).count() == 1)
   }
@@ -441,20 +441,25 @@ class StoreSpec extends AnyFunSuite with BeforeAndAfterAll
     val root = tempDir("graft-store-rollback-race")
     val store = new GraftStore(root)
     val fx = graft.chain.ChainFixture.build(200)
-    graft.etl.Backfill.run(spark, new graft.etl.FixtureSource(fx), store,
-      0, 199)
-    val full = (120L to 180L).toSeq
-    val rolled = (120L to 149L).toSeq
+    val canonical = new graft.etl.FixtureSource(fx)
+    graft.etl.Backfill.run(spark, canonical, store, 0, 199)
+    val hashes = (blocks: Seq[graft.chain.Block]) =>
+      blocks.map(b => b.number -> b.hash)
+        .filter { case (n, _) => n >= 120L && n <= 180L }
+    val old = hashes(fx.blocks)
+    val reorged = hashes(fx.blocks.take(150) ++
+      graft.chain.ChainFixture.forkBlocks(fx, 150, 50))
     @volatile var stop = false
     @volatile var loopError: Option[Throwable] = None
     val roller = new Thread(() => {
       try {
         val w = new GraftStore(root)
-        val reingest = fx.blocksDF(spark).filter(col("number") >= 150)
+        val forked = new graft.etl.FixtureSource(fx, Some(150L), 50)
+        // each reorg (onto the fork, then back) replaces 150..199 in ONE
+        // commit: no snapshot holds the chain cut back to 149
         (1 to 3).foreach { _ =>
-          graft.etl.Tail.rollbackFrom(spark, w, 150L)
-          w.commit(w.stage("blocks", reingest),
-            meta = Map("tip" -> "199"))
+          graft.etl.Backfill.run(spark, forked, w, 150, 199)
+          graft.etl.Backfill.run(spark, canonical, w, 150, 199)
         }
       } catch { case t: Throwable => loopError = Some(t) }
       finally stop = true
@@ -463,20 +468,23 @@ class StoreSpec extends AnyFunSuite with BeforeAndAfterAll
     try {
       while (!stop) {
         // each read resolves ONE leaf list; with footer-stats pruning it
-        // must return a committed state — all of 120..180 or the
-        // rolled-back 120..149 — never a partial mix of the two
+        // must return a committed state — the whole old or the whole
+        // reorged 120..180 — never a shorter or mixed one
         val got = store.readHeightRange(spark, "blocks", 120L, 180L)
           .filter(col("number").between(120L, 180L))
-          .select("number").collect().map(_.getLong(0)).sorted.toSeq
-        assert(got == full || got == rolled,
+          .select("number", "hash").collect()
+          .map(r => r.getLong(0) -> r.getString(1)).sorted.toSeq
+        assert(got == old || got == reorged,
           s"mixed-snapshot read: ${got.size} rows [${got.headOption}" +
             s"..${got.lastOption}]")
       }
     } finally roller.join()
-    assert(loopError.isEmpty, s"rollback loop crashed: $loopError")
-    // loop ends re-ingested: the store converges to the full chain
+    assert(loopError.isEmpty, s"reorg loop crashed: $loopError")
+    // the loop ends back on the canonical chain
     assert(store.readHeightRange(spark, "blocks", 0L, 199L)
-      .select("number").distinct().count() == 200L)
+      .select("number", "hash").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).sorted.toSeq ==
+      fx.blocks.map(b => b.number -> b.hash))
   }
 
   test("snapshot sequence is monotonic across store re-instantiation " +
