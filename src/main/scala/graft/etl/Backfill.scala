@@ -117,8 +117,10 @@ object Backfill {
     * snapshot metadata, committed atomically with every ingest —
     * an O(1) driver read instead of three table scans per streaming head
     * (the materialized form of the reference's MAX(number) cursor).
-    * Fallback for stores without the key: coalesced max across blocks,
-    * else transactions, else transfers, else -1. */
+    * A store without the key and without a leaf of its tables is empty:
+    * -1, no job. Fallback for a legacy store (leaves but no key):
+    * coalesced max across blocks, else transactions, else transfers,
+    * else -1. */
   def maxIngestedHeight(spark: SparkSession, store: GraftStore): Long =
     maxIngestedHeight(spark, store, store.currentMeta())
 
@@ -128,6 +130,9 @@ object Backfill {
       meta: Map[String, String]): Long =
     meta.get(store.metaKey("tip")) match {
       case Some(t) => t.toLong
+      // no leaf of this store's tables, so nothing to scan: the answer
+      // as of that (later) snapshot
+      case None if store.ownLeaves().isEmpty => -1L
       case None =>
         val b = store.read(spark, "blocks").agg(max("number")).head().get(0)
         val t = store.read(spark, "transactions").agg(max("block_number"))

@@ -689,11 +689,10 @@ object SimilarityOps {
 
   /** [[ivfProbes]] against an ALREADY-COLLECTED centroid matrix — the
     * form for callers that need the model array anyway (at-rest
-    * searches), so the model parquet is read by exactly ONE driver job
-    * per query instead of once per consumer (round-21: the eager
-    * per-consumer collects were ~1 scheduled job each inside the timed
-    * search region). Wrong-dimension queries fail loudly inside the
-    * [[graft.functions.Vec.ivf_top_cells]] kernel. */
+    * searches take it from [[graft.store.IndexStore]]'s model cache, so
+    * no consumer re-reads the model parquet). Wrong-dimension queries
+    * fail loudly inside the [[graft.functions.Vec.ivf_top_cells]]
+    * kernel. */
   def ivfProbesArr(queries: DataFrame, cents: Array[Array[Double]],
       nprobe: Int): DataFrame =
     // literal-closure top-cells selection (aff DESC, cell ASC — the
@@ -1169,11 +1168,9 @@ object SimilarityOps {
     pqQueryTablesArr(queryUnits, collectCodebook(codebook), m)
 
   /** [[pqQueryTables]] against an ALREADY-COLLECTED codebook — the form
-    * for callers that hold the model array (at-rest searches collect the
-    * codebook parquet exactly once per query and derive tables, ks and
-    * the dimension guard from it; round-20's shape paid one driver job
-    * per consumer: collect + an eager requireDim agg + a pqKsOf agg, all
-    * inside the timed region). The dimension guard now lives in the
+    * for callers that hold the model array (at-rest searches take it
+    * from [[graft.store.IndexStore]]'s model cache and derive tables, ks
+    * and the dimension guard from it). The dimension guard lives in the
     * [[graft.functions.Vec.pq_table]] kernel — per-row, loud, no extra
     * job. */
   def pqQueryTablesArr(queryUnits: DataFrame,
@@ -1282,14 +1279,12 @@ object SimilarityOps {
     * column and the rescore fetches only survivor units (column
     * pruning does both under one relation). A query whose vec_id
     * collides with an index id is excluded from its own neighbors,
-    * like the sketch/ivf probes. */
-  def pqProbe(index: DataFrame, codebook: DataFrame,
+    * like the sketch/ivf probes. `cb` is the collected codebook
+    * ([[collectCodebook]]). */
+  def pqProbe(index: DataFrame, cb: Array[Array[Array[Double]]],
       queryEmb: DataFrame): DataFrame = {
-    // collect the model table ONCE: tables, ks (= codes per subspace)
-    // and the dimension guard all derive from the same array — the
-    // separate pqKsOf agg and eager requireDim jobs this path paid per
-    // search are gone (round-21, guide §1.2 driver overhead)
-    val cb = collectCodebook(codebook)
+    // tables, ks (= codes per subspace) and the dimension guard all
+    // derive from the one collected codebook array
     val qUnits = unit(queryEmb).select(col("vec_id"), col("unit"))
     pqSearchWith(index.select(col("vec_id"), col("codes")),
       index.select(col("vec_id"), col("unit")),
@@ -1704,23 +1699,14 @@ object SimilarityOps {
   }
 
   /** Scan + rescore stage of the IVF-PQ search, over explicit probes
-    * (from [[ivfProbes]]) and queries — the entry point for at-rest
-    * searches that compute WHICH cells they need before reading any
-    * cell data. `codes`: (vec_id, cell, codes); `units`: (vec_id, unit)
-    * for the rescore fetch. */
-  def ivfPqSearchWithProbes(codes: DataFrame, units: DataFrame,
-      cents: DataFrame, cb: DataFrame, probes: DataFrame,
-      queries: DataFrame): DataFrame =
-    ivfPqSearchWithProbesArr(codes, units, collectCents(cents),
-      collectCodebook(cb), probes, queries)
-
-  /** [[ivfPqSearchWithProbes]] against ALREADY-COLLECTED model arrays —
-    * at-rest searches collect each model table exactly once per query
-    * (round-20's shape re-collected the centroids here after the probe
-    * list had already collected them, plus an eager requireDim agg —
-    * two extra driver jobs inside the timed region; the dimension guard
-    * now fires per-row inside [[graft.functions.Vec.ivf_top_cells]] /
-    * [[graft.functions.Vec.pq_table]]). */
+    * (from [[ivfProbesArr]]) and queries, against collected model
+    * arrays — the entry point for at-rest searches that compute WHICH
+    * cells they need before reading any cell data, and that take the
+    * models from [[graft.store.IndexStore]]'s cache. `codes`: (vec_id,
+    * cell, codes); `units`: (vec_id, unit) for the rescore fetch. The
+    * dimension guard fires per-row inside
+    * [[graft.functions.Vec.ivf_top_cells]] /
+    * [[graft.functions.Vec.pq_table]]. */
   def ivfPqSearchWithProbesArr(codes: DataFrame, units: DataFrame,
       centsArr: Array[Array[Double]], cbArr: Array[Array[Array[Double]]],
       probes: DataFrame, queries: DataFrame): DataFrame = {

@@ -28,8 +28,8 @@ import org.apache.spark.sql.functions._
   *  - `ivfpq`  — the full IVF-ADC composition at rest: residual PQ
   *    codes leaf-bucketed BY CELL with both model tables (coarse
   *    centroids + residual codebook) in the same snapshot, probed by
-  *    [[SimilarityOps.ivfPqSearchWithProbes]] — manifest prune to the
-  *    probed cells AND codes-column-only scanning compose;
+  *    [[SimilarityOps.ivfPqSearchWithProbesArr]] — manifest prune to
+  *    the probed cells AND codes-column-only scanning compose;
   *  - `vec`    — near-identical-vector dedup index: unit vectors leaf-
   *    bucketed by their FIXED 16-bit sign bucket
   *    ([[DedupOps.normalizedWithBucket]] — content-keyed, stable across
@@ -201,6 +201,56 @@ object IndexStore {
     * snapshot. */
   val IvfPqCentroidsTable = "ivfpq_centroids"
   val IvfPqCodebookTable = "ivfpq_codebook"
+
+  /** The collected model of one model-carrying ANN kind — centroids for
+    * `ivf`, the codebook for `pq`, both for `ivfpq`; an array the kind
+    * has no table for is empty — with the leaf dirs of the model tables
+    * it was collected from. */
+  private final case class AnnModel(dirs: Seq[String],
+      cents: Array[Array[Double]], codebook: Array[Array[Array[Double]]])
+
+  /** One collected model per (canonical store root, kind), JVM-wide.
+    * Committed leaves never change and leaf dirs are unique per write,
+    * so the model tables' dirs name the model: a build that re-trains
+    * writes new dirs and the next search re-collects, while an append
+    * (which encodes under the fixed model) or a compaction keeps them
+    * and the search runs no model job. A miss replaces the entry. */
+  private val models =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), AnnModel]()
+
+  /** Forget every collected model, so the next search of each index
+    * collects its model again (a benchmark timing a first search). */
+  private[graft] def clearModels(): Unit = models.clear()
+
+  /** `kind`'s collected model as of the snapshot `snap` (one manifest's
+    * leaves): from the cache when its dirs match, else collected from
+    * exactly those leaves — one driver job per model table. */
+  private def modelOf(store: GraftStore, spark: SparkSession, kind: String)(
+      snap: Seq[store.Leaf]): AnnModel = {
+    val (centsTable, cbTable) = kind match {
+      case "ivf" => (Some(IvfCentroidsTable), None)
+      case "pq" => (None, Some(PqCodebookTable))
+      case _ => (Some(IvfPqCentroidsTable), Some(IvfPqCodebookTable))
+    }
+    val leaves = (centsTable ++ cbTable)
+      .map(t => t -> snap.filter(_.table == store.physName(t))).toMap
+    leaves.foreach { case (t, ls) => require(ls.nonEmpty,
+      s"no '$t' leaves in store ${store.root} — run `index build` first") }
+    checkFormat(store, kind)
+    val dirs = leaves.values.flatten.map(_.dir).toSeq.sorted
+    val key = (java.nio.file.Paths.get(store.root).toAbsolutePath.normalize
+      .toString, kind)
+    Option(models.get(key)).filter(_.dirs == dirs).getOrElse {
+      def rows(t: String) = store.readLeaves(spark, t, leaves(t))
+      val model = AnnModel(dirs,
+        centsTable.fold(Array.empty[Array[Double]])(t =>
+          SimilarityOps.collectCents(rows(t))),
+        cbTable.fold(Array.empty[Array[Array[Double]]])(t =>
+          SimilarityOps.collectCodebook(rows(t))))
+      models.put(key, model)
+      model
+    }
+  }
 
   def tableOf(kind: String): String = kind match {
     case "band" => "band_index"
@@ -829,8 +879,16 @@ object IndexStore {
   }
 
   private def readTable(store: GraftStore, spark: SparkSession,
-      kind: String, table: String, bucketPred: Long => Boolean): DataFrame = {
-    val all = store.leavesOf(table)
+      kind: String, table: String, bucketPred: Long => Boolean): DataFrame =
+    readIn(store, spark, kind, table, bucketPred)(store.currentLeaves())
+
+  /** [[readTable]] over the leaves of one manifest snapshot `snap` the
+    * caller took — so a search reads its rows from the snapshot its
+    * model came from. */
+  private def readIn(store: GraftStore, spark: SparkSession, kind: String,
+      table: String, bucketPred: Long => Boolean = _ => true)(
+      snap: Seq[store.Leaf]): DataFrame = {
+    val all = snap.filter(_.table == store.physName(table))
     require(all.nonEmpty,
       s"no '$table' leaves in store ${store.root} — run `index build` first")
     checkFormat(store, kind)
@@ -1451,6 +1509,10 @@ object IndexStore {
     * `probe`: (doc_id, text) for band/span, (vec_id, embedding) for
     * sketch. Returns the probe operator's pair/neighbor frame.
     *
+    * The model kinds (ivf, pq, ivfpq) take their collected model from
+    * [[modelOf]]'s cache and their rows from the same manifest
+    * snapshot, so a search racing a rebuild answers from one index.
+    *
     * `where`: optional attribute predicate for the VECTOR kinds
     * (filtered ANN) over columns the index rows carry ([[withAttrs]]
     * passthrough at build/append). Applied to the index-side scan
@@ -1528,53 +1590,48 @@ object IndexStore {
       // the probe list needs only the tiny centroid table; the cell
       // reads that follow are pruned to the probed cells — at rest, an
       // nprobe/k search really does LIST nprobe/k of the data.
-      // One driver job collects the model; the probe-dimension guard
-      // fires per-row inside the ivf_top_cells kernel (during the cell
-      // set collect below — still loud, still before any index read);
-      // the probe list is a trivial projection over the probe batch, so
-      // its second consumer recomputes it instead of paying a
-      // checkpoint job (round-21, driver-job fusion).
-      val centsArr = SimilarityOps.collectCents(
-        read(store, spark, "ivf-centroids"))
+      // The model comes from the cache (a driver job only on its first
+      // search, [[modelOf]]) and the cells from the same snapshot; the
+      // probe-dimension guard fires per-row inside the ivf_top_cells
+      // kernel (during the cell set collect below — still loud, still
+      // before any index read); the probe list is a trivial projection
+      // over the probe batch, so its second consumer recomputes it
+      // instead of paying a checkpoint job.
+      val snap = store.currentLeaves()
+      val model = modelOf(store, spark, kind)(snap)
       val queries = SimilarityOps.unitVectors(probe)
         .select(col("vec_id").as("query_id"), col("unit").as("q_unit"))
       val probes = SimilarityOps.ivfProbesArr(queries,
-        centsArr, SimilarityOps.IvfProbes)
-      val cellSet = probes.select(col("cell")).distinct()
-        .collect().map(_.getInt(0).toLong).toSet
-      SimilarityOps.ivfSearchWithProbes(
-        flt(read(store, spark, "ivf", cellSet.contains)), probes)
+        model.cents, SimilarityOps.IvfProbes)
+      SimilarityOps.ivfSearchWithProbes(flt(readIn(store, spark, kind,
+        tableOf(kind), probedCells(probes).contains)(snap)), probes)
     case "pq" =>
       // candidate scan reads the codes COLUMN of the at-rest leaves
       // (columnar pruning — ~1% of the index bytes); only survivor
       // units are fetched for the rescore
-      SimilarityOps.pqProbe(flt(read(store, spark, "pq")),
-        read(store, spark, "pq-codebook"), probe)
+      val snap = store.currentLeaves()
+      SimilarityOps.pqProbe(flt(readIn(store, spark, kind, tableOf(kind))(
+        snap)), modelOf(store, spark, kind)(snap).codebook, probe)
     case "ivfpq" =>
       // two-phase like ivf: the probe list needs only the tiny model
       // tables; the codes read that follows is manifest-pruned to the
       // probed cells, and the scan reads (vec_id, cell, codes) — unit
       // bytes stay on disk until the survivor rescore.
-      // Each model table is collected by exactly ONE driver job and the
-      // arrays feed every consumer (probe list, query tables, ADC
-      // stride, dimension guards) — round-20's shape paid a second
-      // centroid collect, an eager requireDim agg and a probe-list
-      // checkpoint job, all inside the timed region (round-21 fusion).
+      // The collected arrays feed every consumer (probe list, query
+      // tables, ADC stride, dimension guards); a repeat batch on an
+      // unchanged index collects neither model table.
+      val snap = store.currentLeaves()
+      val model = modelOf(store, spark, kind)(snap)
       val queries = SimilarityOps.unitVectors(probe)
         .select(col("vec_id").as("query_id"), col("unit").as("q_unit"))
-      val centsArr = SimilarityOps.collectCents(
-        read(store, spark, "ivfpq-centroids"))
-      val cbArr = SimilarityOps.collectCodebook(
-        read(store, spark, "ivfpq-codebook"))
-      val probes = SimilarityOps.ivfProbesArr(queries, centsArr,
+      val probes = SimilarityOps.ivfProbesArr(queries, model.cents,
         SimilarityOps.IvfProbes)
-      val cellSet = probes.select(col("cell")).distinct()
-        .collect().map(_.getInt(0).toLong).toSet
-      val idx = flt(read(store, spark, "ivfpq", cellSet.contains))
+      val idx = flt(readIn(store, spark, kind, tableOf(kind),
+        probedCells(probes).contains)(snap))
       SimilarityOps.ivfPqSearchWithProbesArr(
         idx.select(col("vec_id"), col("cell"), col("codes")),
         idx.select(col("vec_id"), col("unit")),
-        centsArr, cbArr, probes, queries)
+        model.cents, model.codebook, probes, queries)
     case "vec" =>
       // near-identical detection: in-bucket pairwise cosine >= threshold
       // against the probe's own sign buckets PLUS their margin-gated
@@ -1809,6 +1866,13 @@ object IndexStore {
       .filter(col("hamming") <= maxHamming)
       .select(col("new_id"), col("existing_id"), col("hamming"))
   }
+
+  /** The cells a probe list touches, for the manifest prune: one job
+    * with no exchange. The list is queries × nprobe ints, so it
+    * de-duplicates on the driver; a `distinct` would add a shuffle
+    * stage job. */
+  private def probedCells(probes: DataFrame): Set[Long] =
+    probes.select(col("cell")).collect().map(_.getInt(0).toLong).toSet
 
   /** Loud probe-side dimension check for the vector kinds — the shared
     * [[SimilarityOps.requireDim]] guard over the probe's `embedding`

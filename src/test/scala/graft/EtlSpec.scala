@@ -254,6 +254,20 @@ class EtlSpec extends AnyFunSuite with BeforeAndAfterAll
   test("tip metadata tracks ingest and rollback atomically (O(1) cursor)") {
     val store = newStore()
     val src = new FixtureSource(fx)
+    // an empty store answers -1 from the manifest alone, with no job
+    val sc = spark.sparkContext
+    GraftTestBus.drain(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      assert(Backfill.maxIngestedHeight(spark, store) == -1L)
+      GraftTestBus.drain(sc)
+      assert(jobs.get == 0, s"${jobs.get} jobs for an empty store's cursor")
+    } finally sc.removeSparkListener(listener)
     Backfill.run(spark, src, store, 0, 149)
     assert(store.currentMeta()(store.metaKey("tip")) == "149")
     assert(Backfill.maxIngestedHeight(spark, store) == 149L)

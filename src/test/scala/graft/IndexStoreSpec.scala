@@ -1,7 +1,9 @@
 package graft
 
 import graft.store.{GraftStore, IndexStore}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.GraftTestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -24,6 +26,43 @@ class IndexStoreSpec extends AnyFunSuite with BeforeAndAfterAll
 
   private def doc(id: Long, tag: String): (Long, String) =
     (id, (0 until 60).map(j => s"$tag${id}w$j").mkString(" "))
+
+  /** `body`'s result and the number of Spark jobs it ran. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    GraftTestBus.drain(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      GraftTestBus.drain(sc)
+      (r, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** (vec_id, embedding) rows around 8 seeded cluster centers. */
+  private def clustered(seed: Int, ids: Seq[Long]): DataFrame = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(seed)
+    val centers = (0 until 8).map(_ => Array.fill(16)(rnd.nextGaussian()))
+    ids.map(i => (i, centers((i % 8).toInt)
+      .map(x => (x + 0.08 * rnd.nextGaussian()).toFloat).toSeq))
+      .toDF("vec_id", "embedding")
+  }
+
+  /** Probes near the first `n` rows of `rows`: nudged copies under
+    * fresh ids, so each one's rank-1 neighbor is its source row. */
+  private def nearProbes(rows: DataFrame, n: Int): DataFrame =
+    rows.orderBy("vec_id").limit(n).select(
+      (col("vec_id") + 90000L).as("vec_id"),
+      transform(col("embedding"), x => x * 1.001f).as("embedding"))
+
+  private def annRows(df: DataFrame): Set[Seq[Any]] =
+    df.collect().map(_.toSeq).toSet
 
   test("span index: at-rest probe finds a substring dup across restarts") {
     import spark.implicits._
@@ -1670,6 +1709,80 @@ class IndexStoreSpec extends AnyFunSuite with BeforeAndAfterAll
     assert(after.forall(_ >= 100L), s"stale rows survived: $after")
   }
 
+  test("a repeat ANN search runs no model job; a rebuild re-collects the " +
+      "model, an append keeps it") {
+    val a = clustered(31, 0L until 400L)
+    val b = clustered(32, 1000L until 1400L)
+    val extra = clustered(33, 5000L until 5040L)
+    for ((kind, modelJobs) <- Seq("ivf" -> 1, "pq" -> 1, "ivfpq" -> 2)) {
+      val root = tempDir(s"graft-idx-model-$kind")
+      def search(r: String, probe: DataFrame) = jobsOf(annRows(
+        IndexStore.search(new GraftStore(r), spark, kind, probe)))
+      IndexStore.build(new GraftStore(root), kind, a)
+      val probeA = nearProbes(a, 5)
+      val (first, firstJobs) = search(root, probeA)
+      val (again, againJobs) = search(root, probeA)
+      assert(again == first, kind)
+      assert(firstJobs - againJobs == modelJobs,
+        s"$kind: first search $firstJobs jobs, repeat $againJobs")
+      // a rebuild writes new model leaves: the next search collects
+      // them and answers like a store this JVM never searched
+      IndexStore.build(new GraftStore(root), kind, b)
+      val probeB = nearProbes(b, 5)
+      val (rebuilt, rebuiltJobs) = search(root, probeB)
+      assert(rebuiltJobs == firstJobs, s"$kind: $rebuiltJobs jobs")
+      val fresh = tempDir(s"graft-idx-model-fresh-$kind")
+      IndexStore.build(new GraftStore(fresh), kind, b)
+      assert(rebuilt == search(fresh, probeB)._1, kind)
+      // an append encodes under the fixed model: its first search
+      // collects no model, and finds the appended vectors
+      IndexStore.append(new GraftStore(root), kind, extra)
+      val probeX = nearProbes(extra, 5)
+      val (appended, appendedJobs) = search(root, probeX)
+      assert(search(root, probeX)._2 == appendedJobs,
+        s"$kind: the append changed the model key")
+      val top = appended.collect { case Seq(q: Long, n: Long, 1, _) => q -> n }
+      assert(top == (5000L until 5005L).map(i => (i + 90000L) -> i).toSet,
+        s"$kind: $top")
+    }
+  }
+
+  test("a search racing a rebuild answers from one index, never from the " +
+      "old model over the new codes") {
+    val a = clustered(41, 0L until 300L)
+    val b = clustered(42, 0L until 300L)
+    val probe = nearProbes(a, 5)
+    for (kind <- Seq("ivf", "pq", "ivfpq")) {
+      val root = tempDir(s"graft-idx-model-race-$kind")
+      def search() = annRows(
+        IndexStore.search(new GraftStore(root), spark, kind, probe))
+      IndexStore.build(new GraftStore(root), kind, a)
+      val ansA = search()
+      IndexStore.build(new GraftStore(root), kind, b)
+      val ansB = search()
+      assert(ansA != ansB, kind)
+      val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+      val builder = new Thread(() =>
+        try (0 until 4).foreach(i =>
+          IndexStore.build(new GraftStore(root), kind, if (i % 2 == 0) a else b))
+        catch { case t: Throwable => errs.add(t) }
+        finally done.set(true))
+      builder.start()
+      var searches = 0
+      try
+        while (!done.get || searches == 0) {
+          val got = search()
+          assert(got == ansA || got == ansB,
+            s"$kind: search $searches mixed two indexes")
+          searches += 1
+        }
+      finally builder.join()
+      assert(errs.isEmpty, s"$kind: rebuild crashed: ${errs.peek()}")
+      assert(search() == ansB, kind)
+    }
+  }
+
   test("wrong-dimension probes against every vector kind fail loudly") {
     import spark.implicits._
     // slice + common-prefix folds would otherwise score the query
@@ -1681,6 +1794,10 @@ class IndexStoreSpec extends AnyFunSuite with BeforeAndAfterAll
       val root = tempDir(s"graft-idx-dim-$kind")
       IndexStore.build(new GraftStore(root), kind,
         base.toDF("vec_id", "embedding"))
+      // a successful search first, so a model kind probes with its
+      // model cached
+      IndexStore.search(new GraftStore(root), spark, kind,
+        base.take(1).toDF("vec_id", "embedding")).collect()
       val shortProbe = Seq((9000L, Seq.fill(8)(
         rnd.nextGaussian().toFloat))).toDF("vec_id", "embedding")
       // the guard is eager (requireDim batch agg) for the non-model

@@ -1052,7 +1052,8 @@ class TrainingOpsSpec extends AnyFunSuite with BeforeAndAfterAll
         .sortBy(n => (-vecs(q).zip(vecs(n)).map { case (a, b) => a * b }.sum, n))
         .take(SimilarityOps.K).map(q -> _)
     }.toSet
-    val approx = SimilarityOps.pqProbe(codes, cb,
+    val approx = SimilarityOps.pqProbe(codes,
+      SimilarityOps.collectCodebook(cb),
       points.filter(_._1 < 10L).toDF("vec_id", "embedding")).collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id")))
       .toSet
