@@ -2,7 +2,7 @@ package graft.cli
 
 import graft.GraftSession
 import graft.chain.{ChainFixture, ChainOps, TransferType}
-import graft.etl.{Backfill, FixtureSource, Network, WatchTokens}
+import graft.etl.{Export, FixtureSource, Network, WatchTokens}
 import graft.operators.{CorpusOps, CurationOps}
 import graft.store.{GraftStore, IndexStore}
 
@@ -10,8 +10,9 @@ import org.apache.spark.sql.SparkSession
 
 /** CLI surface parity (SURVEY §2.12; reference `bin/core-etl/src/main.rs`):
   * `export` (ingest), `view` (read queries), `verify` (integrity checks),
-  * over a [[GraftStore]] directory. The chain source is the deterministic
-  * fixture (a production build points the same code at an RPC source).
+  * over a [[GraftStore]] directory. `export` is one
+  * [[graft.etl.Export.run]] over the JSON-RPC node `--api-url` (or the
+  * `--network` preset) names, else over the deterministic fixture.
   *
   * {{{
   * sbt "runMain graft.cli.Main export --store /tmp/g --blocks 200"
@@ -140,7 +141,8 @@ object Main {
       .getOrElse(Network.Mainnet)
     args.headOption match {
       case Some("export") =>
-        val n = opt("blocks").map(_.toInt).getOrElse(200)
+        // one Export.run (SURVEY §2.12): lazy gate, crash retry with
+        // tail wipe, one retention sweep.
         // --api-url (or GRAFT_API_URL) selects the live JSON-RPC
         // source; a bare --network resolves its preset endpoint
         // (network.rs:11-17) so `export --network devin` needs no other
@@ -156,86 +158,64 @@ object Main {
             fetchPartitions = opt("threads").map(_.toInt).getOrElse(8),
             batchSize = flagOpt(args, "rpc-batch-size").map(_.toInt)
               .getOrElse(64)))
-        val source: graft.etl.ChainSource = rpcSource
-          .getOrElse(new FixtureSource(ChainFixture.build(n)))
-        // --watch-tokens presets resolve against the network id the
-        // NODE reports when one is connected (reference get_network_id
-        // — a --network flag defaulted to mainnet would silently watch
-        // the wrong preset address on a testnet node); the flag only
-        // decides when there is no node to ask or when given explicitly
-        val networkId = (rpcSource, opt("network")) match {
-          case (Some(r), None) => r.networkId()
-          case _ => network.id
-        }
-        val watchTokens = opt("watch-tokens")
-          .map(s => WatchTokens.parse(networkId, s.split(",").toSeq))
-          .getOrElse(WatchTokens.Default)
-        // --modules gates which tables are written (main.rs:52-54)
-        val modules = opt("modules").map(_.split(",").toSeq)
-          .getOrElse(Seq("blocks", "transactions", "token_transfers"))
-        // --lazy (export.rs:40-43 / OP-STR-5): don't ingest while the
-        // node itself is still syncing — poll the REAL xcb_syncing gate
-        // when an endpoint is connected (a fixture is always "synced")
-        if (boolFlag("lazy")) {
-          val gate: () => Boolean =
-            rpcSource.map(r => () => r.syncedGate()).getOrElse(() => true)
-          val pollMs = flagOpt(args, "gate-poll-ms").map(_.toLong)
-            .getOrElse(60000L)
-          // --gate-max-polls N (default 10; N <= 0 = wait forever, the
-          // reference's loop-until-SyncStatus::None behavior,
-          // etl.rs:99-116). A bounded budget must say which way the
-          // gate resolved — 'gate abandoned' is an operational signal,
-          // not a silent fall-through to ingesting from a syncing node.
-          val maxPolls = flagOpt(args, "gate-max-polls").map(_.toInt)
-            .getOrElse(10)
-          var polls = 0
-          var synced = gate()
-          while (!synced && (maxPolls <= 0 || polls < maxPolls)) {
-            polls += 1
-            println(s"[export] node still syncing (poll $polls), waiting")
-            Thread.sleep(pollMs)
-            synced = gate()
+        try {
+          val source: graft.etl.ChainSource = rpcSource.getOrElse(
+            new FixtureSource(ChainFixture.build(
+              opt("blocks").map(_.toInt).getOrElse(200))))
+          // --watch-tokens presets resolve against the network id the
+          // NODE reports when one is connected (reference get_network_id
+          // — a --network flag defaulted to mainnet would silently watch
+          // the wrong preset address on a testnet node); the flag only
+          // decides when there is no node to ask or when given explicitly
+          def networkId = (rpcSource, opt("network")) match {
+            case (Some(r), None) => r.networkId()
+            case _ => network.id
           }
-          if (!synced)
-            println(s"[export] WARNING: sync gate abandoned after " +
-              s"$maxPolls polls — ingesting against a still-syncing " +
-              "node (raise --gate-max-polls, or 0 to wait forever)")
-        }
-        val resume = Backfill.maxIngestedHeight(spark, store)
-        // live mode ingests to the node's TIP unless --blocks bounds it
-        // explicitly; the 200 default only sizes the fixture chain
-        val tip = source.tipHeight(spark)
-        val to = (rpcSource, opt("blocks")) match {
-          case (Some(_), None) => tip
-          case _ => math.min(n - 1L, tip)
-        }
-        // --block N (export.rs:15-17, etl.rs:84-89): where an EMPTY
-        // store starts backfilling; a store with data resumes from its
-        // own tip (the later of the two wins, Export.Config.startBlock
-        // semantics)
-        val from = math.max(resume + 1,
-          opt("block").map(_.toLong).getOrElse(0L))
-        val ingested = Backfill.run(spark, source, store,
-          from, to, watchTokens,
-          opt("address-filter").map(_.split(",").toSeq).getOrElse(Nil),
-          modules)
-        println(s"[export] ingested $ingested blocks (resumed after $resume," +
-          s" modules=${modules.mkString(",")})")
-        // --retention-duration + --cleanup-interval (export.rs:30-38):
-        // the reference daemon re-runs its cleanup every
-        // cleanup_interval seconds; a Spark deployment schedules
-        // re-invocations externally (OP-STR-7), so each run performs ONE
-        // idempotent whole-bucket sweep when retention is configured
-        opt("retention-duration").map(parseDurationSeconds)
-          .filter(_ > 0).foreach { secs =>
+          val cfg = Export.Config(
+            // --block N (export.rs:15-17, etl.rs:84-89): where an EMPTY
+            // store starts backfilling; a store with data resumes from
+            // its own tip
+            startBlock = opt("block").map(_.toLong).getOrElse(0L),
+            // a live node is ingested to its tip unless --blocks bounds
+            // it; the 200 default only sizes the fixture chain
+            endBlock = opt("blocks").map(_.toLong - 1L)
+              .getOrElse(Long.MaxValue),
+            watchTokens = opt("watch-tokens")
+              .map(s => WatchTokens.parse(networkId, s.split(",").toSeq))
+              .getOrElse(WatchTokens.Default),
+            addressFilter = opt("address-filter").map(_.split(",").toSeq)
+              .getOrElse(Nil),
+            // --modules gates which tables are written (main.rs:52-54)
+            modules = opt("modules").map(_.split(",").toSeq)
+              .getOrElse(Seq("blocks", "transactions", "token_transfers")),
+            // --retention-duration (export.rs:30-38): the reference
+            // daemon re-runs its cleanup every --cleanup-interval; a
+            // Spark deployment schedules re-invocations externally
+            // (OP-STR-7), so each run performs ONE whole-bucket sweep
+            retentionSeconds = opt("retention-duration")
+              .map(parseDurationSeconds).getOrElse(0L),
+            // --lazy (export.rs:40-43 / OP-STR-5): don't ingest while
+            // the node itself is still syncing — the REAL xcb_syncing
+            // gate when an endpoint is connected (a fixture is always
+            // "synced"). --gate-max-polls N <= 0 waits forever.
+            lazyGate = rpcSource.filter(_ => boolFlag("lazy"))
+              .map(r => () => r.syncedGate()).getOrElse(() => true),
+            gatePollMs = flagOpt(args, "gate-poll-ms").map(_.toLong)
+              .getOrElse(60000L),
+            maxGatePolls = flagOpt(args, "gate-max-polls").map(_.toInt)
+              .getOrElse(10))
+          val done = Export.run(spark, source, store, cfg)
+          println(s"[export] ingested ${done.ingested} blocks in " +
+            s"${done.attempts} attempt(s), stored tip ${done.finalHeight} " +
+            s"(modules=${cfg.modules.mkString(",")})")
+          if (cfg.retentionSeconds > 0) {
             val cadence = opt("cleanup-interval")
               .map(parseDurationSeconds).getOrElse(3600L)
-            val tipTs = graft.etl.Export.latestTimestamp(spark, store)
-            val dropped = graft.etl.Export.retentionSweep(
-              spark, store, tipTs, secs)
-            println(s"[export] retention sweep (ttl ${secs}s, cadence " +
-              s"${cadence}s): dropped $dropped expired leaf dir(s)")
+            println(s"[export] retention sweep (ttl ${cfg.retentionSeconds}s" +
+              s", cadence ${cadence}s): dropped ${done.dropped} expired " +
+              "leaf dir(s)")
           }
+        } finally rpcSource.foreach(_.close())
 
       case Some("view") =>
         // lazy: building a frame lists every leaf of its table, so a
@@ -890,7 +870,7 @@ object Main {
             // merge the small-leaf tails an incremental ingest accretes
             // (every tail commit = one leaf per touched bucket); retries
             // internally if a concurrent commit moves the snapshot
-            val merged = graft.etl.Export.compact(spark, store,
+            val merged = Export.compact(spark, store,
               opt("max-leaves-per-bucket").map(_.toInt).getOrElse(1))
             println(s"[store] compacted $merged leaf dir(s)")
           case Some("changes") =>

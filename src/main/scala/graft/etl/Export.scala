@@ -7,10 +7,13 @@ import org.apache.spark.sql.SparkSession
   * `bin/core-etl/src/export.rs:46-71`):
   *
   *  - lazy gate: poll until the node reports synced (etl.rs:100-117);
-  *  - crash retry: up to `retries` attempts; one after a failure
-  *    backfills from `wipeOnRetry` heights below the stored tip (but not
-  *    below `startBlock`), so its one commit also replaces the possibly
-  *    torn tail (export.rs:55-69 wipes 100, then re-ingests);
+  *  - crash retry: up to `retries` attempts, each ingesting to the
+  *    source's tip (capped at `endBlock`); one after a failure backfills
+  *    from `wipeOnRetry` heights below the stored tip (but not below
+  *    `startBlock`), so its one commit also replaces the possibly torn
+  *    tail (export.rs:55-69 wipes 100, then re-ingests). A retry whose
+  *    end falls below the stored tip resumes from the cursor instead,
+  *    so it never drops a stored height it does not re-ingest;
   *  - retention: after ingest, drop buckets whose entire height range is
   *    older than the TTL (OP-DEL-3 as whole-partition deletes).
   *
@@ -22,6 +25,7 @@ object Export {
 
   final case class Config(
       startBlock: Long = 0L,
+      endBlock: Long = Long.MaxValue,
       retries: Int = 10,
       wipeOnRetry: Long = 100L,
       watchTokens: Map[String, Seq[String]] = WatchTokens.Default,
@@ -32,7 +36,9 @@ object Export {
       gatePollMs: Long = 60000L,
       maxGatePolls: Int = 10)
 
-  final case class Summary(attempts: Int, ingested: Long, finalHeight: Long)
+  /** `dropped`: leaf dirs the retention sweep retired (0 without one). */
+  final case class Summary(attempts: Int, ingested: Long, finalHeight: Long,
+      dropped: Int)
 
   def run(
       spark: SparkSession,
@@ -42,50 +48,63 @@ object Export {
     // maxGatePolls <= 0 = wait forever (the reference's
     // loop-until-SyncStatus::None, etl.rs:99-116); a bounded budget
     // that runs out logs the abandonment rather than silently
-    // proceeding against a still-syncing node.
+    // proceeding against a still-syncing node. Both lines go to stdout,
+    // beside the CLI's summary.
     var polls = 0
     var synced = cfg.lazyGate()
     while (!synced && (cfg.maxGatePolls <= 0 || polls < cfg.maxGatePolls)) {
       polls += 1
+      println(s"[export] node still syncing (poll $polls), waiting")
       Thread.sleep(cfg.gatePollMs)
       synced = cfg.lazyGate()
     }
     if (!synced)
-      System.err.println(s"[export] WARNING: sync gate abandoned after " +
-        s"${cfg.maxGatePolls} polls — proceeding against a still-syncing " +
-        "node")
+      println(s"[export] WARNING: sync gate abandoned after " +
+        s"${cfg.maxGatePolls} polls — ingesting against a still-syncing " +
+        "node (raise --gate-max-polls, or 0 to wait forever)")
     var attempt = 0
     var ingested = 0L
     var done = false
     var lastFailure: Exception = null
-    var replaceFrom = Option.empty[Long]
+    var retry = false
     while (!done && attempt < cfg.retries) {
       attempt += 1
       try {
-        val from = math.max(replaceFrom.getOrElse(
-          Backfill.maxIngestedHeight(spark, store) + 1), cfg.startBlock)
-        ingested += Backfill.run(spark, source, store, from,
-          source.tipHeight(spark), cfg.watchTokens, cfg.addressFilter,
-          cfg.modules)
+        val stored = Backfill.maxIngestedHeight(spark, store)
+        val resume = math.max(stored + 1, cfg.startBlock)
+        // a cursor already past endBlock has nothing to ingest: no tip call
+        if (resume <= cfg.endBlock) {
+          val to = math.min(cfg.endBlock, source.tipHeight(spark))
+          // a retry also replaces the possibly torn tail, but only when
+          // it re-ingests every stored height: Backfill.run leaves the
+          // heights >= from as exactly [from, to], so a `to` below the
+          // stored tip would drop the heights above it
+          val from =
+            if (retry && to >= stored)
+              math.max(math.max(0L, stored - cfg.wipeOnRetry + 1),
+                cfg.startBlock)
+            else resume
+          ingested += Backfill.run(spark, source, store, from, to,
+            cfg.watchTokens, cfg.addressFilter, cfg.modules)
+        }
         done = true
       } catch {
         case e: Exception =>
           lastFailure = e
-          // the next attempt also replaces the possibly torn tail
-          replaceFrom = Some(math.max(0L,
-            Backfill.maxIngestedHeight(spark, store) - cfg.wipeOnRetry + 1))
+          retry = true
       }
     }
     if (!done) throw new RuntimeException(
       s"export failed after ${cfg.retries} attempts", lastFailure)
-    if (cfg.retentionSeconds > 0) {
-      val tipTs = latestTimestamp(spark, store)
-      retentionSweep(spark, store, tipTs, cfg.retentionSeconds)
-    }
-    Summary(attempt, ingested, Backfill.maxIngestedHeight(spark, store))
+    val dropped =
+      if (cfg.retentionSeconds <= 0) 0
+      else retentionSweep(spark, store, latestTimestamp(spark, store),
+        cfg.retentionSeconds)
+    Summary(attempt, ingested, Backfill.maxIngestedHeight(spark, store),
+      dropped)
   }
 
-  private[graft] def latestTimestamp(spark: SparkSession,
+  private def latestTimestamp(spark: SparkSession,
       store: GraftStore): Long = {
     import org.apache.spark.sql.functions._
     store.read(spark, "blocks").agg(max("timestamp")).head().get(0) match {

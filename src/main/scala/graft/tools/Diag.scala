@@ -48,40 +48,6 @@ object Diag {
       SparkEntry.queries(name)(spark, sfDir).count()
       (System.nanoTime() - t0) / 1e9
     }
-    // `cbc20 N`: microbench of the CodegenFallback decode Generator on N
-    // synthetic calldata rows (selector mix incl. batch fan-out + junk) —
-    // the evidence gate for the carried "give Cbc20DecodeExpr doGenCode"
-    // item: if fallback decode throughput dwarfs any realistic chain
-    // ingest rate, the item stays closed.
-    if (args.headOption.contains("cbc20")) {
-      import org.apache.spark.sql.functions._
-      val n = args.lift(1).map(_.toLong).getOrElse(2000000L)
-      // transfer: selector + 20 pad + 44 addr + 64 value = 136 chars
-      val transfer = graft.functions.Cbc20.SelectorTransfer +
-        "0" * 20 + "ab" * 22 + "%064x".format(31337)
-      val batch = { // batchTransfer of 3: header(200) + addr words +
-        // second length word + value words = 264 + 128*count chars
-        val addrWords = (0 until 3).map(i =>
-          "0" * 20 + "%044x".format(i + 17)).mkString
-        val valWords = (0 until 3).map(i => "%064x".format(1000 + i)).mkString
-        graft.functions.Cbc20.SelectorBatchTransfer + "0" * 128 +
-          "%064x".format(3) + addrWords + "%064x".format(3) + valWords
-      }
-      val word = "0" * 128 // junk tail for the unknown-selector row
-      val df = spark.range(n).selectExpr("cast(id as string) as sender",
-          s"""CASE pmod(id, 4) WHEN 0 THEN '$transfer'
-             | WHEN 1 THEN '$batch'
-             | WHEN 2 THEN concat('deadbeef', '$word')
-             | ELSE NULL END AS input""".stripMargin)
-        .localCheckpoint() // inputs materialized: the clock sees decode only
-      val t0 = System.nanoTime()
-      val out = df.select(graft.functions.Cbc20.cbc20_decode(
-        col("sender"), col("input"))).count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"[diag] cbc20 fallback: $n%d rows -> $out%d transfers " +
-        f"in $sec%.2f s (${n / sec / 1e6}%.1f M rows/s)")
-      spark.stop(); return
-    }
     // `jobs <query>`: run one query twice (cold discarded) and print the
     // warm run's per-job wall times + stage/task counts from a listener —
     // locates scheduling overhead vs real compute in multi-job trainers.

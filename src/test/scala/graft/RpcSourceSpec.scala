@@ -374,6 +374,76 @@ class RpcSourceSpec extends AnyFunSuite with BeforeAndAfterAll
       s"--rpc-batch-size 13 must cap batches, saw ${maxBatchLen.get()}")
   }
 
+  test("CLI export retries a crashed attempt: the retry replaces the " +
+      "stored tail, never below --block, and ends gap-free at the node's " +
+      "tip (export.rs:55-69)") {
+    val url = src.url // forcing `src` starts the loopback node
+    val storeDir = tempDir("graft-rpc-cli-retry")
+    val store = new GraftStore(storeDir, bucketSize = 10L)
+    Backfill.run(spark, fixtureSrc, store, 0, 39)
+    // the wipe height 39 - 100 + 1 clamps to 0, so --block 20 bounds the
+    // retry: buckets 0-1 (heights 0..19) must keep their stored leaves,
+    // buckets 2-3 are the tail the retry replaces
+    val (kept, tail) = store.currentLeaves().partition(_.bucket < 2)
+    assert(kept.nonEmpty && tail.nonEmpty)
+    // six 503s outlast the client's five tries: the first attempt's tip
+    // call throws, the retry's first POST fails once more and recovers
+    failures.set(6)
+    val out = new java.io.ByteArrayOutputStream()
+    try Console.withOut(new java.io.PrintStream(out)) {
+      cli.Main.run(spark, Array("export", "--store", storeDir,
+        "--bucket-size", "10", "--block", "20", "--api-url", url,
+        "--network", "mainnet"))
+    } finally failures.set(0)
+    assert(out.toString.contains("in 2 attempt(s)"), out.toString)
+    val leaves = store.currentLeaves().toSet
+    assert(kept.forall(leaves), "leaves below --block must stay as stored")
+    assert(!tail.exists(leaves), "the retry must replace the stored tail")
+    val blocks = store.read(spark, "blocks")
+    assert(blocks.select("number").collect().map(_.getLong(0)).sorted.toSeq
+      == (0L to 59L))
+    assert(ChainOps.continuityGaps(blocks).count() == 0)
+    assert(rows(blocks) == rows(fixtureSrc.blocks(spark, 0, 59)))
+  }
+
+  test("CLI export retry never drops a stored height it does not " +
+      "re-ingest: a cursor past --blocks makes no node call, and a retry " +
+      "ending below the stored tip resumes from the cursor") {
+    val url = src.url // forcing `src` starts the loopback node
+    def export(storeDir: String, extra: String*): String = {
+      val out = new java.io.ByteArrayOutputStream()
+      // six 503s outlast the client's five tries: a first tip call throws
+      failures.set(6)
+      try Console.withOut(new java.io.PrintStream(out)) {
+        cli.Main.run(spark, Array("export", "--store", storeDir,
+          "--bucket-size", "10", "--api-url", url, "--network",
+          "mainnet") ++ extra)
+      } finally failures.set(0)
+      out.toString
+    }
+    // the store already holds 0..59; --blocks 30 ends below its cursor
+    val capped = tempDir("graft-rpc-cli-capped")
+    val cappedStore = new GraftStore(capped, bucketSize = 10L)
+    Backfill.run(spark, fixtureSrc, cappedStore, 0, 59)
+    val cappedLeaves = cappedStore.currentLeaves().toSet
+    val postsBefore = posts.get()
+    val cappedOut = export(capped, "--blocks", "30")
+    assert(cappedOut.contains("in 1 attempt(s), stored tip 59"), cappedOut)
+    assert(posts.get() == postsBefore, "a finished cursor asks the node nothing")
+    assert(cappedStore.currentLeaves().toSet == cappedLeaves)
+    // the store holds 0..69 and the node's tip is 59: the retry's end is
+    // below the stored tip, so it must not replace the tail from 69 - 99
+    val ahead = tempDir("graft-rpc-cli-ahead")
+    val aheadStore = new GraftStore(ahead, bucketSize = 10L)
+    Backfill.run(spark, new FixtureSource(ChainFixture.build(70)),
+      aheadStore, 0, 69)
+    val aheadLeaves = aheadStore.currentLeaves().toSet
+    val aheadOut = export(ahead)
+    assert(aheadOut.contains("in 2 attempt(s), stored tip 69"), aheadOut)
+    assert(aheadStore.currentLeaves().toSet == aheadLeaves)
+    assert(aheadStore.read(spark, "blocks").count() == 70)
+  }
+
   test("CLI export --lazy polls the node's REAL syncing gate before " +
       "ingesting (export.rs:40-43 / OP-STR-5)") {
     syncingAnswers.set(2) // node reports syncing twice, then synced
