@@ -89,7 +89,7 @@ object Vec {
     // Stride guard: an UnsafeArrayData read past numElements returns
     // unchecked memory, not an exception — a wrong ks (nominal PqCodes
     // against a small-corpus codebook with fewer codes; see
-    // SimilarityOps.pqKsOf) would produce plausible-garbage distances.
+    // SimilarityOps.pqSearch) would produce plausible-garbage distances.
     // One well-predicted compare per row vs M lookups.
     if (tbl.numElements() < m.toLong * ks)
       throw new IllegalArgumentException(

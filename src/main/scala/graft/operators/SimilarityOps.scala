@@ -451,11 +451,10 @@ object SimilarityOps {
     * normalize(sum). */
   val IvfQuant: Double = (1L << 40).toDouble
 
-  /** The centroid model as a driver array indexed by cell — the literal
-    * the assignment expressions close over ([[graft.functions.Vec
-    * .ivf_cell]]). Model-sized by construction (k rows); collecting an
-    * at-rest centroid table is one tiny read, and a trainer-local
-    * LocalTableScan collects without a job at all. */
+  /** An at-rest centroid table ([[ivfCentroidRows]]) collected back
+    * into the driver array indexed by cell — the literal the assignment
+    * expressions close over ([[graft.functions.Vec.ivf_cell]]).
+    * Model-sized by construction (k rows): one tiny read. */
   private[graft] def collectCents(centroids: DataFrame): Array[Array[Double]] = {
     val rows = centroids.select(col("cell"), col("centroid")).collect()
     require(rows.nonEmpty, "centroid model is empty")
@@ -466,10 +465,10 @@ object SimilarityOps {
     arr
   }
 
-  /** The PQ codebook as a driver [m][ks][dsub] array — the literal the
-    * code-assignment expressions close over ([[graft.functions.Vec
-    * .pq_codes]] / [[graft.functions.Vec.pq_table]]). Model-sized (M·ks
-    * rows). */
+  /** An at-rest codebook table ([[pqCodebookRows]]) collected back into
+    * the driver [m][ks][dsub] array — the literal the code-assignment
+    * expressions close over ([[graft.functions.Vec.pq_codes]] /
+    * [[graft.functions.Vec.pq_table]]). Model-sized (M·ks rows). */
   private[graft] def collectCodebook(
       codebook: DataFrame): Array[Array[Array[Double]]] = {
     val rows = codebook.select(col("sub"), col("code"), col("centroid"))
@@ -484,9 +483,10 @@ object SimilarityOps {
     arr
   }
 
-  /** The codebook's exact integer pairs as driver arrays — sq indexed
-    * [sub][code][dpos], cq indexed [sub][code] — for the literal-closure
-    * distortion kernel ([[graft.functions.Vec.pq_dist_q_all]]). */
+  /** An at-rest codebook table's exact integer pairs as driver arrays —
+    * sq indexed [sub][code][dpos], cq indexed [sub][code] — for the
+    * literal-closure distortion kernel
+    * ([[graft.functions.Vec.pq_dist_q_all]]). */
   private[graft] def collectExactPairs(codebook: DataFrame)
       : (Array[Array[Array[Long]]], Array[Array[Long]]) = {
     val rows = codebook.select(col("sub"), col("code"), col("sq"),
@@ -601,7 +601,8 @@ object SimilarityOps {
   /** Spherical k-means coarse quantizer over (vec_id, unit) rows.
     * Returns (cells, centroids): cells = (vec_id, unit, cell) — persist
     * this partitioned BY cell so a probe prunes partitions; centroids =
-    * (cell, centroid), O(k·dim) — the model, not data.
+    * the model, O(k·dim), as the driver array indexed by cell that every
+    * consumer closes over ([[ivfCentroidRows]] renders it as a table).
     *
     * Distribution: the model is driver-resident between rounds, and
     * each Lloyd round is one [[lloydSums]] job: every partition assigns
@@ -619,50 +620,47 @@ object SimilarityOps {
     * `ann_topk_ivf` oracle unrolls the whole trainer in DuckDB. */
   def buildIvfIndex(units: DataFrame, k: Int = IvfCells,
       iters: Int = IvfIters, checkpointCells: Boolean = true)
-      : (DataFrame, DataFrame) = {
-    val spark = units.sparkSession
-    var centroids: Seq[(Int, Seq[Double])] = units
+      : (DataFrame, Array[Array[Double]]) = {
+    var cents: Array[Array[Double]] = units
       .orderBy(graft.functions.Vec.portable_hash64(
         concat(lit("ivf:"), col("vec_id").cast("string"))), col("vec_id"))
       .limit(k)
       .select(col("unit")).collect()
-      .zipWithIndex.map { case (r, i) => i -> r.getSeq[Double](0) }.toSeq
-    require(centroids.nonEmpty, "buildIvfIndex: empty corpus")
-    val dim = centroids.head._2.length
-
-    def centDf: DataFrame = {
-      import spark.implicits._
-      centroids.toDF("cell", "centroid")
-    }
-    def centArr: Array[Array[Double]] = {
-      val arr = new Array[Array[Double]](centroids.length)
-      centroids.foreach { case (cell, v) => arr(cell) = v.toArray }
-      arr
-    }
+      .map(_.getSeq[Double](0).toArray)
+    require(cents.nonEmpty, "buildIvfIndex: empty corpus")
+    val dim = cents.head.length
 
     for (_ <- 1 to iters) {
-      val cents = centArr
-      val acc = lloydSums(units, cents.length, dim, dim, IvfQuant)(v =>
-        Array(graft.functions.Vec.ivfCell(v, cents)))
+      val cur = cents
+      val acc = lloydSums(units, cur.length, dim, dim, IvfQuant)(v =>
+        Array(graft.functions.Vec.ivfCell(v, cur)))
       requireDim(acc, dim, "buildIvfIndex: embeddings must share one dimension")
-      centroids = centroids.map { case (cell, old) =>
-        if (acc.counts(cell) == 0) cell -> old // empty cell keeps its centroid
+      cents = Array.tabulate(cur.length) { cell =>
+        if (acc.counts(cell) == 0) cur(cell) // empty cell keeps its centroid
         else {
           val sv = Array.tabulate(dim)(j => acc.sum(cell * dim + j).doubleValue)
           val norm = math.sqrt(sv.map(x => x * x).sum)
-          cell -> (if (norm == 0) old else sv.map(_ / norm).toSeq)
+          if (norm == 0) cur(cell) else sv.map(_ / norm)
         }
       }
     }
-    // centDf is a LocalTableScan over driver data — free to re-evaluate,
-    // no checkpoint job needed. The cells output is checkpointed when
-    // the caller scans it more than once (ivfSearch: probe list + cell
-    // scan); residual-based callers consume it exactly once into their
-    // own checkpoint and pass checkpointCells = false to skip the
-    // wasted materialization job.
-    val cells = ivfAssignArr(units, centArr)
+    // The cells output is checkpointed when the caller scans it more
+    // than once (ivfSearch: probe list + cell scan); residual-based
+    // callers consume it exactly once into their own checkpoint and pass
+    // checkpointCells = false to skip the wasted materialization job.
+    val cells = ivfAssign(units, cents)
       .select(col("vec_id"), col("unit"), col("cell"))
-    (if (checkpointCells) cells.localCheckpoint() else cells, centDf)
+    (if (checkpointCells) cells.localCheckpoint() else cells, cents)
+  }
+
+  /** The centroid model as its at-rest table (cell, centroid) — what an
+    * index build writes beside its cells, and [[collectCents]] reads
+    * back. */
+  def ivfCentroidRows(spark: SparkSession,
+      cents: Array[Array[Double]]): DataFrame = {
+    import spark.implicits._
+    cents.toSeq.zipWithIndex.map { case (v, cell) => (cell, v.toSeq) }
+      .toDF("cell", "centroid")
   }
 
   /** IVF search: rank cells by query-centroid affinity, scan the top
@@ -670,34 +668,25 @@ object SimilarityOps {
     * list is O(queries·nprobe) — broadcast; with `cells` persisted
     * partitioned by cell, the probe join prunes all unprobed partitions
     * and the scan touches nprobe/k of the corpus. */
-  def ivfSearch(cells: DataFrame, centroids: DataFrame, nprobe: Int,
+  def ivfSearch(cells: DataFrame, cents: Array[Array[Double]], nprobe: Int,
       numQueries: Int = NumQueries): DataFrame =
     ivfSearchWithProbes(cells,
       ivfProbes(cells.filter(col("vec_id") < numQueries)
         .select(col("vec_id").as("query_id"), col("unit").as("q_unit")),
-        centroids, nprobe))
+        cents, nprobe))
 
   /** The probe list — each query's top-`nprobe` cells by centroid
-    * affinity: O(queries·k) work against the tiny centroid table, no
-    * corpus access at all. Split out so an at-rest search
-    * ([[graft.store.IndexStore]]) can compute WHICH cells it needs
-    * before reading any cell data, and prune the rest from the
-    * manifest. */
-  def ivfProbes(queries: DataFrame, centroids: DataFrame,
+    * affinity against the centroid array: O(queries·k) work, no corpus
+    * access at all. Split out so an at-rest search
+    * ([[graft.store.IndexStore]], which takes the array from its model
+    * cache) can compute WHICH cells it needs before reading any cell
+    * data, and prune the rest from the manifest. One projection with the
+    * literal-closure top-cells selection ([[graft.functions.Vec
+    * .ivf_top_cells]]: aff DESC, cell ASC — the row_number tie-break),
+    * no crossJoin, no per-query window exchange; wrong-dimension queries
+    * fail loudly inside the kernel. */
+  def ivfProbes(queries: DataFrame, cents: Array[Array[Double]],
       nprobe: Int): DataFrame =
-    ivfProbesArr(queries, collectCents(centroids), nprobe)
-
-  /** [[ivfProbes]] against an ALREADY-COLLECTED centroid matrix — the
-    * form for callers that need the model array anyway (at-rest
-    * searches take it from [[graft.store.IndexStore]]'s model cache, so
-    * no consumer re-reads the model parquet). Wrong-dimension queries
-    * fail loudly inside the [[graft.functions.Vec.ivf_top_cells]]
-    * kernel. */
-  def ivfProbesArr(queries: DataFrame, cents: Array[Array[Double]],
-      nprobe: Int): DataFrame =
-    // literal-closure top-cells selection (aff DESC, cell ASC — the
-    // row_number tie-break) over the collected model: one projection,
-    // no crossJoin, no per-query window exchange
     queries.select(col("query_id"), col("q_unit"),
       explode(graft.functions.Vec.ivf_top_cells(col("q_unit"), cents,
         nprobe)).as("cell"))
@@ -726,15 +715,10 @@ object SimilarityOps {
   /** Assign unit vectors to their nearest EXISTING centroid — the IVF
     * ingest path for new batches: the model (centroids) stays fixed, the
     * new vectors just land in their cells. One shuffle-free projection
-    * of the batch against the collected (model-sized) centroid matrix —
-    * same dot fold and max(struct(dot, cell)) tie-break as the
-    * crossJoin + groupBy form it replaces ([[graft.functions.Vec
-    * .ivfCell]]). */
-  def ivfAssign(units: DataFrame, centroids: DataFrame): DataFrame =
-    ivfAssignArr(units, collectCents(centroids))
-
-  private def ivfAssignArr(units: DataFrame,
-      cents: Array[Array[Double]]): DataFrame =
+    * of the batch against the (model-sized) centroid array — same dot
+    * fold and max(struct(dot, cell)) tie-break as the crossJoin +
+    * groupBy form it replaces ([[graft.functions.Vec.ivfCell]]). */
+  def ivfAssign(units: DataFrame, cents: Array[Array[Double]]): DataFrame =
     units.select(col("vec_id"),
       graft.functions.Vec.ivf_cell(col("unit"), cents).as("cell"),
       col("unit"))
@@ -1003,11 +987,18 @@ object SimilarityOps {
     * a plain join-aggregate while the engine uses an array lookup. */
   val PqQuant: Double = (1L << 32).toDouble
 
+  /** A trained PQ model: `centroids` indexed [sub][code][dpos] — the
+    * literal every code-assignment kernel closes over — and each
+    * centroid's exact integer twin, `sq` [sub][code][dpos] and `cq`
+    * [sub][code] with value sq/(cq·Q), the pair the hash-gated
+    * distortion statistic is defined against ([[graft.functions.Vec
+    * .distq]]: no double feeds a floor). [[pqCodebookRows]] renders it
+    * as a table. */
+  final case class PqCodebook(centroids: Array[Array[Array[Double]]],
+      sq: Array[Array[Array[Long]]], cq: Array[Array[Long]])
+
   /** Train per-subspace codebooks over (vec_id, unit) rows: M·ks
-    * centroids of dimension dim/M. Returns (subs, codebook):
-    * `subs` = (vec_id, sub, subvec) — the one-scan subvector explode,
-    * checkpointed for reuse by [[pqEncode]]/[[pqDistanceTables]];
-    * `codebook` = (sub, code, centroid), O(M·ks·dsub) — the model.
+    * centroids of dimension dim/M, with their exact pairs.
     *
     * Distribution: each Lloyd round is one [[lloydSums]] job — every
     * partition assigns its vectors' M codes with the literal-closure
@@ -1021,79 +1012,69 @@ object SimilarityOps {
     * the first round's fold — a ragged corpus would silently skew
     * subspace boundaries). */
   def buildPqCodebooks(units: DataFrame, m: Int = PqSubs,
-      ks: Int = PqCodes, iters: Int = PqIters): (DataFrame, DataFrame) = {
-    val spark = units.sparkSession
+      ks: Int = PqCodes, iters: Int = PqIters): PqCodebook = {
     val initRows = units
       .orderBy(graft.functions.Vec.portable_hash64(
         concat(lit("pq:"), col("vec_id").cast("string"))), col("vec_id"))
       .limit(ks)
       .select(col("unit")).collect()
-      .map(_.getSeq[Double](0))
+      .map(_.getSeq[Double](0).toArray)
     require(initRows.nonEmpty, "buildPqCodebooks: empty corpus")
     val dim = initRows.head.length
     require(dim % m == 0,
       s"buildPqCodebooks: dim $dim not divisible by $m subspaces")
     val dsub = dim / m
     val ksA = initRows.length
-    var cents: Map[(Int, Int), Seq[Double]] = (for {
-      (v, code) <- initRows.zipWithIndex
-      sub <- 0 until m
-    } yield (sub, code) -> v.slice(sub * dsub, (sub + 1) * dsub)).toMap
-    // Exact integer twin of every centroid: (sq, cq) with value
-    // sq/(cq·Q) — the pair the hash-gated distortion statistic is
-    // defined against ([[graft.functions.Vec.distq]]: no double feeds a
-    // floor). Updated cells carry the round's (S, c) verbatim; an init
-    // cell that never wins a member is represented as its Q-quantized
-    // slice with cq = 1 (≈ the double centroid to within ½ grid step —
-    // the oracle mirrors the same convention, so both sides agree
-    // bit-for-bit by construction rather than by IEEE luck).
-    var exacts: Map[(Int, Int), (Seq[Long], Long)] = (for {
-      (v, code) <- initRows.zipWithIndex
-      sub <- 0 until m
-    } yield (sub, code) -> ((v.slice(sub * dsub, (sub + 1) * dsub)
-      .map(x => math.floor(x * PqQuant + 0.5).toLong), 1L))).toMap
-
-    def centDf: DataFrame = {
-      import spark.implicits._
-      cents.toSeq.map { case ((sub, code), c) =>
-        val (sq, cq) = exacts((sub, code))
-        (sub, code, c, sq, cq)
-      }.toDF("sub", "code", "centroid", "sq", "cq")
-    }
-    def cbArr: Array[Array[Array[Double]]] =
-      Array.tabulate(m)(s => Array.tabulate(ksA)(c => cents((s, c)).toArray))
+    val cents = Array.tabulate(m, ksA)((sub, code) =>
+      initRows(code).slice(sub * dsub, (sub + 1) * dsub))
+    // An init cell that never wins a member keeps, as its exact pair,
+    // its Q-quantized slice with cq = 1 (≈ the double centroid to within
+    // ½ grid step — the oracle mirrors the same convention, so both
+    // sides agree bit-for-bit by construction rather than by IEEE luck).
+    // Updated cells carry the round's (S, c) verbatim.
+    val sq = cents.map(_.map(_.map(x => math.floor(x * PqQuant + 0.5).toLong)))
+    val cq = Array.fill(m, ksA)(1L)
 
     for (_ <- 1 to iters) {
-      val cb = cbArr
       // group of (sub, code) = sub·ks + code; slot = group·dsub + pos
       val acc = lloydSums(units, m * ksA, dsub, dim, PqQuant) { v =>
-        val codes = graft.functions.Vec.pqCodes(v, cb)
+        val codes = graft.functions.Vec.pqCodes(v, cents)
         Array.tabulate(m)(s => s * ksA + codes.getInt(s))
       }
       requireDim(acc, dim, "buildPqCodebooks: embeddings must share dimension")
-      def slot(key: (Int, Int)) = key._1 * ksA + key._2
-      cents = cents.map { case (key, old) =>
-        val c = acc.counts(slot(key))
-        if (c == 0) key -> old // empty cell keeps its centroid
-        // S/(c·Q): S exact, c·Q exact in double below 2^53 — one
-        // division, same on every engine
-        else key -> Seq.tabulate(dsub)(p =>
-          acc.sum(slot(key) * dsub + p).doubleValue / (c.toDouble * PqQuant))
-      }
-      exacts = exacts.map { case (key, old) =>
-        val c = acc.counts(slot(key))
-        if (c == 0) key -> old // empty cell keeps its exact pair too
-        // longValueExact: |S| ≤ c·2³², so this only throws past
-        // ~2²⁰ members per cell × full-scale components — loud, not a
-        // silently rounded statistic
-        else key -> ((Seq.tabulate(dsub)(p =>
-          acc.sum(slot(key) * dsub + p).longValueExact()), c))
+      for (sub <- 0 until m; code <- 0 until ksA) {
+        val slot = sub * ksA + code
+        val c = acc.counts(slot)
+        // an empty cell keeps its centroid and its exact pair
+        if (c != 0) {
+          // S/(c·Q): S exact, c·Q exact in double below 2^53 — one
+          // division, same on every engine
+          cents(sub)(code) = Array.tabulate(dsub)(p =>
+            acc.sum(slot * dsub + p).doubleValue / (c.toDouble * PqQuant))
+          // longValueExact: |S| ≤ c·2³², so this only throws past
+          // ~2²⁰ members per cell × full-scale components — loud, not a
+          // silently rounded statistic
+          sq(sub)(code) = Array.tabulate(dsub)(p =>
+            acc.sum(slot * dsub + p).longValueExact())
+          cq(sub)(code) = c
+        }
       }
     }
-    // subs returns LAZY (callers only slice query rows out of it, or
-    // re-derive it in specs); centDf is a LocalTableScan over driver
-    // data — free to re-evaluate and to collect, no checkpoint job.
-    (pqSubvectors(units, dsub, m), centDf)
+    PqCodebook(cents, sq, cq)
+  }
+
+  /** The codebook as its at-rest table (sub, code, centroid, sq, cq) —
+    * what an index build writes beside its codes, [[collectCodebook]] /
+    * [[collectExactPairs]] read back, and the reference forms
+    * ([[pqAssign]], [[pqEncode]], [[pqDistanceTables]]) join against. */
+  def pqCodebookRows(spark: SparkSession, cb: PqCodebook): DataFrame = {
+    import spark.implicits._
+    (for {
+      sub <- cb.centroids.indices
+      code <- cb.centroids(sub).indices
+    } yield (sub, code, cb.centroids(sub)(code).toSeq,
+      cb.sq(sub)(code).toSeq, cb.cq(sub)(code)))
+      .toDF("sub", "code", "centroid", "sq", "cq")
   }
 
   /** Nearest-code assignment of subvectors under a fixed codebook —
@@ -1112,8 +1093,8 @@ object SimilarityOps {
 
   /** Encode a corpus: (vec_id, codes) with codes = array of M code ids
     * ordered by sub — the at-rest PQ index row (M·4 bits of payload).
-    * Kept on the exploded-subvector shape for API compatibility; the
-    * hot paths use [[pqEncodeUnits]] (one shuffle-free projection). */
+    * The exploded-subvector reference form; the hot paths use
+    * [[pqEncodeUnits]] (one shuffle-free projection). */
   def pqEncode(subs: DataFrame, codebook: DataFrame): DataFrame =
     pqAssign(subs, codebook)
       .groupBy(col("vec_id"))
@@ -1123,14 +1104,10 @@ object SimilarityOps {
 
   /** Encode (vec_id, unit) rows in ONE shuffle-free projection: all M
     * codes per row from the literal-closure argmin kernel
-    * ([[graft.functions.Vec.pq_codes]] — same per-sub l2sq fold and
-    * min(struct(d2, code)) tie-break as [[pqEncode]]'s join + two
-    * groupBy exchanges). */
-  def pqEncodeUnits(unitsDf: DataFrame, codebook: DataFrame): DataFrame =
-    pqEncodeUnitsArr(unitsDf, collectCodebook(codebook))
-
-  /** [[pqEncodeUnits]] against an ALREADY-COLLECTED codebook. */
-  def pqEncodeUnitsArr(unitsDf: DataFrame,
+    * ([[graft.functions.Vec.pq_codes]] over the centroid array — same
+    * per-sub l2sq fold and min(struct(d2, code)) tie-break as
+    * [[pqEncode]]'s join + two groupBy exchanges). */
+  def pqEncodeUnits(unitsDf: DataFrame,
       cb: Array[Array[Array[Double]]]): DataFrame =
     unitsDf.select(col("vec_id"), graft.functions.Vec
       .pq_codes(col("unit"), cb).as("codes"))
@@ -1158,31 +1135,18 @@ object SimilarityOps {
       s"transform(sequence(0, ${m - 1}), s -> slice(unit, s*$dsub+1, $dsub))"))
       .as(Seq("sub", "subvec")))
 
-  /** Distance tables for EXTERNAL query units against an at-rest
-    * codebook (the [[pqDistanceTables]] entry point when the queries
-    * did not come from the trainer's subvector explode): slices the
-    * query vectors with the codebook's own subspace geometry —
-    * O(queries) work, no corpus access. */
-  def pqQueryTables(queryUnits: DataFrame, codebook: DataFrame,
-      m: Int = PqSubs): DataFrame =
-    pqQueryTablesArr(queryUnits, collectCodebook(codebook), m)
-
-  /** [[pqQueryTables]] against an ALREADY-COLLECTED codebook — the form
-    * for callers that hold the model array (at-rest searches take it
-    * from [[graft.store.IndexStore]]'s model cache and derive tables, ks
-    * and the dimension guard from it). The dimension guard lives in the
-    * [[graft.functions.Vec.pq_table]] kernel — per-row, loud, no extra
-    * job. */
-  def pqQueryTablesArr(queryUnits: DataFrame,
-      cb: Array[Array[Array[Double]]], m: Int = PqSubs): DataFrame = {
-    // literal-closure table build ([[graft.functions.Vec.pq_table]] —
-    // the same floor(d2·Q + ½) entries in the same (sub, code) order as
-    // the join + collect_list form): one projection over the queries
-    require(cb.length == m,
-      s"codebook has ${cb.length} subspaces, caller expects $m")
+  /** Distance tables for query units (vec_id, unit) against the
+    * centroid array — [[pqDistanceTables]]' result without the subvector
+    * explode: one literal-closure projection over the queries
+    * ([[graft.functions.Vec.pq_table]] slices each query with the
+    * codebook's own subspace geometry and emits the same floor(d2·Q + ½)
+    * entries in the same (sub, code) order as the join + collect_list
+    * form). O(queries) work, no corpus access; the dimension guard fires
+    * per row inside the kernel, loud, with no extra job. */
+  def pqQueryTables(queryUnits: DataFrame,
+      cb: Array[Array[Array[Double]]]): DataFrame =
     queryUnits.select(col("vec_id").as("query_id"), graft.functions.Vec
       .pq_table(col("unit"), cb, PqQuant).as("tblq"))
-  }
 
   /** Loud dimension check for a query/probe/ingest batch: slicing and
     * the common-prefix distance folds would silently score a
@@ -1202,30 +1166,19 @@ object SimilarityOps {
           s"the $model's $expected")
   }
 
-  /** Codes per subspace recorded in a codebook — max code + 1 (codes
-    * are dense 0..c−1 for every sub by construction: the trainer seeds
-    * all subs from the same ≤[[PqCodes]] row sample and empty cells
-    * keep their centroid). A codebook trained over a corpus SMALLER
-    * than ks has fewer codes, and the flattened ADC table layout and
-    * the [[graft.functions.Vec]].pq_adc stride must both use this
-    * actual count — striding a short table by the nominal [[PqCodes]]
-    * would read the wrong subspace's entries for low subs and past the
-    * array's end for high ones: silent garbage neighbors, the failure
-    * mode the probe-side dimension guards exist to prevent. One tiny
-    * agg over the broadcast-sized model table. */
-  def pqKsOf(codebook: DataFrame): Int =
-    codebook.agg(max(col("code"))).head().getInt(0) + 1
-
   /** ADC top-k search over an encoded corpus: the candidate scan reads
     * CODES only (M ints/row — with ks=16, M·4 bits of entropy; ~1% of
     * the embedding bytes), ranks by the integer ADC distance, and exact
     * cosine rescores just the top [[RescoreBudget]] — the sketch-search
     * shape with the byte footprint of the index divided by ~64.
-    * `ks` must be the codebook's ACTUAL code count ([[pqKsOf]]) — the
-    * ADC stride over the flattened tables; the default is only correct
-    * for codebooks trained over ≥ [[PqCodes]] vectors. */
+    * `ks` is the ADC stride over the flattened tables and must be the
+    * codebook's ACTUAL code count, `cb(0).length`: a codebook trained
+    * over fewer than [[PqCodes]] vectors has fewer codes (the trainer
+    * seeds every sub from the same ≤ ks row sample), and striding its
+    * short tables by the nominal count would read the wrong subspace's
+    * entries — silent garbage neighbors. */
   def pqSearch(codes: DataFrame, units: DataFrame, tables: DataFrame,
-      ks: Int = PqCodes): DataFrame =
+      ks: Int): DataFrame =
     pqSearchWith(codes, units, tables,
       units.filter(col("vec_id") < NumQueries)
         .select(col("vec_id").as("query_id"), col("unit").as("q_unit")), ks)
@@ -1254,19 +1207,18 @@ object SimilarityOps {
         col("rank"), floor(col("cos") * 10000).cast("long").as("cos_bp"))
   }
 
-  /** Encode a batch against an at-rest codebook (model fixed — the PQ
-    * ingest path for new vectors, [[graft.store.IndexStore]] append):
-    * (vec_id, codes, unit) rows, unit kept alongside so the columnar
-    * index leaf serves both the code scan (codes column only — ~1% of
-    * the bytes) and the deferred rescore fetch (unit column, survivors
-    * only). */
-  def pqEncodeWith(unitsDf: DataFrame, codebook: DataFrame): DataFrame = {
-    val cb = collectCodebook(codebook)
-    val dsub = cb(0)(0).length
+  /** Encode a batch against a fixed codebook's centroid array (the PQ
+    * ingest path for new vectors, [[graft.store.IndexStore]] build and
+    * append): (vec_id, codes, unit) rows, unit kept alongside so the
+    * columnar index leaf serves both the code scan (codes column only —
+    * ~1% of the bytes) and the deferred rescore fetch (unit column,
+    * survivors only). */
+  def pqEncodeWith(unitsDf: DataFrame,
+      cb: Array[Array[Array[Double]]]): DataFrame = {
     // ingest-side guard: a wrong-dimension batch would slice tail
     // subspaces empty (their l2sq over the empty prefix is 0 to every
     // centroid → code 0) and COMMIT meaningless codes permanently
-    requireDim(unitsDf, "unit", PqSubs * dsub, "codebook")
+    requireDim(unitsDf, "unit", cb.length * cb(0)(0).length, "codebook")
     // one shuffle-free projection — no explode, no join back to units
     unitsDf.select(col("vec_id"), graft.functions.Vec
       .pq_codes(col("unit"), cb).as("codes"), col("unit"))
@@ -1279,8 +1231,8 @@ object SimilarityOps {
     * column and the rescore fetches only survivor units (column
     * pruning does both under one relation). A query whose vec_id
     * collides with an index id is excluded from its own neighbors,
-    * like the sketch/ivf probes. `cb` is the collected codebook
-    * ([[collectCodebook]]). */
+    * like the sketch/ivf probes. `cb` is the codebook's centroid
+    * array. */
   def pqProbe(index: DataFrame, cb: Array[Array[Array[Double]]],
       queryEmb: DataFrame): DataFrame = {
     // tables, ks (= codes per subspace) and the dimension guard all
@@ -1288,7 +1240,7 @@ object SimilarityOps {
     val qUnits = unit(queryEmb).select(col("vec_id"), col("unit"))
     pqSearchWith(index.select(col("vec_id"), col("codes")),
       index.select(col("vec_id"), col("unit")),
-      pqQueryTablesArr(qUnits, cb),
+      pqQueryTables(qUnits, cb),
       qUnits.select(col("vec_id").as("query_id"),
         col("unit").as("q_unit")), cb(0).length)
   }
@@ -1492,13 +1444,10 @@ object SimilarityOps {
     (s, dir) => {
       val units = unit(emb(s, dir))
         .select(col("vec_id"), col("unit")).localCheckpoint()
-      val (_, codebook) = buildPqCodebooks(units)
-      // one collect feeds encode, tables and the ADC stride (the
-      // codebook is a LocalTableScan — collecting is driver-local, but
-      // re-collecting per consumer re-analyzed the frame three times)
-      val cb = collectCodebook(codebook)
-      pqSearch(pqEncodeUnitsArr(units, cb), units,
-        pqQueryTablesArr(units.filter(col("vec_id") < NumQueries), cb),
+      // the one centroid array feeds encode, tables and the ADC stride
+      val cb = buildPqCodebooks(units).centroids
+      pqSearch(pqEncodeUnits(units, cb), units,
+        pqQueryTables(units.filter(col("vec_id") < NumQueries), cb),
         cb(0).length)
     },
     Some(pqOracleSql))
@@ -1518,28 +1467,12 @@ object SimilarityOps {
     (s, dir) => {
       val units = unit(emb(s, dir))
         .select(col("vec_id"), col("unit")).localCheckpoint()
-      val (_, codebook) = buildPqCodebooks(units)
-      val cb = collectCodebook(codebook)
-      val (sq, cq) = collectExactPairs(codebook)
-      // one scan: assign all M codes and compute all M per-sub integer
-      // distortions per row in a single projection (same argmin and
-      // distq arithmetic as the exploded join-aggregate form), then a
-      // tiny 8-group partial-agg — no subvector explode, no model joins
-      val perSub = units
-        .select(posexplode(graft.functions.Vec.pq_dist_q_all(col("unit"),
-          graft.functions.Vec.pq_codes(col("unit"), cb), sq, cq))
-          .as(Seq("sub", "d2q")))
-        .groupBy(col("sub"))
-        .agg(count(lit(1)).as("n_vecs"), sum(col("d2q")).as("distortion_q"))
-        .localCheckpoint()
-      perSub
-        .select(col("sub").cast("string").as("scope"), col("n_vecs"),
-          col("distortion_q"))
-        .unionAll(perSub
-          .agg(sum(col("n_vecs")).as("n_vecs"),
-            sum(col("distortion_q")).as("distortion_q"))
-          .select(lit("all").as("scope"), col("n_vecs"),
-            col("distortion_q")))
+      val cb = buildPqCodebooks(units)
+      // the codes as the trainer's own final assignment, measured like
+      // stored codes: one projection, no subvector explode, no model join
+      pqStoredDistortion(units.select(col("unit"),
+        graft.functions.Vec.pq_codes(col("unit"), cb.centroids).as("codes")),
+        cb.sq, cb.cq)
     },
     Some(
       s"""WITH $unitCteSql,
@@ -1623,10 +1556,9 @@ object SimilarityOps {
       withGroundTruth(exactF) {
         val units = unit(emb(s, dir))
           .select(col("vec_id"), col("unit")).localCheckpoint()
-        val (_, codebook) = buildPqCodebooks(units)
-        val cb = collectCodebook(codebook)
-        val pq = pqSearch(pqEncodeUnitsArr(units, cb), units,
-          pqQueryTablesArr(units.filter(col("vec_id") < NumQueries), cb),
+        val cb = buildPqCodebooks(units).centroids
+        val pq = pqSearch(pqEncodeUnits(units, cb), units,
+          pqQueryTables(units.filter(col("vec_id") < NumQueries), cb),
           cb(0).length)
           .select(col("query_id"), col("neighbor_id"))
         recallFrame(exactF(), pq)
@@ -1658,32 +1590,29 @@ object SimilarityOps {
     val (cells, cents) = buildIvfIndex(units, checkpointCells = false)
     // residual against the literal centroid matrix — a projection over
     // the checkpointed cells, no broadcast join
-    val centsArr = collectCents(cents)
     val residuals = cells.select(col("vec_id"), col("cell"),
-      graft.functions.Vec.ivf_residual(col("unit"), col("cell"), centsArr)
+      graft.functions.Vec.ivf_residual(col("unit"), col("cell"), cents)
         .as("unit"))
       .localCheckpoint()
-    val (_, cb) = buildPqCodebooks(
-      residuals.select(col("vec_id"), col("unit")))
-    val cbArr = collectCodebook(cb)
+    val cb = buildPqCodebooks(
+      residuals.select(col("vec_id"), col("unit"))).centroids
     // codes in one projection over the checkpointed residuals — the
     // encode + two joins the exploded form paid are gone
     val codes = residuals.select(col("vec_id"), col("cell"),
-      graft.functions.Vec.pq_codes(col("unit"), cbArr).as("codes"))
+      graft.functions.Vec.pq_codes(col("unit"), cb).as("codes"))
     val queries = units.filter(col("vec_id") < numQueries)
       .select(col("vec_id").as("query_id"), col("unit").as("q_unit"))
-    ivfPqSearchWithProbesArr(codes, units, centsArr, cbArr,
-      ivfProbesArr(queries, centsArr, nprobe), queries)
+    ivfPqSearchWithProbesArr(codes, units, cents, cb,
+      ivfProbes(queries, cents, nprobe), queries)
   }
 
-  /** Encode a batch against FIXED at-rest IVF-PQ models (centroids +
-    * codebook): cell assignment, residual, PQ codes — the ingest path
-    * for new vectors ([[graft.store.IndexStore]] append). Returns
-    * (vec_id, codes, cell, unit). */
-  def ivfPqEncodeWith(unitsDf: DataFrame, cents: DataFrame,
-      cb: DataFrame): DataFrame = {
-    val centsArr = collectCents(cents)
-    val cbArr = collectCodebook(cb)
+  /** Encode a batch against FIXED IVF-PQ models (the centroid array
+    * and the residual codebook's centroid array): cell assignment,
+    * residual, PQ codes — the ingest path for new vectors
+    * ([[graft.store.IndexStore]] append). Returns (vec_id, codes, cell,
+    * unit). */
+  def ivfPqEncodeWith(unitsDf: DataFrame, centsArr: Array[Array[Double]],
+      cbArr: Array[Array[Array[Double]]]): DataFrame = {
     // ingest-side guard (same rationale as [[pqEncodeWith]]): cells and
     // residuals from truncated-prefix distances would commit silently
     requireDim(unitsDf, "unit", centsArr(0).length, "coarse model")
@@ -1699,8 +1628,7 @@ object SimilarityOps {
   }
 
   /** Scan + rescore stage of the IVF-PQ search, over explicit probes
-    * (from [[ivfProbesArr]]) and queries, against collected model
-    * arrays — the entry point for at-rest searches that compute WHICH
+    * (from [[ivfProbes]]) and queries, against the model arrays — the entry point for at-rest searches that compute WHICH
     * cells they need before reading any cell data, and that take the
     * models from [[graft.store.IndexStore]]'s cache. `codes`: (vec_id,
     * cell, codes); `units`: (vec_id, unit) for the rescore fetch. The
@@ -1742,20 +1670,19 @@ object SimilarityOps {
   }
 
   /** Quantized distortion of STORED codes under a codebook: for every
-    * (vec_id, codes, unit) row — `unit` in the codebook's own space
-    * (raw unit for plain PQ, residual for IVF-PQ) — the integer-domain
+    * (codes, unit) row — `unit` in the codebook's own space (raw unit
+    * for plain PQ, residual for IVF-PQ) — the integer-domain
     * [[graft.functions.Vec.distq]] statistic against centroid[stored
-    * code]'s exact (sq, cq) pair, per sub plus an 'all' row (same
-    * no-double-feeds-a-floor discipline as [[pqDistortion]]). NOT a
-    * re-assignment: this measures the codes as committed, so the number
-    * drifts UP as the corpus distribution moves away from the trained
-    * model — the re-build trigger a deployment watches
-    * ([[graft.store.IndexStore.driftReport]]). */
-  def pqStoredDistortion(rows: DataFrame, codebook: DataFrame): DataFrame = {
-    val (sq, cq) = collectExactPairs(codebook)
+    * code]'s exact pair (`sq`, `cq` as in [[PqCodebook]]), per sub plus
+    * an 'all' row. NOT a re-assignment: this measures the codes as
+    * committed, so the number drifts UP as the corpus distribution
+    * moves away from the trained model — the re-build trigger a
+    * deployment watches ([[graft.store.IndexStore.driftReport]]). */
+  def pqStoredDistortion(rows: DataFrame, sq: Array[Array[Array[Long]]],
+      cq: Array[Array[Long]]): DataFrame = {
     // all M per-sub distortions per row in one projection against the
-    // collected exact pairs (same distq arithmetic) — the exploded form
-    // paid two explodes and two joins before its aggregation
+    // exact pairs (same distq arithmetic) — the exploded form paid two
+    // explodes and two joins before its aggregation
     val perSub = rows
       .select(posexplode(graft.functions.Vec.pq_dist_q_all(col("unit"),
         col("codes"), sq, cq)).as(Seq("sub", "d2q")))
@@ -1902,8 +1829,7 @@ object SimilarityOps {
             .as("embedding"))
       val units = unit(base.unionAll(dups))
         .select(col("vec_id"), col("unit")).localCheckpoint()
-      val (_, cb) = buildPqCodebooks(units)
-      pqEncodeUnits(units, cb)
+      pqEncodeUnits(units, buildPqCodebooks(units).centroids)
         .groupBy(col("codes"))
         .agg(sort_array(collect_list(col("vec_id"))).as("ids"))
         .filter(size(col("ids")).between(2, SemanticGroupCap))
@@ -1993,7 +1919,7 @@ object SimilarityOps {
       .localCheckpoint()
     val bu = unit(benchEmb.withColumnRenamed("eval_id", "vec_id"))
       .select(col("vec_id"), col("unit"))
-    val (_, cb) = buildPqCodebooks(cu)
+    val cb = buildPqCodebooks(cu).centroids
     contaminationFromCodes(
       pqEncodeUnits(cu, cb), cu,
       pqEncodeWith(bu, cb)

@@ -202,19 +202,20 @@ object IndexStore {
   val IvfPqCentroidsTable = "ivfpq_centroids"
   val IvfPqCodebookTable = "ivfpq_codebook"
 
-  /** The collected model of one model-carrying ANN kind — centroids for
-    * `ivf`, the codebook for `pq`, both for `ivfpq`; an array the kind
-    * has no table for is empty — with the leaf dirs of the model tables
-    * it was collected from. */
+  /** The model of one model-carrying ANN kind as driver arrays —
+    * centroids for `ivf`, the codebook's centroids for `pq`, both for
+    * `ivfpq`; an array the kind has no table for is empty — with the
+    * leaf dirs of the model tables that hold it. */
   private final case class AnnModel(dirs: Seq[String],
       cents: Array[Array[Double]], codebook: Array[Array[Array[Double]]])
 
   /** One collected model per (canonical store root, kind), JVM-wide.
     * Committed leaves never change and leaf dirs are unique per write,
     * so the model tables' dirs name the model: a build that re-trains
-    * writes new dirs and the next search re-collects, while an append
-    * (which encodes under the fixed model) or a compaction keeps them
-    * and the search runs no model job. A miss replaces the entry. */
+    * writes new dirs and puts the model it trained under them
+    * ([[seedModel]]), while an append (which encodes under the fixed
+    * model) or a compaction keeps them and the search runs no model
+    * job. A miss replaces the entry. */
   private val models =
     new java.util.concurrent.ConcurrentHashMap[(String, String), AnnModel]()
 
@@ -222,24 +223,39 @@ object IndexStore {
     * collects its model again (a benchmark timing a first search). */
   private[graft] def clearModels(): Unit = models.clear()
 
+  /** The (centroids, codebook) model tables of a model-carrying ANN
+    * kind. */
+  private def modelTables(kind: String): (Option[String], Option[String]) =
+    kind match {
+      case "ivf" => (Some(IvfCentroidsTable), None)
+      case "pq" => (None, Some(PqCodebookTable))
+      case _ => (Some(IvfPqCentroidsTable), Some(IvfPqCodebookTable))
+    }
+
+  /** `kind`'s model leaves among `leaves`, by model table. */
+  private def modelLeaves(store: GraftStore, kind: String)(
+      leaves: Seq[store.Leaf]): Map[String, Seq[store.Leaf]] = {
+    val (centsTable, cbTable) = modelTables(kind)
+    (centsTable ++ cbTable)
+      .map(t => t -> leaves.filter(_.table == store.physName(t))).toMap
+  }
+
+  private def modelKey(store: GraftStore, kind: String): (String, String) =
+    (java.nio.file.Paths.get(store.root).toAbsolutePath.normalize.toString,
+      kind)
+
   /** `kind`'s collected model as of the snapshot `snap` (one manifest's
     * leaves): from the cache when its dirs match, else collected from
     * exactly those leaves — one driver job per model table. */
   private def modelOf(store: GraftStore, spark: SparkSession, kind: String)(
       snap: Seq[store.Leaf]): AnnModel = {
-    val (centsTable, cbTable) = kind match {
-      case "ivf" => (Some(IvfCentroidsTable), None)
-      case "pq" => (None, Some(PqCodebookTable))
-      case _ => (Some(IvfPqCentroidsTable), Some(IvfPqCodebookTable))
-    }
-    val leaves = (centsTable ++ cbTable)
-      .map(t => t -> snap.filter(_.table == store.physName(t))).toMap
+    val (centsTable, cbTable) = modelTables(kind)
+    val leaves = modelLeaves(store, kind)(snap)
     leaves.foreach { case (t, ls) => require(ls.nonEmpty,
       s"no '$t' leaves in store ${store.root} — run `index build` first") }
     checkFormat(store, kind)
     val dirs = leaves.values.flatten.map(_.dir).toSeq.sorted
-    val key = (java.nio.file.Paths.get(store.root).toAbsolutePath.normalize
-      .toString, kind)
+    val key = modelKey(store, kind)
     Option(models.get(key)).filter(_.dirs == dirs).getOrElse {
       def rows(t: String) = store.readLeaves(spark, t, leaves(t))
       val model = AnnModel(dirs,
@@ -251,6 +267,17 @@ object IndexStore {
       model
     }
   }
+
+  /** Put the `trained` model of a build under the dirs of the model
+    * leaves it committed (`adds`) — the entry [[modelOf]] looks up for
+    * any snapshot holding exactly those leaves — so the first search
+    * after a build collects no model table. The arrays are the ones the
+    * committed rows were rendered from, so they equal a collect of
+    * those rows. */
+  private def seedModel(store: GraftStore, kind: String,
+      trained: AnnModel)(adds: Seq[store.Leaf]): Unit =
+    models.put(modelKey(store, kind), trained.copy(dirs =
+      modelLeaves(store, kind)(adds).values.flatten.map(_.dir).toSeq.sorted))
 
   def tableOf(kind: String): String = kind match {
     case "band" => "band_index"
@@ -393,23 +420,31 @@ object IndexStore {
     * re-train that adapts centroids to distribution drift). Returns
     * leaves added. */
   def build(store: GraftStore, kind: String, input: DataFrame): Long = {
-    val adds =
+    val spark = input.sparkSession
+    // the model kinds also return the model they trained, which seeds
+    // the search cache once the commit makes its leaves live
+    val (adds, trained) =
       if (kind == "ivf") {
         val (cells, cents) =
           SimilarityOps.buildIvfIndex(SimilarityOps.unitVectors(input))
-        store.stageKeyed(tableOf(kind), withAttrs(cells, input),
+        (store.stageKeyed(tableOf(kind), withAttrs(cells, input),
           bucketOf(kind), sortOf(kind)) ++
-          store.stageKeyed(IvfCentroidsTable, cents, lit(0L), Seq(col("cell")))
+          store.stageKeyed(IvfCentroidsTable,
+            SimilarityOps.ivfCentroidRows(spark, cents), lit(0L),
+            Seq(col("cell"))),
+          Some(AnnModel(Nil, cents, Array.empty)))
       } else if (kind == "pq") {
         val units = SimilarityOps.unitVectors(input).localCheckpoint()
-        val (_, cb) = SimilarityOps.buildPqCodebooks(units)
+        val cb = SimilarityOps.buildPqCodebooks(units)
         // one shuffle-free encode projection (codes + unit in place) —
         // the exploded encode paid two exchanges and a join back
-        store.stageKeyed(tableOf(kind),
-          withAttrs(SimilarityOps.pqEncodeWith(units, cb), input),
+        (store.stageKeyed(tableOf(kind),
+          withAttrs(SimilarityOps.pqEncodeWith(units, cb.centroids), input),
           bucketOf(kind), sortOf(kind)) ++
-          store.stageKeyed(PqCodebookTable, cb, lit(0L),
-            Seq(col("sub"), col("code")))
+          store.stageKeyed(PqCodebookTable,
+            SimilarityOps.pqCodebookRows(spark, cb), lit(0L),
+            Seq(col("sub"), col("code"))),
+          Some(AnnModel(Nil, Array.empty, cb.centroids)))
       } else if (kind == "ivfpq") {
         val units = SimilarityOps.unitVectors(input).localCheckpoint()
         // cells flows once into the residual checkpoint — skip its own
@@ -418,29 +453,31 @@ object IndexStore {
         // carry the ORIGINAL unit through the residual frame so the
         // final rows need no join back to `units`; the residual and the
         // codes are literal-closure projections
-        val centsArr = SimilarityOps.collectCents(cents)
         val residuals = cells.select(col("vec_id"), col("cell"),
           col("unit"), graft.functions.Vec
-            .ivf_residual(col("unit"), col("cell"), centsArr).as("runit"))
+            .ivf_residual(col("unit"), col("cell"), cents).as("runit"))
           .localCheckpoint()
-        val (_, cb) = SimilarityOps.buildPqCodebooks(
+        val cb = SimilarityOps.buildPqCodebooks(
           residuals.select(col("vec_id"), col("runit").as("unit")))
         val rows = residuals.select(col("vec_id"),
-          graft.functions.Vec.pq_codes(col("runit"),
-            SimilarityOps.collectCodebook(cb)).as("codes"),
+          graft.functions.Vec.pq_codes(col("runit"), cb.centroids)
+            .as("codes"),
           col("cell"), col("unit"))
-        store.stageKeyed(tableOf(kind), withAttrs(rows, input),
+        (store.stageKeyed(tableOf(kind), withAttrs(rows, input),
           bucketOf(kind), sortOf(kind)) ++
-          store.stageKeyed(IvfPqCentroidsTable, cents, lit(0L),
+          store.stageKeyed(IvfPqCentroidsTable,
+            SimilarityOps.ivfCentroidRows(spark, cents), lit(0L),
             Seq(col("cell"))) ++
-          store.stageKeyed(IvfPqCodebookTable, cb, lit(0L),
-            Seq(col("sub"), col("code")))
+          store.stageKeyed(IvfPqCodebookTable,
+            SimilarityOps.pqCodebookRows(spark, cb), lit(0L),
+            Seq(col("sub"), col("code"))),
+          Some(AnnModel(Nil, cents, cb.centroids)))
       } else
-        store.stageKeyed(tableOf(kind),
+        (store.stageKeyed(tableOf(kind),
           if (kind == "vec" || kind == "sketch")
             withAttrs(rowsFor(kind, input), input)
           else rowsFor(kind, input),
-          bucketOf(kind), sortOf(kind))
+          bucketOf(kind), sortOf(kind)), None)
     store.commit(adds, drops =
       store.leavesOf(tableOf(kind)) ++
         store.leavesOf(IvfCentroidsTable).filter(_ => kind == "ivf") ++
@@ -448,6 +485,7 @@ object IndexStore {
         (store.leavesOf(IvfPqCentroidsTable) ++
           store.leavesOf(IvfPqCodebookTable)).filter(_ => kind == "ivfpq"),
       meta = formatMeta(kind))
+    trained.foreach(seedModel(store, kind, _)(adds))
     adds.size.toLong
   }
 
@@ -800,23 +838,26 @@ object IndexStore {
     if ((kind == "vec" || kind == "sketch") && existing)
       SimilarityOps.requireDim(input, "embedding",
         indexDim(store, input.sparkSession, kind), s"'$kind' index")
+    // the model kinds encode under the model of the snapshot they read,
+    // from the cache a build seeded or a search filled
+    def model = modelOf(store, input.sparkSession, kind)(
+      store.currentLeaves())
     val rows =
       if (kind == "ivf") {
-        val cents = read(store, input.sparkSession, "ivf-centroids")
+        val cents = model.cents
         val units = SimilarityOps.unitVectors(input)
-        SimilarityOps.requireDim(units, "unit",
-          cents.select(size(col("centroid"))).head().getInt(0),
+        SimilarityOps.requireDim(units, "unit", cents(0).length,
           "ivf centroids")
         withAttrs(SimilarityOps.ivfAssign(units, cents)
           .select(col("vec_id"), col("unit"), col("cell")), input)
       } else if (kind == "pq")
         withAttrs(SimilarityOps.pqEncodeWith(SimilarityOps.unitVectors(input),
-          read(store, input.sparkSession, "pq-codebook")), input)
-      else if (kind == "ivfpq")
+          model.codebook), input)
+      else if (kind == "ivfpq") {
+        val m = model
         withAttrs(SimilarityOps.ivfPqEncodeWith(
-          SimilarityOps.unitVectors(input),
-          read(store, input.sparkSession, "ivfpq-centroids"),
-          read(store, input.sparkSession, "ivfpq-codebook")), input)
+          SimilarityOps.unitVectors(input), m.cents, m.codebook), input)
+      }
       else if (kind == "vec" || kind == "sketch")
         withAttrs(rowsFor(kind, input), input)
       else rowsFor(kind, input)
@@ -912,8 +953,9 @@ object IndexStore {
     case "pq" =>
       checkSchemaVersion(store, kind, 2,
         "the quantized-distortion report (codebook columns sq/cq)")
-      SimilarityOps.pqStoredDistortion(read(store, spark, "pq"),
+      val (sq, cq) = SimilarityOps.collectExactPairs(
         read(store, spark, "pq-codebook"))
+      SimilarityOps.pqStoredDistortion(read(store, spark, "pq"), sq, cq)
     case "ivfpq" =>
       checkSchemaVersion(store, kind, 2,
         "the quantized-distortion report (codebook columns sq/cq)")
@@ -922,8 +964,9 @@ object IndexStore {
         .join(broadcast(cents), "cell")
         .select(col("vec_id"), col("codes"), graft.functions.Vec
           .vec_sub(col("unit"), col("centroid")).as("unit"))
-      SimilarityOps.pqStoredDistortion(residualRows,
+      val (sq, cq) = SimilarityOps.collectExactPairs(
         read(store, spark, "ivfpq-codebook"))
+      SimilarityOps.pqStoredDistortion(residualRows, sq, cq)
     case "ivf" =>
       // per-cell quantized residual energy ‖unit − centroid‖² — same
       // grid and shape as the pq reports. Deliberately NOT the
@@ -1484,13 +1527,15 @@ object IndexStore {
       certBp: Long = SimilarityOps.DecontamCertBp): DataFrame = {
     checkSchemaVersion(store, "pq", 2,
       "the semantic-contamination report")
-    val cb = read(store, spark, "pq-codebook")
+    // codebook and codes from one snapshot; the codebook from the cache
+    val snap = store.currentLeaves()
+    val cb = modelOf(store, spark, "pq")(snap).codebook
     val bu = benchEmb.withColumnRenamed("eval_id", "vec_id")
       .withColumn("unit",
         graft.functions.Vec.vec_unit(col("embedding")))
       .filter(col("unit").isNotNull)
       .select(col("vec_id"), col("unit"))
-    val idx = read(store, spark, "pq")
+    val idx = readIn(store, spark, "pq", tableOf("pq"))(snap)
     SimilarityOps.contaminationFromCodes(
       idx.select(col("vec_id"), col("codes")),
       idx.select(col("vec_id"), col("unit")),
@@ -1601,7 +1646,7 @@ object IndexStore {
       val model = modelOf(store, spark, kind)(snap)
       val queries = SimilarityOps.unitVectors(probe)
         .select(col("vec_id").as("query_id"), col("unit").as("q_unit"))
-      val probes = SimilarityOps.ivfProbesArr(queries,
+      val probes = SimilarityOps.ivfProbes(queries,
         model.cents, SimilarityOps.IvfProbes)
       SimilarityOps.ivfSearchWithProbes(flt(readIn(store, spark, kind,
         tableOf(kind), probedCells(probes).contains)(snap)), probes)
@@ -1624,7 +1669,7 @@ object IndexStore {
       val model = modelOf(store, spark, kind)(snap)
       val queries = SimilarityOps.unitVectors(probe)
         .select(col("vec_id").as("query_id"), col("unit").as("q_unit"))
-      val probes = SimilarityOps.ivfProbesArr(queries, model.cents,
+      val probes = SimilarityOps.ivfProbes(queries, model.cents,
         SimilarityOps.IvfProbes)
       val idx = flt(readIn(store, spark, kind, tableOf(kind),
         probedCells(probes).contains)(snap))

@@ -58,78 +58,6 @@ object Diag {
       println(f"[diag] warm $name: $t%.2f s")
       spark.stop(); return
     }
-    // `search <ivf|pq|ivfpq> [plan <out.txt>]`: reproduce the Bench's
-    // at-rest build/search split entries (they are not declared queries,
-    // so `jobs` cannot reach them), build the index OFF the clock, then
-    // profile the warm search with the job listener. With `plan`, also
-    // dump the search frame's formatted plan — the optimization-round
-    // evidence file for the split entries.
-    if (args.headOption.contains("search")) {
-      import graft.operators.SimilarityOps
-      import org.apache.spark.sql.functions.col
-      val kind = args(1)
-      val dir = java.nio.file.Files.createTempDirectory(s"graft-diag-$kind")
-        .toString
-      def searchDf(): org.apache.spark.sql.DataFrame = kind match {
-        case "ivf" =>
-          SimilarityOps.ivfSearch(spark.read.parquet(s"$dir/cells"),
-            spark.read.parquet(s"$dir/cents"), SimilarityOps.IvfProbes)
-        case "pq" =>
-          val units = spark.read.parquet(s"$dir/units")
-          val cb = spark.read.parquet(s"$dir/cb")
-          SimilarityOps.pqSearch(spark.read.parquet(s"$dir/codes"), units,
-            SimilarityOps.pqQueryTables(units
-              .filter(col("vec_id") < SimilarityOps.NumQueries), cb),
-            SimilarityOps.pqKsOf(cb))
-        case "ivfpq" =>
-          graft.store.IndexStore.search(
-            new graft.store.GraftStore(s"$dir/store"), spark, "ivfpq",
-            graft.Tables.t(spark, sfDir, "embeddings")
-              .filter(col("vec_id") < SimilarityOps.NumQueries)
-              .select(col("vec_id"), col("embedding")))
-      }
-      // build off the clock (the Bench split does the same)
-      val units = SimilarityOps.unitVectors(
-        graft.Tables.t(spark, sfDir, "embeddings")).localCheckpoint()
-      kind match {
-        case "ivf" =>
-          val (cells, cents) = SimilarityOps.buildIvfIndex(units)
-          cells.write.mode("overwrite").partitionBy("cell")
-            .parquet(s"$dir/cells")
-          cents.write.mode("overwrite").parquet(s"$dir/cents")
-        case "pq" =>
-          val (_, cb) = SimilarityOps.buildPqCodebooks(units)
-          SimilarityOps.pqEncodeUnits(units, cb).write.mode("overwrite")
-            .parquet(s"$dir/codes")
-          units.write.mode("overwrite").parquet(s"$dir/units")
-          cb.write.mode("overwrite").parquet(s"$dir/cb")
-        case "ivfpq" =>
-          graft.store.IndexStore.build(
-            new graft.store.GraftStore(s"$dir/store"), "ivfpq",
-            graft.Tables.t(spark, sfDir, "embeddings")
-              .select(col("vec_id"), col("embedding")))
-      }
-      def timedSearch(): Double = {
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(false))
-        val t0 = System.nanoTime()
-        searchDf().count()
-        (System.nanoTime() - t0) / 1e9
-      }
-      timedSearch() // warmup
-      val t = profileJobs(spark) { timedSearch() }
-      println(f"[diag] warm ${kind}_search: $t%.2f s")
-      if (args.lift(2).contains("plan")) {
-        val txt = searchDf().queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(args(3)), txt)
-        println(s"[diag] wrote plan ${args(3)}")
-      }
-      graft.store.GraftStore.deleteTree(java.nio.file.Paths.get(dir))
-      spark.stop(); return
-    }
     // args = query names; each runs twice (cold, warm). No args → the
     // historical probe set.
     val queries =

@@ -255,19 +255,10 @@ class EtlSpec extends AnyFunSuite with BeforeAndAfterAll
     val store = newStore()
     val src = new FixtureSource(fx)
     // an empty store answers -1 from the manifest alone, with no job
-    val sc = spark.sparkContext
-    GraftTestBus.drain(sc)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
+    val (_, jobs) = GraftTestBus.jobsOf(spark.sparkContext) {
       assert(Backfill.maxIngestedHeight(spark, store) == -1L)
-      GraftTestBus.drain(sc)
-      assert(jobs.get == 0, s"${jobs.get} jobs for an empty store's cursor")
-    } finally sc.removeSparkListener(listener)
+    }
+    assert(jobs == 0, s"$jobs jobs for an empty store's cursor")
     Backfill.run(spark, src, store, 0, 149)
     assert(store.currentMeta()(store.metaKey("tip")) == "149")
     assert(Backfill.maxIngestedHeight(spark, store) == 149L)

@@ -2,7 +2,6 @@ package graft
 
 import graft.store.{GraftStore, IndexStore}
 import org.apache.spark.GraftTestBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -26,23 +25,6 @@ class IndexStoreSpec extends AnyFunSuite with BeforeAndAfterAll
 
   private def doc(id: Long, tag: String): (Long, String) =
     (id, (0 until 60).map(j => s"$tag${id}w$j").mkString(" "))
-
-  /** `body`'s result and the number of Spark jobs it ran. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    GraftTestBus.drain(sc)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      val r = body
-      GraftTestBus.drain(sc)
-      (r, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
 
   /** (vec_id, embedding) rows around 8 seeded cluster centers. */
   private def clustered(seed: Int, ids: Seq[Long]): DataFrame = {
@@ -424,12 +406,16 @@ class IndexStoreSpec extends AnyFunSuite with BeforeAndAfterAll
     val baseDf = base.toDF("vec_id", "embedding")
     val units = graft.operators.SimilarityOps.unitVectors(baseDf)
       .localCheckpoint()
-    val (subs, cb) = graft.operators.SimilarityOps.buildPqCodebooks(units)
+    val trained = graft.operators.SimilarityOps.buildPqCodebooks(units)
+    val cb = graft.operators.SimilarityOps.pqCodebookRows(spark, trained)
+    val subs = graft.operators.SimilarityOps.pqSubvectors(units,
+      trained.centroids(0)(0).length)
     val inline = graft.operators.SimilarityOps.pqSearch(
       graft.operators.SimilarityOps.pqEncode(subs, cb), units,
       graft.operators.SimilarityOps.pqDistanceTables(
         subs.filter(col("vec_id") <
-          graft.operators.SimilarityOps.NumQueries), cb))
+          graft.operators.SimilarityOps.NumQueries), cb),
+      trained.centroids(0).length)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     // rebuild from base only so the at-rest index matches the inline
     // corpus exactly
@@ -1716,23 +1702,28 @@ class IndexStoreSpec extends AnyFunSuite with BeforeAndAfterAll
     val extra = clustered(33, 5000L until 5040L)
     for ((kind, modelJobs) <- Seq("ivf" -> 1, "pq" -> 1, "ivfpq" -> 2)) {
       val root = tempDir(s"graft-idx-model-$kind")
-      def search(r: String, probe: DataFrame) = jobsOf(annRows(
-        IndexStore.search(new GraftStore(r), spark, kind, probe)))
+      def search(r: String, probe: DataFrame) =
+        GraftTestBus.jobsOf(spark.sparkContext)(annRows(
+          IndexStore.search(new GraftStore(r), spark, kind, probe)))
       IndexStore.build(new GraftStore(root), kind, a)
+      // a cold cache, as in a JVM that did not build the index
+      IndexStore.clearModels()
       val probeA = nearProbes(a, 5)
       val (first, firstJobs) = search(root, probeA)
       val (again, againJobs) = search(root, probeA)
       assert(again == first, kind)
       assert(firstJobs - againJobs == modelJobs,
         s"$kind: first search $firstJobs jobs, repeat $againJobs")
-      // a rebuild writes new model leaves: the next search collects
-      // them and answers like a store this JVM never searched
+      // a rebuild writes new model leaves and seeds the model it
+      // trained under them: the next search collects nothing and
+      // answers like a store this JVM never searched
       IndexStore.build(new GraftStore(root), kind, b)
       val probeB = nearProbes(b, 5)
       val (rebuilt, rebuiltJobs) = search(root, probeB)
-      assert(rebuiltJobs == firstJobs, s"$kind: $rebuiltJobs jobs")
+      assert(rebuiltJobs == againJobs, s"$kind: $rebuiltJobs jobs")
       val fresh = tempDir(s"graft-idx-model-fresh-$kind")
       IndexStore.build(new GraftStore(fresh), kind, b)
+      IndexStore.clearModels()
       assert(rebuilt == search(fresh, probeB)._1, kind)
       // an append encodes under the fixed model: its first search
       // collects no model, and finds the appended vectors
@@ -1744,6 +1735,47 @@ class IndexStoreSpec extends AnyFunSuite with BeforeAndAfterAll
       val top = appended.collect { case Seq(q: Long, n: Long, 1, _) => q -> n }
       assert(top == (5000L until 5005L).map(i => (i + 90000L) -> i).toSet,
         s"$kind: $top")
+    }
+  }
+
+  test("a build seeds the model cache: the first ivfpq search after it " +
+      "runs the repeat-batch jobs and answers like a cleared cache") {
+    val a = clustered(51, 0L until 400L)
+    val root = tempDir("graft-idx-model-seed")
+    val probe = nearProbes(a, 5)
+    def search() = GraftTestBus.jobsOf(spark.sparkContext)(annRows(
+      IndexStore.search(new GraftStore(root), spark, "ivfpq", probe)))
+    IndexStore.build(new GraftStore(root), "ivfpq", a)
+    val (first, firstJobs) = search()
+    val (_, repeatJobs) = search()
+    assert(firstJobs == repeatJobs,
+      s"first search after the build $firstJobs jobs, repeat $repeatJobs")
+    IndexStore.clearModels()
+    val (cleared, clearedJobs) = search()
+    assert(cleared == first)
+    // the cleared cache collects both model tables
+    assert(clearedJobs == repeatJobs + 2, s"cleared: $clearedJobs jobs")
+  }
+
+  test("an ivf, pq and ivfpq append on a warm cache collects no model " +
+      "and commits the rows a cold-cache append commits") {
+    val a = clustered(61, 0L until 400L)
+    val extra = clustered(62, 5000L until 5040L)
+    for ((kind, want) <- Seq("ivf" -> 3, "pq" -> 4, "ivfpq" -> 3)) {
+      val warm = tempDir(s"graft-idx-append-warm-$kind")
+      val cold = tempDir(s"graft-idx-append-cold-$kind")
+      IndexStore.build(new GraftStore(warm), kind, a)
+      IndexStore.search(new GraftStore(warm), spark, kind,
+        nearProbes(a, 5)).collect()
+      val (_, jobs) = GraftTestBus.jobsOf(spark.sparkContext)(
+        IndexStore.append(new GraftStore(warm), kind, extra))
+      assert(jobs == want, s"$kind append: $jobs jobs")
+      IndexStore.build(new GraftStore(cold), kind, a)
+      IndexStore.clearModels()
+      IndexStore.append(new GraftStore(cold), kind, extra)
+      def rows(r: String) = annRows(IndexStore.read(new GraftStore(r),
+        spark, kind))
+      assert(rows(warm) == rows(cold), kind)
     }
   }
 

@@ -2,7 +2,6 @@ package graft
 
 import graft.operators.SimilarityOps
 import org.apache.spark.GraftTestBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -31,7 +30,8 @@ class LiteralModelAssignSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("ivfAssign kernel matches the crossJoin + max(struct) form") {
     val u = units
     val (_, cents) = SimilarityOps.buildIvfIndex(u)
-    val legacy = u.crossJoin(broadcast(cents))
+    val legacy = u.crossJoin(broadcast(SimilarityOps.ivfCentroidRows(spark,
+        cents)))
       .withColumn("dot", graft.functions.Vec
         .vec_dot(col("unit"), col("centroid")))
       .groupBy(col("vec_id"))
@@ -52,7 +52,8 @@ class LiteralModelAssignSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select(col("vec_id").as("query_id"), col("unit").as("q_unit"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id")).orderBy(col("aff").desc, col("cell"))
-    val legacy = queries.crossJoin(broadcast(cents))
+    val legacy = queries.crossJoin(broadcast(SimilarityOps
+        .ivfCentroidRows(spark, cents)))
       .withColumn("aff", graft.functions.Vec
         .vec_dot(col("q_unit"), col("centroid")))
       .withColumn("prnk", row_number().over(w))
@@ -66,12 +67,43 @@ class LiteralModelAssignSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got == legacy)
   }
 
+  /** A trained codebook with the reference forms' inputs: its rendered
+    * table and the subvector explode of `u`. */
+  private def pqModel(u: DataFrame)
+      : (SimilarityOps.PqCodebook, DataFrame, DataFrame) = {
+    val cb = SimilarityOps.buildPqCodebooks(u)
+    (cb, SimilarityOps.pqCodebookRows(spark, cb),
+      SimilarityOps.pqSubvectors(u, cb.centroids(0)(0).length))
+  }
+
+  test("the rendered model tables collect back to the trained arrays, " +
+      "with the at-rest column types") {
+    import org.apache.spark.sql.types._
+    val u = units
+    val (_, cents) = SimilarityOps.buildIvfIndex(u, checkpointCells = false)
+    val centRows = SimilarityOps.ivfCentroidRows(spark, cents)
+    assert(centRows.schema.map(f => f.name -> f.dataType) ==
+      Seq("cell" -> IntegerType, "centroid" -> ArrayType(DoubleType, false)))
+    assert(SimilarityOps.collectCents(centRows).map(_.toSeq).toSeq ==
+      cents.map(_.toSeq).toSeq)
+    val (cb, cbRows, _) = pqModel(u)
+    assert(cbRows.schema.map(f => f.name -> f.dataType) ==
+      Seq("sub" -> IntegerType, "code" -> IntegerType,
+        "centroid" -> ArrayType(DoubleType, false),
+        "sq" -> ArrayType(LongType, false), "cq" -> LongType))
+    def deep[A](a: Array[Array[Array[A]]]) = a.map(_.map(_.toSeq).toSeq).toSeq
+    assert(deep(SimilarityOps.collectCodebook(cbRows)) == deep(cb.centroids))
+    val (sq, cq) = SimilarityOps.collectExactPairs(cbRows)
+    assert(deep(sq) == deep(cb.sq))
+    assert(cq.map(_.toSeq).toSeq == cb.cq.map(_.toSeq).toSeq)
+  }
+
   test("pqEncodeUnits matches the exploded pqEncode form") {
     val u = units
-    val (subs, cb) = SimilarityOps.buildPqCodebooks(u)
-    val legacy = SimilarityOps.pqEncode(subs, cb)
+    val (cb, cbRows, subs) = pqModel(u)
+    val legacy = SimilarityOps.pqEncode(subs, cbRows)
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
-    val got = SimilarityOps.pqEncodeUnits(u, cb)
+    val got = SimilarityOps.pqEncodeUnits(u, cb.centroids)
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
     assert(got == legacy)
     assert(got.size == u.count())
@@ -79,12 +111,12 @@ class LiteralModelAssignSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("pqQueryTables kernel matches the join + collect_list table form") {
     val u = units
-    val (subs, cb) = SimilarityOps.buildPqCodebooks(u)
+    val (cb, cbRows, subs) = pqModel(u)
     val legacy = SimilarityOps
-      .pqDistanceTables(subs.filter(col("vec_id") < 10), cb)
+      .pqDistanceTables(subs.filter(col("vec_id") < 10), cbRows)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val got = SimilarityOps
-      .pqQueryTables(u.filter(col("vec_id") < 10), cb)
+      .pqQueryTables(u.filter(col("vec_id") < 10), cb.centroids)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(got == legacy)
     assert(got.nonEmpty)
@@ -92,42 +124,24 @@ class LiteralModelAssignSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("pq_dist_q_all matches per-sub pq_dist_q over pqAssign") {
     val u = units
-    val (subs, cb) = SimilarityOps.buildPqCodebooks(u)
-    val legacy = SimilarityOps.pqAssign(subs, cb)
-      .join(broadcast(cb.select(col("sub"), col("code"), col("sq"),
+    val (cb, cbRows, subs) = pqModel(u)
+    val legacy = SimilarityOps.pqAssign(subs, cbRows)
+      .join(broadcast(cbRows.select(col("sub"), col("code"), col("sq"),
         col("cq"))), Seq("sub", "code"))
       .withColumn("d2q", graft.functions.Vec
         .pq_dist_q(col("subvec"), col("sq"), col("cq")))
       .groupBy(col("sub"))
       .agg(sum(col("d2q")).as("d"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val cbArr = SimilarityOps.collectCodebook(cb)
-    val (sq, cq) = SimilarityOps.collectExactPairs(cb)
     val got = u
       .select(posexplode(graft.functions.Vec.pq_dist_q_all(col("unit"),
-        graft.functions.Vec.pq_codes(col("unit"), cbArr), sq, cq))
+        graft.functions.Vec.pq_codes(col("unit"), cb.centroids), cb.sq,
+        cb.cq))
         .as(Seq("sub", "d2q")))
       .groupBy(col("sub"))
       .agg(sum(col("d2q")).as("d"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     assert(got == legacy)
-  }
-
-  /** `body`'s result and the number of Spark jobs it ran. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    GraftTestBus.drain(sc)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      val r = body
-      GraftTestBus.drain(sc)
-      (r, jobs.get)
-    } finally sc.removeSparkListener(listener)
   }
 
   /** Every populated slot of a fold as (group, pos) -> (sum, count). */
@@ -140,10 +154,9 @@ class LiteralModelAssignSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("ivf Lloyd fold's sums and counts equal the exploded sum form") {
     val u = units
-    val (_, cents) = SimilarityOps.buildIvfIndex(u)
-    val centsArr = SimilarityOps.collectCents(cents)
+    val (_, centsArr) = SimilarityOps.buildIvfIndex(u)
     val dim = centsArr(0).length
-    val legacy = SimilarityOps.ivfAssign(u, cents)
+    val legacy = SimilarityOps.ivfAssign(u, centsArr)
       .select(col("cell"), posexplode(col("unit")))
       .groupBy(col("cell"), col("pos"))
       .agg(sum(floor(col("col") * lit(SimilarityOps.IvfQuant) + lit(0.5))
@@ -160,8 +173,7 @@ class LiteralModelAssignSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("pq Lloyd fold's sums and counts equal the exploded " +
       "(sub, code, pos) sum form") {
     val u = units
-    val (_, cb) = SimilarityOps.buildPqCodebooks(u)
-    val cbArr = SimilarityOps.collectCodebook(cb)
+    val cbArr = SimilarityOps.buildPqCodebooks(u).centroids
     val (m, ks, dsub) = (cbArr.length, cbArr(0).length, cbArr(0)(0).length)
     val legacy = u
       .select(graft.functions.Vec.pq_codes(col("unit"), cbArr).as("codes"),
@@ -204,11 +216,12 @@ class LiteralModelAssignSpec extends AnyFunSuite with BeforeAndAfterAll {
       "conf untouched") {
     val u = units
     val conf0 = spark.conf.getAll
-    val (_, ivfJobs) = jobsOf(SimilarityOps.buildIvfIndex(u,
-      checkpointCells = false))
+    val (_, ivfJobs) = GraftTestBus.jobsOf(spark.sparkContext)(
+      SimilarityOps.buildIvfIndex(u, checkpointCells = false))
     assert(ivfJobs == 1 + SimilarityOps.IvfIters)
     assert(spark.conf.getAll == conf0)
-    val (_, pqJobs) = jobsOf(SimilarityOps.buildPqCodebooks(u))
+    val (_, pqJobs) = GraftTestBus.jobsOf(spark.sparkContext)(
+      SimilarityOps.buildPqCodebooks(u))
     assert(pqJobs == 1 + SimilarityOps.PqIters)
     assert(spark.conf.getAll == conf0)
   }

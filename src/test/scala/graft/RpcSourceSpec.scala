@@ -916,31 +916,20 @@ class RpcSourceSpec extends AnyFunSuite with BeforeAndAfterAll
     failures.set(0)
     val store = new GraftStore(tempDir("graft-rpc-plan-shape"))
     Backfill.run(spark, src, store, 0, 29)
-    val sc = spark.sparkContext
-    GraftTestBus.drain(sc)
-    val jobs = new AtomicInteger(0)
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val jobListener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
     val planListener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
         plans.add(qe.executedPlan.toString)
       override def onFailure(f: String, qe: QueryExecution,
           e: Exception): Unit = plans.add(qe.executedPlan.toString)
     }
-    sc.addSparkListener(jobListener)
     spark.listenerManager.register(planListener)
-    try {
-      // height 30 carries a selector hit, so the receipt lookup runs
-      assert(Backfill.run(spark, src, store, 30, 30) == 1L)
-      GraftTestBus.drain(sc)
-    } finally {
-      sc.removeSparkListener(jobListener)
-      spark.listenerManager.unregister(planListener)
-    }
-    assert(jobs.get() == 3, s"jobs of a one-height backfill: ${jobs.get()}")
+    val (_, jobs) =
+      try GraftTestBus.jobsOf(spark.sparkContext) {
+        // height 30 carries a selector hit, so the receipt lookup runs
+        assert(Backfill.run(spark, src, store, 30, 30) == 1L)
+      } finally spark.listenerManager.unregister(planListener)
+    assert(jobs == 3, s"jobs of a one-height backfill: $jobs")
     assert(plans.size == 3, s"executed plans: ${plans.size}")
     plans.asScala.foreach { p =>
       assert(!p.contains("Exchange"), s"plan with an exchange:\n$p")

@@ -4,7 +4,6 @@ import java.nio.file.{Files, Paths}
 
 import graft.store.{GraftStore, IndexStore}
 import org.apache.spark.GraftTestBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
@@ -32,23 +31,6 @@ class StoreSpec extends AnyFunSuite with BeforeAndAfterAll
       df: DataFrame): Unit =
     store.commit(store.stageKeyed(table, df, pmod(col("k"), lit(4L)),
       Seq(col("k"))))
-
-  /** `body`'s result and the number of Spark jobs it ran. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    GraftTestBus.drain(sc)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      val r = body
-      GraftTestBus.drain(sc)
-      (r, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
 
   /** A store holding a backfilled 40-block fixture chain. */
   private def chainStore(name: String): GraftStore = {
@@ -93,16 +75,22 @@ class StoreSpec extends AnyFunSuite with BeforeAndAfterAll
       "point lookup runs exactly one; a schema-less manifest infers") {
     val store = chainStore("graft-store-schema-jobs")
     val (df, built) =
-      jobsOf(store.readHeightRange(spark, "blocks", 17L, 17L))
+      GraftTestBus.jobsOf(spark.sparkContext) {
+        store.readHeightRange(spark, "blocks", 17L, 17L)
+      }
     assert(built == 0, s"building the frame ran $built job(s)")
     val (rows, ran) =
-      jobsOf(graft.chain.ChainOps.blockByNumber(df, 17L).collect())
+      GraftTestBus.jobsOf(spark.sparkContext) {
+        graft.chain.ChainOps.blockByNumber(df, 17L).collect()
+      }
     assert(ran == 1, s"the lookup ran $ran job(s)")
     assert(rows.map(_.getAs[Long]("number")).toSeq == Seq(17L))
     // the same read over a legacy manifest pays the inference job
     stripSchemaLines(store)
     val (_, legacyBuilt) =
-      jobsOf(store.readHeightRange(spark, "blocks", 17L, 17L))
+      GraftTestBus.jobsOf(spark.sparkContext) {
+        store.readHeightRange(spark, "blocks", 17L, 17L)
+      }
     assert(legacyBuilt >= 1, "a schema-less read ran no inference job")
   }
 
@@ -131,7 +119,8 @@ class StoreSpec extends AnyFunSuite with BeforeAndAfterAll
         .filter(col("number") === 39L)))
     assert(schemaLines().map(_.split("\t")(1)) == store.Tables.sorted)
     store.Tables.foreach { t =>
-      val (df, built) = jobsOf(legacy.read(spark, t))
+      val (df, built) =
+        GraftTestBus.jobsOf(spark.sparkContext)(legacy.read(spark, t))
       assert(built == 0, s"$t: building the frame ran $built job(s)")
       assert(df.schema == schemas(t), s"$t schema")
       assert(df.schema == inferred(legacy, t).schema, s"$t inferred")

@@ -807,9 +807,9 @@ class TrainingOpsSpec extends AnyFunSuite with BeforeAndAfterAll
         acc :+ (id -> raw)
       }
       val df = units.toDF("vec_id", "unit").repartition(1 + rnd.nextInt(7))
-      val (cellsDf, centsDf) = SimilarityOps.buildIvfIndex(df, k = k)
-      val gotCents = centsDf.collect()
-        .map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap
+      val (cellsDf, centsArr) = SimilarityOps.buildIvfIndex(df, k = k)
+      val gotCents = centsArr.zipWithIndex
+        .map { case (c, cell) => cell -> c.toSeq }.toMap
       val gotCells = cellsDf.select("vec_id", "cell").collect()
         .map(r => r.getLong(0) -> r.getInt(1)).toMap
 
@@ -905,9 +905,9 @@ class TrainingOpsSpec extends AnyFunSuite with BeforeAndAfterAll
         acc :+ (id -> raw)
       }
       val df = units.toDF("vec_id", "unit").repartition(1 + rnd.nextInt(7))
-      val (_, cbDf) = SimilarityOps.buildPqCodebooks(df, m = m, ks = ks)
-      val got = cbDf.collect()
-        .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2)).toMap
+      val cb = SimilarityOps.buildPqCodebooks(df, m = m, ks = ks).centroids
+      val got = (for (sub <- cb.indices; code <- cb(sub).indices)
+        yield (sub, code) -> cb(sub)(code).toSeq).toMap
 
       // sequential reference — same init, same quantized sums, BigInt
       // accumulation, same (d2, code) tie-break; no Spark involved
@@ -983,7 +983,9 @@ class TrainingOpsSpec extends AnyFunSuite with BeforeAndAfterAll
         .sortBy(n => (-vecs(q).zip(vecs(n)).map { case (a, b) => a * b }.sum, n))
         .take(SimilarityOps.K).map(q -> _)
     }.toSet
-    val (subs, codebook) = SimilarityOps.buildPqCodebooks(units)
+    val cb = SimilarityOps.buildPqCodebooks(units)
+    val codebook = SimilarityOps.pqCodebookRows(spark, cb)
+    val subs = SimilarityOps.pqSubvectors(units, cb.centroids(0)(0).length)
     val codes = SimilarityOps.pqEncode(subs, codebook).localCheckpoint()
     // codes are well-formed: M per vector, every value a valid code id
     val shapes = codes.select(
@@ -995,7 +997,8 @@ class TrainingOpsSpec extends AnyFunSuite with BeforeAndAfterAll
     assert(shapes.getInt(2) >= 0 && shapes.getInt(3) < SimilarityOps.PqCodes)
     val tables = SimilarityOps.pqDistanceTables(
       subs.filter(col("vec_id") < 10), codebook)
-    val approx = SimilarityOps.pqSearch(codes, units, tables).collect()
+    val approx = SimilarityOps.pqSearch(codes, units, tables,
+      cb.centroids(0).length).collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id")))
       .toSet
     val recall = (approx & brute).size.toDouble / brute.size
@@ -1040,7 +1043,7 @@ class TrainingOpsSpec extends AnyFunSuite with BeforeAndAfterAll
       pmod(graft.functions.Vec.portable_hash64(
         concat(lit("pqsample:"), col("vec_id").cast("string"))), lit(4)) === 0)
     info(s"training on ${sample.count()} of ${units.count()} vectors")
-    val (_, cb) = SimilarityOps.buildPqCodebooks(sample)
+    val cb = SimilarityOps.buildPqCodebooks(sample).centroids
     val codes = SimilarityOps.pqEncodeWith(units, cb)
       .select(col("vec_id"), col("codes"), col("unit"))
     val vecs = points.map { case (id, v) =>
@@ -1052,8 +1055,7 @@ class TrainingOpsSpec extends AnyFunSuite with BeforeAndAfterAll
         .sortBy(n => (-vecs(q).zip(vecs(n)).map { case (a, b) => a * b }.sum, n))
         .take(SimilarityOps.K).map(q -> _)
     }.toSet
-    val approx = SimilarityOps.pqProbe(codes,
-      SimilarityOps.collectCodebook(cb),
+    val approx = SimilarityOps.pqProbe(codes, cb,
       points.filter(_._1 < 10L).toDF("vec_id", "embedding")).collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id")))
       .toSet
@@ -1103,8 +1105,10 @@ class TrainingOpsSpec extends AnyFunSuite with BeforeAndAfterAll
     val units = SimilarityOps.unitVectors(
       Tables.t(spark, d001, "embeddings")).localCheckpoint()
     def distortion(iters: Int): Long = {
-      val (subs, cb) = SimilarityOps.buildPqCodebooks(units, iters = iters)
-      SimilarityOps.pqAssign(subs, cb)
+      val cb = SimilarityOps.buildPqCodebooks(units, iters = iters)
+      SimilarityOps.pqAssign(
+        SimilarityOps.pqSubvectors(units, cb.centroids(0)(0).length),
+        SimilarityOps.pqCodebookRows(spark, cb))
         .agg(sum(floor(col("d2") * lit(SimilarityOps.PqQuant) + lit(0.5))
           .cast("long"))).head().getLong(0)
     }
